@@ -5,11 +5,17 @@ SparkListener, a CountDownLatch and a 10-second sleep (SURVEY §3.2, with a
 documented race). PySpark has no native listener API, so — per SURVEY §3.4's
 recommendation — this module uses the race-free substitute:
 
-1. tag each query with a unique job group before execution
-   (``sc.setJobGroup``), and
-2. after execution, poll the Spark UI REST API
-   (``/api/v1/applications/{app}/jobs`` + ``/stages/{id}``) to collect the
-   stages of exactly that job group.
+1. tag each execution with its own job group before it runs
+   (``sc.setJobGroup``; ``ibx:{uuid}:{query_name}``, so a re-run of a query
+   name, from this collector or another one on the session, never shares
+   a group with an earlier run), and
+2. after execution, look up that group's jobs and their stage ids in the
+   SparkContext's status store (``sc.statusTracker()``) and fetch exactly
+   those stages from the Spark UI REST API (``/stages/{id}?details=false``:
+   the stage totals without the per-task list).
+
+The cost of one collect is one REST call per stage of the execution; it
+does not grow with the jobs the session has run before.
 
 Aggregation mirrors IcebergBenchmark.java:269-355: Σ executorRunTime,
 executorCpuTime, jvmGcTime over the query's stages, plus per-stage entries,
@@ -24,6 +30,7 @@ from __future__ import annotations
 
 import json
 import urllib.request
+import uuid
 from typing import Any
 
 from pyspark.sql import SparkSession
@@ -35,7 +42,7 @@ def _get_json(url: str) -> Any:
 
 
 class StageMetricsCollector:
-    """Collects per-job-group stage metrics from the Spark REST API.
+    """Collects per-execution stage metrics from the Spark REST API.
 
     Usage::
 
@@ -43,6 +50,8 @@ class StageMetricsCollector:
         collector.begin("q01")          # A10 substitute: job-group tag
         ... run the query ...
         metrics = collector.collect("q01")   # A12/A13: stage join + agg
+
+    ``collect(name)`` reports the stages of the latest ``begin(name)`` only.
     """
 
     def __init__(self, spark: SparkSession):
@@ -50,21 +59,39 @@ class StageMetricsCollector:
         self.sc = spark.sparkContext
         self._ui = self.sc.uiWebUrl  # None when UI disabled
         self._app_id = self.sc.applicationId
+        self._groups: dict[str, str] = {}  # query name -> its latest job group
 
     @property
     def available(self) -> bool:
         return self._ui is not None
 
     def begin(self, query_name: str) -> None:
-        """Tag subsequent jobs with the query's group id (race-free
+        """Tag subsequent jobs with a job group of their own (race-free
         replacement for the listener's execution-id latch)."""
-        self.sc.setJobGroup(f"ibx:{query_name}", f"query {query_name}", False)
+        group = f"ibx:{uuid.uuid4().hex}:{query_name}"
+        self._groups[query_name] = group
+        self.sc.setJobGroup(group, f"query {query_name}", False)
 
     def end(self) -> None:
         self.sc.setJobGroup("", "", False)
 
+    def _stage_ids(self, group: str) -> list[int]:
+        """Stage ids of the group's jobs, from the SparkContext's status store.
+        The store is fed by the listener bus, so wait for the bus to drain
+        first: the last job's end event may still be queued
+        (``LiveListenerBus.waitUntilEmpty`` is ``private[spark]`` in Scala,
+        public to py4j)."""
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = self.sc.statusTracker()
+        ids: set[int] = set()
+        for job_id in tracker.getJobIdsForGroup(group):
+            info = tracker.getJobInfo(job_id)
+            if info is not None:
+                ids.update(info.stageIds)
+        return sorted(ids)
+
     def collect(self, query_name: str) -> dict[str, Any]:
-        """Aggregate stage metrics for the query's job group
+        """Aggregate stage metrics for the query's latest execution
         (IcebergBenchmark.java:269-355 field-for-field where stock Spark
         exposes the quantity)."""
         empty = {
@@ -76,24 +103,15 @@ class StageMetricsCollector:
             "stages": [],
             "metrics_source": "rest" if self.available else "unavailable",
         }
-        if not self.available:
+        group = self._groups.get(query_name)
+        if not self.available or group is None:
             return empty
-        group = f"ibx:{query_name}"
         try:
-            jobs = _get_json(f"{self._ui}/api/v1/applications/{self._app_id}/jobs")
-            stage_ids = sorted(
-                {
-                    sid
-                    for j in jobs
-                    if j.get("jobGroup") == group
-                    for sid in j.get("stageIds", [])
-                }
-            )
-            out = dict(empty)
-            for sid in stage_ids:
+            out = dict(empty, stages=[])
+            for sid in self._stage_ids(group):
                 try:
                     attempts = _get_json(
-                        f"{self._ui}/api/v1/applications/{self._app_id}/stages/{sid}"
+                        f"{self._ui}/api/v1/applications/{self._app_id}/stages/{sid}?details=false"
                     )
                 except Exception:
                     continue  # skipped stages 404

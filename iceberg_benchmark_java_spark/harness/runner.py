@@ -8,7 +8,7 @@ map → attach stage metrics → flush CSV.
 
 Differences by design (documented, cleaner semantics):
 - metrics correlate via job groups + REST (metrics.py), not a static-state
-  listener with a 10 s sleep — per-query, race-free;
+  listener with a 10 s sleep — one job group per execution, race-free;
 - ``use_database`` is optional: with the parquet-view catalog there is no
   USE statement to issue.
 """

@@ -105,6 +105,14 @@ def build_session(cfg: SparkConfig | None = None) -> SparkSession:
         # writer pool (observed: all 32 local tasks parked in
         # ChecksumCheckpointFileManager.awaitResult).
         .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+        # Spark's generated-code cache (LRU, default 100 entries) is smaller
+        # than one pass's working set, so every re-run of a query compiled
+        # its classes again with Janino and the JIT. One pass of the
+        # verbatim corpus needs 1,905 distinct classes for TPC-DS and 294
+        # for TPC-H (artifacts/codegen_reuse.json, tools/codegen_reuse.py);
+        # 4096 is the next power of two above both together. Static conf:
+        # read once per JVM, at the first codegen.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # NOTE (r12 audit): spark.sql.parquet.aggregatePushdown was set
         # here in r11 with a footer-statistics justification, but the
         # conf only applies to DSv2 parquet scans and parquet sits in the

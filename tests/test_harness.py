@@ -113,6 +113,54 @@ def test_metrics_collection_smoke(spark):
         assert isinstance(m["stages"], list)
 
 
+def test_metrics_json_lists_only_its_own_execution(spark):
+    """Each run of one query name reports its own stages, not those of
+    earlier runs in the session."""
+    import json
+
+    from iceberg_benchmark_java_spark.catalog import register_views
+
+    register_views(spark, SF_SMOKE)
+    sql = (
+        "SELECT l_returnflag, count(*) FROM lineitem "
+        "JOIN orders ON l_orderkey = o_orderkey GROUP BY 1"
+    )
+    shapes = []
+    for i in range(3):
+        res = BenchmarkRunner(spark, run_id=f"own{i}").run_sql("TPC-H", "q_rerun", sql)
+        m = json.loads(res.metrics_json)
+        assert m["metrics_source"] == "rest"
+        shapes.append((len(m["stages"]), sum(s["num_tasks"] for s in m["stages"])))
+    assert shapes[0][0] > 0
+    assert shapes == [shapes[0]] * 3
+
+
+def test_rerun_reuses_compiled_plan(spark):
+    """A query run again after more than 100 other generated classes (the
+    size of Spark's default codegen cache) compiles nothing."""
+    from iceberg_benchmark_java_spark.catalog import register_views
+
+    register_views(spark, SF_SMOKE)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    r = BenchmarkRunner(spark, run_id="reuse", collect_metrics=False)
+
+    def run(i: int) -> None:
+        sql = (
+            f"SELECT l_returnflag, sum(l_quantity * {i}), count(*) FROM lineitem "
+            f"WHERE l_orderkey % {i + 2} = 0 GROUP BY 1"
+        )
+        assert r.run_sql("TPC-H", f"mix{i}", sql).status == "SUCCESS"
+
+    run(0)
+    n0 = compiles.getCount()
+    for i in range(1, 120):
+        run(i)
+    n1 = compiles.getCount()
+    assert n1 - n0 > 100  # the mix alone overflows the default cache
+    run(0)
+    assert compiles.getCount() == n1
+
+
 def test_results_dataframe_round_trip(spark):
     r = BenchmarkRunner(spark, run_id="t4", collect_metrics=False)
     r.run_sql("TPC-H", "q", "SELECT 1")
