@@ -1,12 +1,16 @@
 """Benchmark entry: headline queries at $SPARK_GRAFT_SF_DIR on local[N].
 
-Prints ONE JSON line:
+Prints ONE JSON line (``stdout_line``):
   {"metric": "...", "value": <total_sec>, "unit": "sec",
-   "queries": {"<name>": sec, ...}, "sf": <sf>}
+   "queries": {"<name>": sec, ...}, "n_queries": N, "probe": <sec>,
+   "n_failed": N, "full": "BENCH_LOCAL_latest.json", "sf": <sf>}
+and writes the full payload, with each entry's best-run metric totals and
+``build_ms``, to BENCH_LOCAL_latest.json.
 
-Timing method mirrors the reference (IcebergBenchmark.java:179-190):
-wall-clock around execute-and-discard via the noop sink — result
-materialization excluded.
+Every timed run goes through ``BenchmarkRunner.run``, the reference's
+timing method (IcebergBenchmark.java:179-190): wall-clock around build
+plus execute-and-discard via the noop sink — result materialization
+excluded.
 """
 
 from __future__ import annotations
@@ -14,10 +18,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from iceberg_benchmark_java_spark.harness import BenchmarkRunner, QueryResult
 from iceberg_benchmark_java_spark.queries import all_queries
 from iceberg_benchmark_java_spark.session import build_session, local_test_config
 
@@ -110,23 +114,32 @@ HEADLINE = [
     "corpus_tpch_q21",
 ]
 
-# Headline entries whose code or semantics changed THIS round (new rows
-# plus operators whose registered output moved). Everything else is the
-# code-stable subset: its round-over-round total is comparable without
-# prose, which is what ``code_stable_total_sec`` reports (the r8 lesson:
-# a ×1.3 probe shift made single-total deltas unreadable). The set is
-# TAGGED with the round it describes and the tag is emitted in the
-# artifact — compare_bench warns when the tag doesn't match the newer
-# artifact's round, so a stale set can't silently shape the code-stable
-# line (the r9 ADVICE fix).
-CODE_TOUCHED_ROUND = "r12opt2"
-# r12 optimization round 2 (see OPTIMIZATION_r12.md): the session-scoped
-# load_table memo sits on EVERY non-corpus entry's build path (it is what
-# makes the adaptive-dial probes hit across builds), so the whole
-# tpch/agg/win/sub/set/pipe surface is code-touched this round; only the
-# verbatim corpus_* entries (fixture registration path, untouched) remain
-# code-stable. The probe (corpus_tpch_q01) is code-stable this round.
-CODE_TOUCHED_THIS_ROUND = {q for q in HEADLINE if not q.startswith("corpus_")}
+PROBE = "corpus_tpch_q01"
+METRIC = "headline_total_wall_sec_noop_sink"
+
+
+def stdout_line(timings: dict[str, float], probe: float, n_failed: int, sf) -> str:
+    """The driver contract: ONE compact JSON line. It carries EVERY
+    per-query best (2-decimal): the old top-10-slowest dict made the
+    driver's round-over-round PERF comparison fabricate
+    "dropped_from_bench" statuses whenever an entry got fast enough to
+    rotate out of the top 10. Entries are ordered slowest-first so any
+    tail truncation costs the cheapest rows, never the headline ones."""
+    by_time = {k: round(v, 2) for k, v in sorted(timings.items(), key=lambda kv: -kv[1])}
+    return json.dumps(
+        {
+            "metric": METRIC,
+            "value": round(sum(timings.values()), 3),
+            "unit": "sec",
+            "queries": by_time,
+            "n_queries": len(timings),
+            "probe": probe,
+            "n_failed": n_failed,
+            "full": "BENCH_LOCAL_latest.json",
+            "sf": sf,
+        },
+        separators=(",", ":"),
+    )
 
 
 def main() -> None:
@@ -139,128 +152,93 @@ def main() -> None:
     os.dup2(2, 1)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     spark = build_session(local_test_config("ibx-bench"))
     queries = all_queries()
+    # Every timed run goes through the harness loop: timed noop write,
+    # A9 error capture (truncate to 2000 chars, CONTINUE — one bad query
+    # must never zero the whole run), per-execution stage metrics.
+    runner = BenchmarkRunner(spark, run_id="bench", schema_size=f"sf{sf}")
+
+    def run(name: str) -> QueryResult:
+        return runner.run("bench", name, lambda: queries[name](spark, sf_dir))
+
+    def probe() -> float:
+        res = run(PROBE)
+        if res.status != "SUCCESS":
+            raise RuntimeError(f"probe {PROBE} failed: {res.error_message}")
+        return res.execution_time_sec
 
     # warm the JVM + parquet footers with one tiny action
-    queries["tpch_q06_revenue_forecast"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    run("tpch_q06_revenue_forecast")
 
     # Host-noise probe: ONE fixed, code-stable query (corpus_tpch_q01 —
     # byte-identical SQL since round 2). Round-over-round, a move in the
     # probe with no code change = environment shift, so compare_bench can
-    # auto-classify host-noise vs real regression. One UNTIMED warm-up
-    # first, then best-of-2 per bracket (the scaling tool's pattern): the
-    # r10 shape — 3 timed pre + 3 timed post with a cold first run — spent
-    # up to 2 min of a ~3 min bench re-measuring its own JIT warm-up; the
-    # warmed best-of-2 is the same witness at a third of the cost.
-    def _timed(name: str) -> float:
-        t0 = time.time()
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
-
-    _timed("corpus_tpch_q01")  # untimed probe warm-up (codegen, footers)
-    probe_runs = [_timed("corpus_tpch_q01") for _ in range(2)]  # pre-bracket
+    # auto-classify host-noise vs real regression. One untimed warm-up
+    # (codegen, footers), then best-of-2 per bracket.
+    probe()
+    probe_runs = [probe() for _ in range(2)]  # pre-bracket
 
     # Best-of-2 per query: shared-host CPU variance swings single runs by
-    # ±30%; the min of two runs is the standard stable estimator. ALL raw
-    # runs are emitted (``runs``) so the best-of selection stays auditable.
-    # Per-query error isolation mirrors the reference harness's A9 contract
-    # (IcebergBenchmark.java:184-188): capture, truncate to 2000 chars,
-    # CONTINUE — at 100 TB something always fails, and one bad query must
-    # never zero the whole run. The try sits INSIDE the per-run loop: a
-    # transient failure on run 2 must not discard run 1's valid timing.
+    # ±30%; the min of two runs is the standard stable estimator. ALL
+    # successful runs are emitted (``runs``) so the best-of selection stays
+    # auditable; a failure on run 2 keeps run 1's valid timing.
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
+    metrics: dict[str, dict] = {}
     failed: dict[str, str] = {}
     for name in HEADLINE:
-        ok_runs: list[float] = []
-        err: str | None = None
-        for _ in range(2):
-            try:
-                ok_runs.append(_timed(name))
-            except Exception as exc:  # noqa: BLE001 — A9: record and continue
-                err = f"{type(exc).__name__}: {exc}"[:2000]
-        if ok_runs:
-            timings[name] = min(ok_runs)
-            runs[name] = ok_runs
-        else:
-            failed[name] = err or "unknown"
+        results = [run(name) for _ in range(2)]
+        ok = [r for r in results if r.status == "SUCCESS"]
+        if not ok:
+            failed[name] = results[-1].error_message or "unknown"
+            continue
+        best = min(ok, key=lambda r: r.execution_time_sec)
+        timings[name] = best.execution_time_sec
+        runs[name] = [r.execution_time_sec for r in ok]
+        # the best run's metric totals and build_ms; not its per-stage list
+        metrics[name] = {k: v for k, v in json.loads(best.metrics_json).items() if k != "stages"}
     # Post-bracket probe: the same fixed code-stable query re-timed AFTER
     # the headline loop. A pre/post divergence means the host shifted
-    # MID-SESSION (the r9 q72 lesson: a ×2.8 one-shot riser on an
-    # untouched verbatim query) — compare_bench classifies it mechanically
-    # from the two brackets instead of a human inferring it.
-    probe_runs_after = [_timed("corpus_tpch_q01") for _ in range(2)]
-    total = round(sum(timings.values()), 3)
-    code_stable_total = round(
-        sum(t for n, t in timings.items() if n not in CODE_TOUCHED_THIS_ROUND),
-        3,
-    )
+    # MID-SESSION — compare_bench classifies it mechanically from the two
+    # brackets.
+    probe_runs_after = [probe() for _ in range(2)]
     # corpus_* entries run against the committed fixtures/ warehouse at its
     # own fixed scale, not $SPARK_GRAFT_SF_DIR — label honestly so numbers
     # stay scale-comparable round-over-round.
     from iceberg_benchmark_java_spark.corpus_ref import corpus_fixture_scale
 
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    scales = {
-        name: (corpus_fixture_scale() if name.startswith("corpus_") else sf_val)
-        for name in HEADLINE
-    }
     full = {
-        "metric": "headline_total_wall_sec_noop_sink",
-        "value": total,
+        "metric": METRIC,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        "code_stable_total_sec": code_stable_total,
-        "code_touched_round": CODE_TOUCHED_ROUND,
-        "code_touched_this_round": sorted(CODE_TOUCHED_THIS_ROUND),
         "queries": timings,
         "runs": runs,
+        "metrics": metrics,
         "probe": {
-            "query": "corpus_tpch_q01",
+            "query": PROBE,
             "runs": probe_runs,
             "best": min(probe_runs),
             "runs_after": probe_runs_after,
             "best_after": min(probe_runs_after),
         },
         "failed": failed,
-        "query_sf": scales,
+        "query_sf": {
+            name: (corpus_fixture_scale() if name.startswith("corpus_") else sf_val)
+            for name in HEADLINE
+        },
         "sf": sf_val,
     }
     # Full payload goes to a committed sidecar file; stdout carries ONE
-    # compact line. Since round 12 the compact line carries EVERY
-    # per-query best (2-decimal): the old top-10-slowest dict made the
-    # driver's round-over-round PERF comparison fabricate
-    # "dropped_from_bench" statuses whenever an entry got fast enough to
-    # rotate out of the top 10 (r11: five phantom drops). 53 entries at
-    # 2 decimals is ~1.9 kB — within the driver's stdout tail. Entries
-    # are ordered slowest-first so any tail truncation costs the
-    # cheapest rows, never the headline ones.
+    # compact line.
     local_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL_latest.json"
     )
     with open(local_path, "w") as fh:
         json.dump(full, fh, indent=1)
         fh.write("\n")
-    by_time = dict(
-        (k, round(v, 2))
-        for k, v in sorted(timings.items(), key=lambda kv: -kv[1])
-    )
-    line = json.dumps(
-        {
-            "metric": "headline_total_wall_sec_noop_sink",
-            "value": total,
-            "unit": "sec",
-            "queries": by_time,
-            "n_queries": len(timings),
-            "probe": min(probe_runs),
-            "n_failed": len(failed),
-            "full": "BENCH_LOCAL_latest.json",
-            "sf": sf_val,
-        },
-        separators=(",", ":"),
-    )
+    line = stdout_line(timings, min(probe_runs), len(failed), sf_val)
     os.write(real_stdout, line.encode() + b"\n")
     os.close(real_stdout)
     spark.stop()

@@ -355,8 +355,3 @@ def bootstrap_iceberg(
         spark.sql(f"CREATE TABLE {fq} USING iceberg{part} AS SELECT * FROM _src_{name}")
         created.append(fq)
     return created
-
-
-def use_database(spark: SparkSession, catalog: str, database: str) -> None:
-    """Database selection, harness operator A5 (IcebergBenchmark.java:153)."""
-    spark.sql(f"USE {catalog}.{database}")

@@ -10,18 +10,23 @@ Differences by design (documented, cleaner semantics):
 - metrics correlate via job groups + REST (metrics.py), not a static-state
   listener with a 10 s sleep — one job group per execution, race-free;
 - ``use_database`` is optional: with the parquet-view catalog there is no
-  USE statement to issue.
+  USE statement to issue;
+- ``run`` times any DataFrame builder, not only SQL text (``run_sql`` is
+  ``run`` over ``spark.sql``), so registry entries and the tools time
+  through this same loop; the builder's share is ``build_ms``.
 """
 
 from __future__ import annotations
 
+import json
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from pathlib import Path
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .discovery import discover_queries, load_query
 from .metrics import StageMetricsCollector
@@ -69,24 +74,31 @@ class BenchmarkRunner:
 
     # --- A8/A9: timed noop execution with error capture ----------------------
     def run_sql(self, benchmark_type: str, query_name: str, sql_text: str) -> QueryResult:
-        import json
+        return self.run(benchmark_type, query_name, lambda: self.spark.sql(sql_text))
 
+    def run(
+        self, benchmark_type: str, query_name: str, build: Callable[[], DataFrame]
+    ) -> QueryResult:
+        """Time ``build()`` plus its noop write; the builder's share of the
+        time is ``build_ms`` in ``metrics_json``."""
         if self.collect_metrics:
             self._collector.begin(query_name)
         start_ms = int(time.time() * 1000)
+        built_ms = None
         status, error = "SUCCESS", None
         try:
+            df = build()
+            built_ms = int(time.time() * 1000)
             # noop sink: full execution, rows discarded
             # (IcebergBenchmark.java:179-190)
-            self.spark.sql(sql_text).write.format("noop").mode("overwrite").save()
+            df.write.format("noop").mode("overwrite").save()
         except Exception as e:  # A9: record, truncate, continue
             status, error = "FAILED", str(e)[:ERROR_TRUNCATE]
         end_ms = int(time.time() * 1000)
-        metrics_json, scan_ms = None, None
+        metrics, scan_ms = {"build_ms": (built_ms or end_ms) - start_ms}, None
         if self.collect_metrics:
             self._collector.end()
-            metrics = self._collector.collect(query_name)
-            metrics_json = json.dumps(metrics)
+            metrics.update(self._collector.collect(query_name))
             # best-effort stand-in for the reference's patched-jar
             # custom_scan_time accumulable (SURVEY §4): not derivable from
             # stock Spark, recorded only if a collector ever provides it.
@@ -106,7 +118,7 @@ class BenchmarkRunner:
             error_message=error,
             analytics_core_enabled=self.analytics_core_enabled,
             timestamp=datetime.now(timezone.utc).replace(tzinfo=None),
-            metrics_json=metrics_json,
+            metrics_json=json.dumps(metrics),
             client_type=self.client_type,
             total_batch_scan_time_ms=scan_ms,
         )

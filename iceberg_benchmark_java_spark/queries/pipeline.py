@@ -69,12 +69,16 @@ _DUCK_SHINGLES_ADAPTIVE = f"""
   )
 """
 
-# 60-bit hex→int parse (matches Spark's conv(substr(md5(w),1,15),16,10)).
-_DUCK_HEX15 = (
-    "list_sum(list_transform(generate_series(1,15), i -> "
-    "(strpos('0123456789abcdef', substr(md5(w), i, 1)) - 1)::BIGINT"
-    " * (1::BIGINT << (4 * (15 - i)))))"
-)
+
+def _duck_h60(expr: str) -> str:
+    """DuckDB mirror of Spark's conv(substr(md5(expr),1,15),16,10): the
+    60-bit value of md5(expr)'s first 15 hex digits. The lambda variable is
+    ``hx`` so that it cannot capture an outer column named ``i``."""
+    return (
+        "list_sum(list_transform(generate_series(1,15), hx -> "
+        f"(strpos('0123456789abcdef', substr(md5({expr}), hx, 1)) - 1)::BIGINT"
+        " * (1::BIGINT << (4 * (15 - hx)))))"
+    )
 
 
 # --- exact digest + corpus summary -------------------------------------------
@@ -195,7 +199,7 @@ def minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH words AS (
       SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS cnt,
-             {_DUCK_HEX15} AS wh
+             {_duck_h60("w")} AS wh
       FROM (SELECT doc_id, UNNEST({_DUCK_TOKENS}) AS w FROM documents) t
       GROUP BY doc_id, w
     ),
@@ -470,7 +474,7 @@ def dedup_decision_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH words AS (
       SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS cnt,
-             {_DUCK_HEX15} AS wh
+             {_duck_h60("w")} AS wh
       FROM (SELECT doc_id, UNNEST({_DUCK_TOKENS}) AS w FROM documents) t
       GROUP BY doc_id, w
     ),
@@ -1648,14 +1652,8 @@ def sequence_packing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- sharded sequence packing (the bounded-group 100 TB shape) ---------------
 
-# DuckDB mirror of operators/text.shard_of: md5(doc_id) first-15-hex → 60-bit
-# int → mod n. Same fold as Spark's conv(substr(md5(..),1,15),16,10) % n.
+# DuckDB mirror of operators/text.shard_of: 60-bit md5(doc_id) fold mod n.
 _N_PACK_SHARDS = 4
-_DUCK_SHARD = (
-    "CAST(list_sum(list_transform(generate_series(1,15), i -> "
-    "(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1)::BIGINT"
-    f" * (1::BIGINT << (4 * (15 - i))))) % {_N_PACK_SHARDS} AS INTEGER)"
-)
 
 
 @query(
@@ -1664,8 +1662,8 @@ _DUCK_SHARD = (
     WITH RECURSIVE d AS (
       SELECT lang, doc_id,
              CAST(len({_DUCK_TOKENS}) AS INTEGER) AS n_tokens,
-             {_DUCK_SHARD} AS shard,
-             ROW_NUMBER() OVER (PARTITION BY lang, {_DUCK_SHARD}
+             CAST({_duck_h60("CAST(doc_id AS VARCHAR)")} % {_N_PACK_SHARDS} AS INTEGER) AS shard,
+             ROW_NUMBER() OVER (PARTITION BY lang, {_duck_h60("CAST(doc_id AS VARCHAR)")} % {_N_PACK_SHARDS}
                                 ORDER BY doc_id) AS rn
       FROM documents
     ),
@@ -2203,10 +2201,7 @@ def mixture_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM c, t),
     hashed AS (
       SELECT d.lang, d.doc_id,
-             list_sum(list_transform(generate_series(1,15), i ->
-               (strpos('0123456789abcdef',
-                       substr(md5(CAST(d.doc_id AS VARCHAR)), i, 1)) - 1)::BIGINT
-               * (1::BIGINT << (4 * (15 - i))))) % 1000000 AS h
+             {_duck_h60("CAST(d.doc_id AS VARCHAR)")} % 1000000 AS h
       FROM documents d),
     kept AS (
       SELECT h.lang, CAST(COUNT(*) AS BIGINT) AS n_kept
@@ -3778,19 +3773,12 @@ def bigram_logprob_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- export shard manifest ---------------------------------------------------
-_DUCK_DOC_HEX15 = (
-    "list_sum(list_transform(generate_series(1,15), i -> "
-    "(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1)::BIGINT"
-    " * (1::BIGINT << (4 * (15 - i)))))"
-)
-
-
 @query(
     "pipe_shard_manifest",
     oracle=f"""
     WITH h AS (
       SELECT doc_id, text, n_chars,
-             {_DUCK_DOC_HEX15} AS h60
+             {_duck_h60("CAST(doc_id AS VARCHAR)")} AS h60
       FROM documents)
     SELECT CAST(h60 % 16 AS INTEGER) AS shard,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -4147,15 +4135,6 @@ def sorted_neighborhood_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- merkle-style snapshot diff (anti-entropy bucket digests) ----------------
-def _duck_h60(expr: str) -> str:
-    """DuckDB mirror of conv(substr(md5(expr),1,15),16,10): 60-bit value."""
-    return (
-        "list_sum(list_transform(generate_series(1,15), hx -> "
-        f"(strpos('0123456789abcdef', substr(md5({expr}), hx, 1)) - 1)::BIGINT"
-        " * (1::BIGINT << (4 * (15 - hx)))))"
-    )
-
-
 @query(
     "pipe_snapshot_diff",
     oracle=f"""
@@ -4383,13 +4362,10 @@ def pii_redact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- deterministic train/val/test split --------------------------------------
 @query(
     "pipe_train_val_test_split",
-    oracle="""
+    oracle=f"""
     WITH h AS (
       SELECT doc_id, lang,
-             list_sum(list_transform(generate_series(1,15), i ->
-               (strpos('0123456789abcdef',
-                       substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1)::BIGINT
-               * (1::BIGINT << (4 * (15 - i))))) % 100 AS slot
+             {_duck_h60("CAST(doc_id AS VARCHAR)")} % 100 AS slot
       FROM documents),
     s AS (SELECT doc_id, lang,
                  CASE WHEN slot < 80 THEN 'train'
@@ -4431,12 +4407,6 @@ def train_val_test_split_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- KMV distinct sketch (deterministic approx-count-distinct) ---------------
 
-# DuckDB mirror of the 60-bit user hash: md5(user_id) first-15-hex -> int.
-_DUCK_UHEX = (
-    "list_sum(list_transform(generate_series(1,15), i -> "
-    "(strpos('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), i, 1)) - 1)::BIGINT"
-    " * (1::BIGINT << (4 * (15 - i)))))"
-)
 _KMV_K = 12
 _KMV_SHARDS = 16
 _TWO60 = float(1 << 60)
@@ -4446,7 +4416,7 @@ _TWO60 = float(1 << 60)
     "pipe_kmv_distinct",
     oracle=f"""
     WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
-    h AS (SELECT event_type, {_DUCK_UHEX} AS h60 FROM du),
+    h AS (SELECT event_type, {_duck_h60("CAST(user_id AS VARCHAR)")} AS h60 FROM du),
     r AS (SELECT event_type, h60,
                  ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h60) AS rnk
           FROM h),
@@ -4568,20 +4538,12 @@ def normalized_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PSAMPLE_K = 20
 _PSAMPLE_SHARDS = 64
 
-# DuckDB mirror of the doc-id 60-bit hash (same fold as _DUCK_SHARD).
-_DUCK_DHEX = (
-    "list_sum(list_transform(generate_series(1,15), i -> "
-    "(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1)::BIGINT"
-    " * (1::BIGINT << (4 * (15 - i)))))"
-)
-
-
 @query(
     "pipe_priority_sample",
     oracle=f"""
     WITH h AS (
       SELECT lang, doc_id, n_chars,
-             ROUND(ln(({_DUCK_DHEX} + 1.0) / ({_TWO60!r} + 1.0))
+             ROUND(ln(({_duck_h60("CAST(doc_id AS VARCHAR)")} + 1.0) / ({_TWO60!r} + 1.0))
                    / n_chars, 9) AS score
       FROM documents),
     r AS (SELECT lang, doc_id, n_chars, score,
@@ -4696,16 +4658,6 @@ def doc_entropy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- CDC merge / upsert (batch MERGE INTO semantics) -------------------------
 
-def _duck_hex15_of(expr: str) -> str:
-    """60-bit hex->int fold of an arbitrary DuckDB hex-digest expression
-    (the md5(w) fold of _DUCK_HEX15, parameterized)."""
-    return (
-        "list_sum(list_transform(generate_series(1,15), i -> "
-        f"(strpos('0123456789abcdef', substr({expr}, i, 1)) - 1)::BIGINT"
-        " * (1::BIGINT << (4 * (15 - i)))))"
-    )
-
-
 @query(
     "pipe_merge_upsert",
     oracle=f"""
@@ -4726,12 +4678,12 @@ def _duck_hex15_of(expr: str) -> str:
       FROM documents t FULL OUTER JOIN chg c ON t.doc_id = c.doc_id),
     h AS (
       SELECT op,
-             CASE WHEN op = 'delete' THEN md5(CAST(doc_id AS VARCHAR))
-                  ELSE md5(CAST(doc_id AS VARCHAR) || ':' || final_text)
-             END AS dg
+             CASE WHEN op = 'delete' THEN CAST(doc_id AS VARCHAR)
+                  ELSE CAST(doc_id AS VARCHAR) || ':' || final_text
+             END AS dk
       FROM m)
     SELECT op, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM({_duck_hex15_of('dg')} % 1000000007) AS BIGINT)
+           CAST(SUM({_duck_h60('dk')} % 1000000007) AS BIGINT)
              AS checksum
     FROM h GROUP BY op
     """,
@@ -6236,7 +6188,7 @@ _HLL_ALPHA = 0.709  # alpha_64
     "pipe_hll_distinct",
     oracle=f"""
     WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
-    h AS (SELECT event_type, {_DUCK_UHEX} AS h60 FROM du),
+    h AS (SELECT event_type, {_duck_h60("CAST(user_id AS VARCHAR)")} AS h60 FROM du),
     reg AS (
       SELECT event_type, (h60 & 63) AS idx,
              MAX(CASE WHEN (h60 >> 6) = 0 THEN 55
@@ -6549,12 +6501,6 @@ def bpe_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CMS_D = 4  # hash rows
 _CMS_W = 256  # counters per row
 
-# DuckDB mirror of the row-salted 60-bit hash: md5(r || term) first-15-hex.
-_DUCK_CMS_H = (
-    "list_sum(list_transform(generate_series(1,15), i -> "
-    "(strpos('0123456789abcdef', substr(md5(CAST(r AS VARCHAR) || term), i, 1)) - 1)::BIGINT"
-    " * (1::BIGINT << (4 * (15 - i)))))"
-)
 
 
 @query(
@@ -6565,13 +6511,13 @@ _DUCK_CMS_H = (
               FROM w GROUP BY term),
     rows_ AS (SELECT unnest(generate_series(0, {_CMS_D - 1})) AS r),
     cells AS (
-      SELECT r, ({_DUCK_CMS_H}) % {_CMS_W} AS col,
+      SELECT r, ({_duck_h60("CAST(r AS VARCHAR) || term")}) % {_CMS_W} AS col,
              CAST(COUNT(*) AS BIGINT) AS cnt
       FROM w, rows_ GROUP BY 1, 2),
     probes AS (SELECT term, exact_cnt FROM exact
                ORDER BY exact_cnt DESC, term LIMIT 10),
     pc AS (
-      SELECT term, exact_cnt, r, ({_DUCK_CMS_H}) % {_CMS_W} AS col
+      SELECT term, exact_cnt, r, ({_duck_h60("CAST(r AS VARCHAR) || term")}) % {_CMS_W} AS col
       FROM (SELECT p.term, p.exact_cnt, rows_.r
             FROM probes p CROSS JOIN rows_)),
     est AS (
@@ -7141,7 +7087,7 @@ def referential_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipe_shard_balance",
     oracle=f"""
     WITH h AS (
-      SELECT doc_id, text, {_DUCK_DOC_HEX15} AS h60 FROM documents),
+      SELECT doc_id, text, {_duck_h60("CAST(doc_id AS VARCHAR)")} AS h60 FROM documents),
     s AS (
       SELECT CAST(h60 % 16 AS INTEGER) AS shard,
              CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -7257,16 +7203,6 @@ def events_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- DSIR importance weights (hashed-bigram importance resampling) ------------
-def _duck_hex15(expr: str) -> str:
-    """60-bit hex→int parse of md5(expr), matching Spark's
-    conv(substr(md5(expr),1,15),16,10)."""
-    return (
-        "list_sum(list_transform(generate_series(1,15), hx -> "
-        f"(strpos('0123456789abcdef', substr(md5({expr}), hx, 1)) - 1)::BIGINT"
-        " * (1::BIGINT << (4 * (15 - hx)))))"
-    )
-
-
 _DSIR_BUCKETS = 512
 
 
@@ -7276,7 +7212,7 @@ _DSIR_BUCKETS = 512
     WITH w AS (SELECT doc_id, lang, {_DUCK_TOKENS} AS toks FROM documents),
     b AS (
       SELECT doc_id, lang,
-             CAST({_duck_hex15("toks[i] || ' ' || toks[i+1]")}
+             CAST({_duck_h60("toks[i] || ' ' || toks[i+1]")}
                   % {_DSIR_BUCKETS} AS INTEGER) AS bucket
       FROM w, UNNEST(generate_series(1, len(toks) - 1)) AS t(i)
       WHERE len(toks) >= 2),
@@ -7584,7 +7520,7 @@ def mixture_epochs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH d AS (
       SELECT doc_id,
              LEAST(CAST(len({_DUCK_TOKENS}) // 32 AS BIGINT), 15) AS bin,
-             CAST({_DUCK_DOC_HEX15} % 2 AS INTEGER) AS half
+             CAST({_duck_h60("CAST(doc_id AS VARCHAR)")} % 2 AS INTEGER) AS half
       FROM documents),
     o AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_old FROM d WHERE half = 0 GROUP BY bin),
     n AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_new FROM d WHERE half = 1 GROUP BY bin),
@@ -7657,13 +7593,10 @@ def quality_psi_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- right-to-be-forgotten erasure audit ---------------------------------------
 @query(
     "pipe_user_erasure_audit",
-    oracle="""
+    oracle=f"""
     WITH del AS (
       SELECT DISTINCT user_id FROM events
-      WHERE list_sum(list_transform(generate_series(1,15), hx ->
-              (strpos('0123456789abcdef',
-                      substr(md5(CAST(user_id AS VARCHAR)), hx, 1)) - 1)::BIGINT
-              * (1::BIGINT << (4 * (15 - hx))))) % 97 = 0)
+      WHERE {_duck_h60("CAST(user_id AS VARCHAR)")} % 97 = 0)
     SELECT e.event_type,
            CAST(COUNT(*) AS BIGINT) AS n_total,
            CAST(SUM(CASE WHEN d.user_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -8405,7 +8338,7 @@ def join_size_estimate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- per-source quota sampler ----------------------------------------------------
 @query(
     "pipe_source_quota_sample",
-    oracle="""
+    oracle=f"""
     WITH q AS (
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
              GREATEST(CAST(FLOOR(0.3 * COUNT(*)) AS BIGINT), 5) AS quota
@@ -8421,11 +8354,8 @@ def join_size_estimate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE r.rn <= q.quota)
     SELECT q.source, q.n_docs, q.quota,
            CAST(COUNT(s.doc_id) AS BIGINT) AS n_sampled,
-           CAST(SUM(list_sum(list_transform(generate_series(1,15), hx ->
-             (strpos('0123456789abcdef',
-                     substr(md5(CAST(s.doc_id AS VARCHAR)), hx, 1)) - 1)::BIGINT
-             * (1::BIGINT << (4 * (15 - hx)))))
-             % 1000000007) AS BIGINT) AS sample_checksum
+           CAST(SUM({_duck_h60("CAST(s.doc_id AS VARCHAR)")} % 1000000007) AS BIGINT)
+             AS sample_checksum
     FROM q JOIN s ON s.source = q.source
     GROUP BY q.source, q.n_docs, q.quota
     """,
@@ -9027,7 +8957,7 @@ def embedding_norm_outliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipe_mergeable_stats",
     oracle=f"""
     WITH t AS (
-      SELECT {_DUCK_DOC_HEX15} % 8 AS shard,
+      SELECT {_duck_h60("CAST(doc_id AS VARCHAR)")} % 8 AS shard,
              CAST(len({_DUCK_TOKENS}) AS BIGINT) AS n_tok
       FROM documents),
     per AS (

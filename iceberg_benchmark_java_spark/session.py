@@ -57,20 +57,6 @@ def local_test_config(app_name: str = "iceberg-benchmark-pyspark-test") -> Spark
     )
 
 
-def cluster_config(app_name: str = "iceberg-benchmark-pyspark") -> SparkConfig:
-    """Cluster profile mirroring the reference's submit configuration
-    (spark_submit_with_analytics_core.sh:22-27): 2000 static shuffle
-    partitions sized for 29x5-core executors at SF1000, dynamic allocation
-    off. master=None → taken from spark-submit; executor sizing lives in
-    the submit command, not the session."""
-    return SparkConfig(
-        app_name=app_name,
-        master=None,
-        shuffle_partitions=2000,
-        extra_confs={"spark.dynamicAllocation.enabled": "false"},
-    )
-
-
 def iceberg_available() -> bool:
     """True when an iceberg-spark-runtime jar is importable by the JVM."""
     jars_dir = os.path.join(os.path.dirname(__import__("pyspark").__file__), "jars")

@@ -74,8 +74,20 @@ def test_runner_noop_execution_and_error_capture(spark):
     bad = r.run_sql("TPC-H", "q_bad", "SELECT * FROM missing_table_xyz")
     assert bad.status == "FAILED"
     assert bad.error_message and len(bad.error_message) <= ERROR_TRUNCATE
-    # run continues after failure (A9) and buffers both (A11)
-    assert [x.query_name for x in r.results] == ["q_ok", "q_bad"]
+
+    # a DataFrame builder runs through the same timed path
+    built = r.run("PIPELINE", "q_built", lambda: spark.table("lineitem").groupBy("l_returnflag").count())
+    assert built.status == "SUCCESS" and built.error_message is None
+
+    def raising_builder():
+        raise ValueError("builder broke: " + "x" * 5000)
+
+    broken = r.run("PIPELINE", "q_broken", raising_builder)
+    assert broken.status == "FAILED"
+    assert broken.error_message.startswith("builder broke")
+    assert len(broken.error_message) <= ERROR_TRUNCATE
+    # run continues after failure (A9) and buffers every run (A11)
+    assert [x.query_name for x in r.results] == ["q_ok", "q_bad", "q_built", "q_broken"]
 
 
 def test_runner_suite_and_csv_flush(spark, tmp_path):
@@ -109,6 +121,7 @@ def test_metrics_collection_smoke(spark):
 
     m = json.loads(res.metrics_json)
     assert "total_executor_run_time_ms" in m
+    assert 0 <= m["build_ms"] <= res.execution_time_sec * 1000
     if m["metrics_source"] == "rest":  # UI available → stages attached
         assert isinstance(m["stages"], list)
 
@@ -159,6 +172,25 @@ def test_rerun_reuses_compiled_plan(spark):
     assert n1 - n0 > 100  # the mix alone overflows the default cache
     run(0)
     assert compiles.getCount() == n1
+
+
+def test_bench_stdout_line_contract():
+    """bench.py's stdout line: one line of JSON with exactly the driver's
+    nine keys, its value the sum of the best runs."""
+    import json
+
+    import bench
+
+    timings = {"a": 1.5, "b": 0.25, "c": 2.125}
+    line = bench.stdout_line(timings, probe=0.5, n_failed=1, sf=0.01)
+    assert "\n" not in line
+    out = json.loads(line)
+    assert set(out) == {
+        "metric", "value", "unit", "queries", "n_queries", "probe", "n_failed", "full", "sf",
+    }
+    assert out["value"] == sum(timings.values())
+    assert list(out["queries"]) == ["c", "a", "b"]  # slowest first
+    assert (out["n_queries"], out["probe"], out["n_failed"], out["sf"]) == (3, 0.5, 1, 0.01)
 
 
 def test_results_dataframe_round_trip(spark):

@@ -3,8 +3,8 @@
 Generates an N× fixtures warehouse (fact counts ×N via fixtures.py's scale
 knobs, dims fixed), then runs the suite's plan-quality sample (TPC-DS:
 tests/test_plans.py::CORPUS_PLAN_SAMPLE; TPC-H: the five marquee shapes)
-at both scales through the identical spark.sql path and records per-query
-wall-time ratios plus the plan-quality asserts at the larger scale.
+at both scales through BenchmarkRunner (spark.sql, noop sink) and records
+per-query wall-time ratios plus the plan-quality asserts at the larger scale.
 
 The point: turn "these plans would hold at 100×" from prose into a
 measurement. A healthy plan scales sub-linearly-to-linearly in fact volume
@@ -21,11 +21,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from iceberg_benchmark_java_spark import corpus_ref, fixtures
+from iceberg_benchmark_java_spark.harness import BenchmarkRunner
 from iceberg_benchmark_java_spark.session import build_session, local_test_config
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -54,23 +54,23 @@ def run_query(spark, suite: str, name: str):
     return spark.sql(sql)
 
 
+def timed_run(runner: BenchmarkRunner, name: str, build) -> float:
+    """Seconds of one harness run of ``build``; a failed run raises."""
+    res = runner.run("scaling", name, build)
+    if res.status != "SUCCESS":
+        raise RuntimeError(f"{name}: {res.error_message}")
+    return res.execution_time_sec
+
+
 def time_sample(spark, suite: str, warehouse_dir: str) -> dict[str, float]:
     register_views_from(spark, suite, warehouse_dir)
-    # warm: parquet footers + codegen for this warehouse
-    run_query(spark, suite, SAMPLES[suite][0]).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    out: dict[str, float] = {}
-    for name in SAMPLES[suite]:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            run_query(spark, suite, name).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.time() - t0)
-        out[name] = round(best, 3)
-    return out
+    runner = BenchmarkRunner(spark, run_id="scaling", collect_metrics=False)
+
+    def timed(name: str) -> float:
+        return timed_run(runner, name, lambda: run_query(spark, suite, name))
+
+    timed(SAMPLES[suite][0])  # warm: parquet footers + codegen for this warehouse
+    return {name: min(timed(name) for _ in range(2)) for name in SAMPLES[suite]}
 
 
 def plan_asserts(spark, suite: str, warehouse_dir: str) -> dict[str, str]:

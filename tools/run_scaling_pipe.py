@@ -24,7 +24,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 import numpy as np
 import pandas as pd
@@ -33,7 +32,9 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from iceberg_benchmark_java_spark.harness import BenchmarkRunner
 from iceberg_benchmark_java_spark.session import build_session, local_test_config
+from tools.run_scaling import timed_run
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BASE_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -291,25 +292,22 @@ def gen_pipe_warehouse(out_dir: str, scale: int) -> None:
 SPREAD_FLAG_RATIO = 1.5
 
 
-def _timed_runs(fn) -> tuple[list[float], float]:
-    """Run fn twice, return (all wall times, min). BOTH runs land in the
-    artifact — a transient-noise cell is then visible in place (one bad
-    run next to a sane one) instead of needing an addendum file, the
-    round-7 lesson (the x13.97 cell corrected post-hoc in
-    SCALING_r07_*_addendum.json). If the two runs disagree by more than
-    SPREAD_FLAG_RATIO the cell re-measures ONCE in place: a transient
-    stall self-heals (min over 3 runs, all recorded), a genuinely bimodal
-    cell stays visible and is flagged by :func:`cell_spread_flags`."""
-    runs = []
-    for _ in range(2):
-        t0 = time.time()
-        fn()
-        runs.append(round(time.time() - t0, 3))
+def _timed_runs(spark, sf_dir: str, label: str, build) -> tuple[float, list[float]]:
+    """Time ``build`` twice through the harness runner; return (min, all
+    wall times). BOTH runs land in the artifact — a transient-noise cell
+    is then visible in place (one bad run next to a sane one) instead of
+    needing an addendum file, the round-7 lesson (the x13.97 cell
+    corrected post-hoc in SCALING_r07_*_addendum.json). If the two runs
+    disagree by more than SPREAD_FLAG_RATIO the cell re-measures ONCE in
+    place: a transient stall self-heals (min over 3 runs, all recorded),
+    a genuinely bimodal cell stays visible and is flagged by
+    :func:`cell_spread_flags`. A failed run raises."""
+    runner = BenchmarkRunner(spark, run_id="scaling-pipe", collect_metrics=False)
+    runs = [timed_run(runner, label, build) for _ in range(2)]
     if min(runs) > 0 and max(runs) / min(runs) > SPREAD_FLAG_RATIO:
-        t0 = time.time()
-        fn()
-        runs.append(round(time.time() - t0, 3))
-    return runs, min(runs)
+        runs.append(timed_run(runner, label, build))
+    print(f"[scaling-pipe] {sf_dir}: {label} = {min(runs)}s (runs {runs})", file=sys.stderr)
+    return min(runs), runs
 
 
 def cell_spread_flags(result: dict) -> list[str]:
@@ -368,10 +366,11 @@ def time_probe(spark, queries, sf_dir: str) -> dict:
     # shuffle spin-up) reads ~5-10x slow — which would make every warm
     # cell probe "disagree" and fire the flags inverted (observed in the
     # first r10 run: 1x probe 11.1s cold vs 1.5-2.5s warm cells).
-    queries[PROBE_QUERY](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    best, runs = time_one(spark, queries, sf_dir, PROBE_QUERY)
+    def build():
+        return queries[PROBE_QUERY](spark, sf_dir)
+
+    timed_run(BenchmarkRunner(spark, run_id="scaling-pipe", collect_metrics=False), PROBE_QUERY, build)
+    best, runs = _timed_runs(spark, sf_dir, PROBE_QUERY, build)
     return {"query": PROBE_QUERY, "t_sec": best, "runs": runs}
 
 
@@ -410,17 +409,7 @@ def probe_flags(result: dict) -> list[str]:
 def time_one(
     spark, queries, sf_dir: str, name: str
 ) -> tuple[float, list[float]]:
-    runs, best = _timed_runs(
-        lambda: queries[name](spark, sf_dir)
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    print(
-        f"[scaling-pipe] {sf_dir}: {name} = {best}s (runs {runs})",
-        file=sys.stderr,
-    )
-    return best, runs
+    return _timed_runs(spark, sf_dir, name, lambda: queries[name](spark, sf_dir))
 
 
 def time_headliners(
@@ -443,20 +432,10 @@ def time_banded_scaled_bits(
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
         "vec_id", "embedding"
     )
-    runs, best = _timed_runs(
-        lambda: cosine_near_dup_pairs_banded(
-            emb, threshold=0.25, n_bits=n_bits, n_bands=4
-        )
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
+    return _timed_runs(
+        spark, sf_dir, f"banded_scaled_bits(n_bits={n_bits})",
+        lambda: cosine_near_dup_pairs_banded(emb, threshold=0.25, n_bits=n_bits, n_bands=4),
     )
-    print(
-        f"[scaling-pipe] {sf_dir}: banded_scaled_bits(n_bits={n_bits}) = "
-        f"{best}s (runs {runs})",
-        file=sys.stderr,
-    )
-    return best, runs
 
 
 def time_pq_adc(spark, sf_dir: str) -> tuple[float, list[float]]:
@@ -474,17 +453,10 @@ def time_pq_adc(spark, sf_dir: str) -> tuple[float, list[float]]:
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
     )
-    runs, best = _timed_runs(
-        lambda: pq_adc_topk(emb, q, k=5)
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
+    return _timed_runs(
+        spark, sf_dir, "pq_adc_topk",
+        lambda: pq_adc_topk(emb, q, k=5),
     )
-    print(
-        f"[scaling-pipe] {sf_dir}: pq_adc_topk = {best}s (runs {runs})",
-        file=sys.stderr,
-    )
-    return best, runs
 
 
 def time_semantic_dedup(
@@ -504,18 +476,10 @@ def time_semantic_dedup(
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
         "vec_id", "embedding"
     )
-    runs, best = _timed_runs(
-        lambda: semantic_dedup(emb, n_centroids=n_centroids, threshold=0.2)
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
+    return _timed_runs(
+        spark, sf_dir, f"semantic_dedup(k={n_centroids})",
+        lambda: semantic_dedup(emb, n_centroids=n_centroids, threshold=0.2),
     )
-    print(
-        f"[scaling-pipe] {sf_dir}: semantic_dedup(k={n_centroids}) = {best}s "
-        f"(runs {runs})",
-        file=sys.stderr,
-    )
-    return best, runs
 
 
 def time_prefix_filter(
@@ -533,18 +497,10 @@ def time_prefix_filter(
     d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
         "doc_id", "text"
     )
-    runs, best = _timed_runs(
-        lambda: prefix_filter_pairs(d, n=n)
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
+    return _timed_runs(
+        spark, sf_dir, f"prefix_filter_pairs(n={n})",
+        lambda: prefix_filter_pairs(d, n=n),
     )
-    print(
-        f"[scaling-pipe] {sf_dir}: prefix_filter_pairs(n={n}) = {best}s "
-        f"(runs {runs})",
-        file=sys.stderr,
-    )
-    return best, runs
 
 
 def plan_asserts(spark, queries, sf_dir: str) -> dict[str, str]:
