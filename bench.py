@@ -123,8 +123,10 @@ def stdout_line(timings: dict[str, float], probe: float, n_failed: int, sf) -> s
     per-query best (2-decimal): the old top-10-slowest dict made the
     driver's round-over-round PERF comparison fabricate
     "dropped_from_bench" statuses whenever an entry got fast enough to
-    rotate out of the top 10. Entries are ordered slowest-first so any
-    tail truncation costs the cheapest rows, never the headline ones."""
+    rotate out of the top 10. Entries are ordered slowest-first for the
+    reader. The line is not truncation-safe: cutting its tail breaks the
+    JSON, so the whole line must stay within the 2,000-byte budget
+    (pinned by tests/test_harness.py::test_bench_stdout_line_contract)."""
     by_time = {k: round(v, 2) for k, v in sorted(timings.items(), key=lambda kv: -kv[1])}
     return json.dumps(
         {

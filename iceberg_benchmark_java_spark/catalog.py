@@ -56,19 +56,12 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 # Session-scoped memo of loaded base tables, keyed on (absolute path,
-# mtime). Every query build used to call spark.read.parquet afresh, which
-# (a) pays a py4j round-trip + footer-based schema inference per build and
-# (b) defeats the per-DataFrame-object memos downstream (corpus_count /
-# embedding_dim / corpus_shingle_dial are WeakKeyDictionaries on the DF:
-# a fresh DF per build re-ran each adaptive-dial probe as an eager job on
-# EVERY query construction). Returning the same immutable DataFrame for
-# the same on-disk table makes those dial memos hit across builds — the
-# r11 registration-memo pattern applied to table loads (VERDICT r11 Next
-# #4). This caches the lazy PLAN REFERENCE only: every action still scans
-# the parquet; no rows, counts or results are stored here (the dial memos
-# it enables cache plan-build-time *parameters*, the same values any
-# repeated build derives). The mtime key drops the entry when the fixture
-# is rewritten; weak session keys drop the map with the session.
+# mtime). Every spark.read.parquet launches a schema-inference job
+# (~50 ms at sf0.01), and a pass over the registry loads the same few
+# base tables hundreds of times. This caches the lazy PLAN REFERENCE
+# only: every action still scans the parquet; no rows, counts or
+# results are stored here. The mtime key drops the entry when the
+# fixture is rewritten; weak session keys drop the map with the session.
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )

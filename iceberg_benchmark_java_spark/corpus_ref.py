@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import os
 import re
-import weakref
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
@@ -297,57 +296,30 @@ def _fixture_df(
     return spark.read.parquet(flat)
 
 
-# Suites whose DEFAULT-path registration already completed, per live
-# session (weak keys — entries die with the session). Registration runs
-# on EVERY corpus query build; without the memo each build paid one
-# catalog listing per table (24 × ~0.5 s of listTables py4j round-trips
-# — measured 18 s per corpus query at sf0.01, pure driver overhead).
-# force/partitioned_dir calls bypass the memo and re-register, exactly
-# as before.
-_REGISTERED: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def register_fixture_views(
+    spark: SparkSession, suite: str, partitioned_dir: str | None = None
+) -> None:
+    """(Re-)register every fixture table of ``suite`` as its
+    suite-prefixed temp view; ``partitioned_dir`` switches the facts to
+    the date-partitioned layout."""
+    _register(spark, suite, SUITES[suite][2], partitioned_dir)
+
+
+def _register(
     spark: SparkSession,
     suite: str,
+    tables: list[str],
     partitioned_dir: str | None = None,
-    force: bool = False,
 ) -> None:
     from . import fixtures
 
-    done = _REGISTERED.setdefault(spark, set())
-    if suite in done and not (partitioned_dir or force):
-        # Self-heal (ADVICE r11): the memo says this suite is registered,
-        # but a dropTempView/cleanup between calls would leave downstream
-        # SQL failing on missing views with no signal. Validate ONE
-        # sentinel view per trust of the memo (a single ~ms py4j call vs
-        # the ~0.5 s/table listing the memo removed); fall through to
-        # re-registration when it is gone.
-        sentinel = _view(suite, SUITES[suite][2][0])
-        if spark.catalog.tableExists(sentinel):
-            return
-        done.discard(suite)
     fixtures.generate_all()  # no-op when the committed parquet is present
     if partitioned_dir:
         write_partitioned_fixture_warehouse(spark, suite, partitioned_dir)
-    _, fdir, tables = SUITES[suite]
-    # ONE catalog listing for the whole suite (listTables costs ~0.5 s per
-    # call on a py4j session; per-table calls made registration O(tables)
-    # catalog scans).
-    existing = (
-        set()
-        if partitioned_dir or force
-        else {v.name for v in spark.catalog.listTables()}
-    )
     for t in tables:
-        if partitioned_dir or force or _view(suite, t) not in existing:
-            _fixture_df(spark, suite, t, partitioned_dir).createOrReplaceTempView(
-                _view(suite, t)
-            )
-    if not (partitioned_dir or force):
-        done.add(suite)
+        _fixture_df(spark, suite, t, partitioned_dir).createOrReplaceTempView(
+            _view(suite, t)
+        )
 
 
 def register_bare_views(
@@ -389,10 +361,19 @@ def canonicalize(df: DataFrame) -> DataFrame:
 
 
 def run_ref_query(spark: SparkSession, suite: str, name: str) -> DataFrame:
-    """Execute the verbatim corpus file and return the canonicalized result."""
-    register_fixture_views(spark, suite)
-    sql = template(suite, corpus_sql(suite, name))
-    return canonicalize(spark.sql(sql))
+    """Execute the verbatim corpus file and return the canonicalized result.
+    Registers only the views this file reads that the session lacks (one
+    ~1 ms ``tableExists`` per view), so a dropped view is restored and a
+    registered one is never re-read."""
+    raw = corpus_sql(suite, name)
+    missing = [
+        t
+        for t in used_tables(suite, raw)
+        if not spark.catalog.tableExists(_view(suite, t))
+    ]
+    if missing:
+        _register(spark, suite, missing)
+    return canonicalize(spark.sql(template(suite, raw)))
 
 
 def make_callable(suite: str, name: str):

@@ -22,8 +22,6 @@ the DuckDB oracles bit-for-bit.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -58,16 +56,6 @@ def adaptive_shingle_width(n_docs: int, vocab_size: int) -> int:
     return SHINGLE_MAX_N
 
 
-# The dial probe is an eager Spark job at plan-BUILD time; composite
-# queries (e.g. pipe_dedup_method_agreement builds several shingle
-# operators over the same corpus) must pay it once, not per operator.
-# Keyed on DataFrame identity (weak — dropped with the DataFrame), which
-# is exactly the reuse pattern of a composite query passing one loaded
-# table into several operators.
-_DIAL_CACHE: "weakref.WeakKeyDictionary[DataFrame, int]" = (
-    weakref.WeakKeyDictionary()
-)
-
 # Output-row flush bound for the exploding Arrow kernels (shingles /
 # positional n-grams): one input batch of long documents fans out to
 # ~n_tok rows per doc, so the generators emit in bounded chunks instead
@@ -79,13 +67,7 @@ _NGRAM_FLUSH_ROWS = 200_000
 def corpus_shingle_dial(docs: DataFrame) -> int:
     """One probe pass over the corpus (doc count + distinct-token count,
     same tokenization as with_word_shingles) feeding
-    adaptive_shingle_width. Memoized per input DataFrame object, so a
-    composite query building several shingle operators over the same
-    loaded table runs the probe job once."""
-    try:
-        return _DIAL_CACHE[docs]
-    except (KeyError, TypeError):
-        pass
+    adaptive_shingle_width — an eager Spark job at plan-build time."""
     row = docs.select(
         F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"),
         "doc_id",
@@ -93,12 +75,7 @@ def corpus_shingle_dial(docs: DataFrame) -> int:
         F.countDistinct("tok").alias("v"),
         F.countDistinct("doc_id").alias("n"),
     ).collect()[0]
-    n = adaptive_shingle_width(int(row["n"]), int(row["v"]))
-    try:
-        _DIAL_CACHE[docs] = n
-    except TypeError:
-        pass  # unhashable/un-weakref-able DataFrame impl — skip the cache
-    return n
+    return adaptive_shingle_width(int(row["n"]), int(row["v"]))
 
 
 def with_word_shingles(docs: DataFrame, n: int = 3) -> DataFrame:

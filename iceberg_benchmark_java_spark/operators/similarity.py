@@ -21,59 +21,16 @@ HigherOrderFunctions, whole-stage codegen'd).
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 SIM_SCALE = 6
 
-# Adaptive dials (sign bits, centroid count) derive from ONE corpus count
-# at plan-build time — an eager Spark job. Memoized per DataFrame object
-# so composite queries building several adaptive operators over the same
-# loaded table pay the probe once (weak keys: entries die with the DF).
-_COUNT_CACHE: "weakref.WeakKeyDictionary[DataFrame, int]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def corpus_count(df: DataFrame) -> int:
-    """df.count() memoized per DataFrame object — the shared probe for
-    every adaptive dial in this module."""
-    try:
-        return _COUNT_CACHE[df]
-    except (KeyError, TypeError):
-        pass
-    n = df.count()
-    try:
-        _COUNT_CACHE[df] = n
-    except TypeError:
-        pass
-    return n
-
-
-_DIM_CACHE: "weakref.WeakKeyDictionary[DataFrame, dict[str, int]]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def embedding_dim(df: DataFrame, col: str = "embedding") -> int:
-    """Dimensionality of the embedding column — a 1-row eager probe,
-    memoized per (DataFrame object, column name) like :func:`corpus_count`
-    so composite queries building several dimension-aware operators
-    (IVF-PQ, the RP banded route) over the same loaded table pay it once.
-    The memo is keyed by column too: two differently-sized vector columns
-    on one DataFrame never share a cached width."""
-    try:
-        return _DIM_CACHE[df][col]
-    except (KeyError, TypeError):
-        pass
-    d = df.select(F.size(col).alias("d")).limit(1).first()["d"]
-    try:
-        _DIM_CACHE.setdefault(df, {})[col] = d
-    except TypeError:
-        pass
-    return d
+    """Dimensionality of the embedding column — a 1-row eager probe at
+    plan-build time."""
+    return df.select(F.size(col).alias("d")).limit(1).first()["d"]
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -276,33 +233,12 @@ def _exact_seq_norm(vec: list[float]) -> float:
     return math.sqrt(acc)
 
 
-# Collected centroid tables, memoized per centroids-DataFrame object (weak
-# keys — entries die with the DF). nearest_centroid pulls the k-row table
-# to the driver once per CALL; callers that assign several frames against
-# the SAME centroid table (incremental ingest: corpus then batch) used to
-# re-execute the whole seeding subtree per call. The memo is a driver-side
-# plan-reference cache in the spirit of corpus_count/_DIAL_CACHE: k is
-# metadata-sized by construction, and the rows are exactly what the call
-# would re-collect.
-_CENTROID_ROWS_CACHE: "weakref.WeakKeyDictionary[DataFrame, list]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _centroid_rows(centroids: DataFrame) -> list:
-    try:
-        return _CENTROID_ROWS_CACHE[centroids]
-    except (KeyError, TypeError):
-        pass
-    rows = sorted(
+    """The centroid table collected to the driver, sorted by cent_id."""
+    return sorted(
         centroids.select("cent_id", "c_emb").collect(),
         key=lambda r: r["cent_id"],
     )
-    try:
-        _CENTROID_ROWS_CACHE[centroids] = rows
-    except TypeError:
-        pass
-    return rows
 
 
 def nearest_centroid(
@@ -819,7 +755,7 @@ def cosine_near_dup_pairs(
     slices for recall like MinHash-LSH.
     """
     if n_bits is None:
-        n_bits = adaptive_sign_bits(corpus_count(embeddings))
+        n_bits = adaptive_sign_bits(embeddings.count())
     a = embeddings.select(
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("emb_a"),
@@ -1156,7 +1092,7 @@ def cosine_near_dup_pairs_banded(
     which has no hyperplanes.
     """
     if n_bits is None:
-        n_bits = adaptive_sign_bits(corpus_count(embeddings))
+        n_bits = adaptive_sign_bits(embeddings.count())
     # slice buckets while dims last; hash-seeded hyperplanes beyond —
     # the deterministic rule the oracles mirror (CASE on the bit width).
     # The RP route probes the dimensionality once (1-row job) so the
@@ -1188,7 +1124,7 @@ def cosine_near_dup_pairs_banded(
         # n_bands × n_bits interpreted HOF folds per row (guide §4.2) —
         # bit-identical buckets to sign_bucket_rp's literal route, pinned
         # by test_rp_arrow_route_matches_expression_route. The dim probe
-        # is the same memoized 1-row job the literal route paid.
+        # is the same 1-row job the literal route paid.
         slim = _rp_band_buckets_arrow(
             embeddings,
             n_bits,
@@ -1543,8 +1479,9 @@ def ivf_pq_topk(
 
     Returns (query_id, vec_id, sim, rnk); sim = exact cosine (6dp), so
     recall against :func:`cosine_topk_bruteforce` is a direct join.
-    (The dimensionality comes from a memoized 1-row probe —
-    :func:`embedding_dim` — like the adaptive-dial counts.)
+    (The dimensionality comes from one 1-row probe per index build —
+    :func:`embedding_dim`; the query path reads the subspace width off
+    the codebook rows.)
     """
     centroids, index, cb = build_ivf_pq_index(embeddings, n_centroids)
     return ivf_pq_topk_from_index(
@@ -1608,10 +1545,11 @@ def ivf_pq_topk_from_index(
     vectors. Contains NO index-build stages — no centroid seeding, no
     corpus-wide codebook aggregate, no code derivation (plan-asserted):
     the serve-path cost is routing + probed-list scan + shortlist refine,
-    which is what an online ANN service pays per query batch.
+    which is what an online ANN service pays per query batch. The
+    subspace width is each codebook row's ``size(c_emb)``, so the query
+    path runs no probe job.
     """
-    d = embedding_dim(corpus)
-    d_sub = _pq_d_sub(d)
+    d_sub = F.size(F.col("c_emb"))
     q_scored = queries.crossJoin(F.broadcast(centroids)).select(
         "query_id",
         "q_embedding",
@@ -1883,7 +1821,7 @@ def semantic_dedup(
     Out: vec_id, cent_id, cent_sim, n_dup_partners, keep.
     """
     if n_centroids is None:
-        n_centroids = adaptive_centroids(corpus_count(embeddings))
+        n_centroids = adaptive_centroids(embeddings.count())
     centroids, assign = ivf_assignments(embeddings, n_centroids)
     cs = assign.join(F.broadcast(centroids), "cent_id").select(
         "vec_id",
@@ -2195,7 +2133,9 @@ def incremental_semantic_dedup(
          seeding + argmax run ZERO jobs here: the serve shape, where the
          per-batch plan reads the index instead of re-deriving it
          (registered as pipe_incremental_semantic_dedup_served; without
-         it, :func:`ivf_assignments` re-derives both per call).
+         it, both are re-derived per call by :func:`ivf_assignments`'
+         routes, the flat one collecting the centroid table once for
+         the corpus and the batch).
       2. cluster occupancy = corpus counts + batch counts per cent_id —
          a ≤ 2·n_centroids-row aggregate broadcast back onto the cells
          (NO corpus-row shuffle; the full operator's window shuffle is
@@ -2255,12 +2195,21 @@ def incremental_semantic_dedup(
                 "check_ordered=False only if seed stability is guaranteed "
                 "by other means."
             )
+    rows = None
     if corpus_index is not None:
         centroids, stored = corpus_index
         corpus_assign = stored.select("vec_id", "cent_id", "embedding")
+    elif n_centroids > TWO_LEVEL_THRESHOLD:
+        centroids, corpus_assign = two_level_assignments(corpus, n_centroids)
     else:
-        centroids, corpus_assign = ivf_assignments(corpus, n_centroids)
-    batch_assign = nearest_centroid(batch, centroids)
+        # ivf_assignments' flat route, with the centroid table collected
+        # once for both the corpus and the batch assignment
+        centroids = seed_centroids(corpus, n_centroids)
+        rows = _centroid_rows(centroids)
+        corpus_assign = nearest_centroid(
+            corpus.select("vec_id", "embedding"), centroids, _rows=rows
+        ).select("vec_id", "embedding", "cent_id")
+    batch_assign = nearest_centroid(batch, centroids, _rows=rows)
 
     def cells(assign: DataFrame) -> DataFrame:
         return assign.join(F.broadcast(centroids), "cent_id").select(

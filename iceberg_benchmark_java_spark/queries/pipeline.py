@@ -1151,11 +1151,14 @@ def near_dup_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_a", "vec_b")
     )
+    # both paths bucket at the adaptive width: ONE count derives it
+    n_bits = similarity.adaptive_sign_bits(e.count())
     paths = {
-        "single": similarity.cosine_near_dup_pairs(e, threshold=0.25)
-        .select("vec_a", "vec_b"),
+        "single": similarity.cosine_near_dup_pairs(
+            e, threshold=0.25, n_bits=n_bits
+        ).select("vec_a", "vec_b"),
         "banded": similarity.cosine_near_dup_pairs_banded(
-            e, threshold=0.25, n_bands=4
+            e, threshold=0.25, n_bits=n_bits, n_bands=4
         ).select("vec_a", "vec_b"),
     }
     n_exact = exact.agg(F.count("*").alias("n_exact_pairs"))
@@ -3402,11 +3405,13 @@ def ann_ivf_pq_probe_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "vec_id"
     )
     nq = q.agg(F.count("*").alias("n_q"))
+    # the index is deterministic: build it once, sweep the query path
+    centroids, index, cb = similarity.build_ivf_pq_index(e, n_centroids=16)
     parts = []
     for p, rk in _IVF_PQ_SWEEP:
         hits = (
-            similarity.ivf_pq_topk(
-                e, q, k=5, n_centroids=16, n_probe=p, refine_k=rk
+            similarity.ivf_pq_topk_from_index(
+                centroids, index, cb, e, q, k=5, n_probe=p, refine_k=rk
             )
             .select("query_id", "vec_id")
             .join(brute, ["query_id", "vec_id"])
@@ -5457,7 +5462,7 @@ def _two_level_recall(
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
     )
-    k_cents = similarity.adaptive_centroids(similarity.corpus_count(e))
+    k_cents = similarity.adaptive_centroids(e.count())
     brute = similarity.cosine_topk_bruteforce(e, q, k=5).select(
         "query_id", "vec_id"
     )
@@ -5517,7 +5522,7 @@ def _ensure_two_level_index(spark: SparkSession, sf_dir: str) -> str:
         e = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-        k_cents = similarity.adaptive_centroids(similarity.corpus_count(e))
+        k_cents = similarity.adaptive_centroids(e.count())
         centroids, index = similarity.build_two_level_index(
             e, n_centroids=k_cents
         )
@@ -5649,7 +5654,7 @@ def ann_two_level_probe_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
     )
-    k_cents = similarity.adaptive_centroids(similarity.corpus_count(e))
+    k_cents = similarity.adaptive_centroids(e.count())
     brute = similarity.cosine_topk_bruteforce(e, q, k=5).select(
         "query_id", "vec_id"
     )
@@ -5984,7 +5989,7 @@ def _duck_incremental_semdedup_oracle() -> str:
 def _inc_sem_split(spark: SparkSession, sf_dir: str):
     """(corpus, batch, all) DataFrames under the id-cut ingest split."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cut = int(_INC_SEM_BATCH_FRAC * similarity.corpus_count(e))
+    cut = int(_INC_SEM_BATCH_FRAC * e.count())
     return (
         e.filter(F.col("vec_id") < cut),
         e.filter(F.col("vec_id") >= cut),

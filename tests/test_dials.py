@@ -4,8 +4,9 @@ The registered near-dup entries derive their dials (sign-LSH bit width,
 shingle width) from corpus counts at plan-build time, and the DuckDB
 oracles re-derive the SAME dial in SQL. These tests pin the two
 derivations to each other over a wide range of corpus sizes — a drift
-here would silently change which plan the oracle models.
-No SparkSession needed: the derivations are pure integer arithmetic.
+here would silently change which plan the oracle models. The
+derivations are pure integer arithmetic; the Spark-backed tests check
+the probe jobs that feed them and the routes they select.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from iceberg_benchmark_java_spark.operators import similarity
 from iceberg_benchmark_java_spark.operators.dedup import (
     SHINGLE_MAX_N,
     adaptive_shingle_width,
@@ -44,6 +46,33 @@ WHERE CASE t.nn
         WHEN 7 THEN v*v*v*v*v*v*v
         ELSE v*v*v*v*v*v*v*v END >= 32 * n
 """
+
+
+@pytest.mark.parametrize(
+    "entry, probe",
+    [
+        ("pipe_near_dup_recall", "adaptive_sign_bits"),
+        ("pipe_ann_ivf_pq_topk", "embedding_dim"),
+        ("pipe_ann_ivf_pq_probe_sweep", "embedding_dim"),
+        ("pipe_incremental_semantic_dedup", "_centroid_rows"),
+    ],
+)
+def test_build_runs_each_probe_once(spark, monkeypatch, entry, probe):
+    """A build derives each plan-build-time probe once and passes it on;
+    a second call in the same build is a repeated eager job."""
+    from iceberg_benchmark_java_spark.queries import all_queries
+    from tests.conftest import SF_SMOKE
+
+    fn = getattr(similarity, probe)
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return fn(*args, **kwargs)
+
+    monkeypatch.setattr(similarity, probe, counted)
+    all_queries()[entry](spark, SF_SMOKE)
+    assert len(calls) == 1, f"{entry} ran {probe} {len(calls)} times"
 
 
 def test_adaptive_sign_bits_values():

@@ -191,6 +191,21 @@ def test_bench_stdout_line_contract():
     assert out["value"] == sum(timings.values())
     assert list(out["queries"]) == ["c", "a", "b"]  # slowest first
     assert (out["n_queries"], out["probe"], out["n_failed"], out["sf"]) == (3, 0.5, 1, 0.01)
+    # a tail-truncated line is broken JSON, so the whole line must fit the
+    # 2,000-byte budget even with every headline entry at 99.99 s
+    worst = {n: 99.99 for n in bench.HEADLINE}
+    line = bench.stdout_line(worst, probe=99.99, n_failed=len(worst), sf=0.1)
+    assert len(line.encode()) < 2000
+
+
+def test_ref_query_restores_dropped_view(spark):
+    """A corpus query re-registers any view it reads that the session
+    lost, not only the first table of the suite."""
+    from iceberg_benchmark_java_spark import corpus_ref
+
+    assert corpus_ref.run_ref_query(spark, "tpcds", "q03").count() > 0
+    spark.catalog.dropTempView("ref_tpcds_store_sales")
+    assert corpus_ref.run_ref_query(spark, "tpcds", "q03").count() > 0
 
 
 def test_results_dataframe_round_trip(spark):

@@ -578,7 +578,7 @@ def tpcds_part_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("tpcds_part"))
     corpus_ref.register_fixture_views(spark, "tpcds", partitioned_dir=d)
     yield d
-    corpus_ref.register_fixture_views(spark, "tpcds", force=True)
+    corpus_ref.register_fixture_views(spark, "tpcds")
 
 
 @pytest.mark.slow
@@ -628,7 +628,7 @@ def test_tpcds_partitioned_matches_flat(spark, tpcds_part_dir):
     rows on the flat and partitioned warehouses."""
     from iceberg_benchmark_java_spark import corpus_ref
 
-    corpus_ref.register_fixture_views(spark, "tpcds", force=True)
+    corpus_ref.register_fixture_views(spark, "tpcds")
     flat = corpus_ref.run_ref_query(spark, "tpcds", "q03").collect()
     corpus_ref.register_fixture_views(
         spark, "tpcds", partitioned_dir=tpcds_part_dir

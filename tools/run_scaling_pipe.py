@@ -610,53 +610,6 @@ def plan_asserts(spark, queries, sf_dir: str) -> dict[str, str]:
     return results
 
 
-def remeasure_rp_row(out_json: str, scales: list[int]) -> int:
-    """Re-measure ONLY the banded_rp_lifted_20bits dial row and patch it
-    into an existing artifact in place (runs recorded, min reported, the
-    dependent max_ratio_scaled_dials recomputed). Exists for the round-8
-    kernel fix: the xorshift weight mix changed the RP code after the
-    full-roster artifact was recorded, and re-running the whole 2 h
-    roster to refresh one dial row measures nothing new."""
-    with open(out_json) as f:
-        result = json.load(f)
-    cfg = local_test_config("ibx-scaling-rp")
-    cfg.extra_confs["spark.driver.memory"] = "24g"
-    spark = build_session(cfg)
-    try:
-        t_1x, r_1x = time_banded_scaled_bits(spark, BASE_DIR, 20)
-        for s in scales:
-            d = os.path.join(REPO, "fixtures", f"pipe_x{s}")
-            t, r = time_banded_scaled_bits(spark, d, 20)
-            cell = result["scales"][str(s)]
-            cell["banded_rp_lifted_20bits"] = {
-                "n_bits": 20,
-                "t_1x_sec": t_1x,
-                "runs_1x": r_1x,
-                "t_sec": t,
-                "runs": r,
-                "ratio": round(t / t_1x, 2),
-            }
-            # dial rows are absent from --only-style artifacts; tolerate
-            # them so a long re-measure can't crash before json.dump
-            ratios = [
-                v["ratio"]
-                for q, v in cell["queries"].items()
-                if v.get("ratio")
-            ] + [
-                r["ratio"]
-                for r in (cell.get("semantic_dedup_scaled_k"),)
-                if r
-            ] + [round(t / t_1x, 2)]
-            cell["max_ratio_scaled_dials"] = max(ratios)
-    finally:
-        spark.stop()
-    with open(out_json, "w") as f:
-        json.dump(result, f, indent=1)
-    print(json.dumps({k: result["scales"][k]["banded_rp_lifted_20bits"]
-                      for k in result["scales"]}))
-    return 0
-
-
 def patch_query_rows(names: list[str], out_json: str, scales: list[int]) -> int:
     """Re-measure ONLY the named roster entries (1× + every given scale)
     and patch them into an existing artifact in place — runs recorded,
@@ -775,13 +728,6 @@ def patch_query_rows(names: list[str], out_json: str, scales: list[int]) -> int:
 
 def main() -> int:
     args = sys.argv[1:]
-    if "--rp-row" in args:
-        args.remove("--rp-row")
-        if not args:
-            sys.exit(
-                "usage: run_scaling_pipe.py --rp-row OUT_JSON [SCALE ...]"
-            )
-        return remeasure_rp_row(args[0], [int(s) for s in args[1:]])
     if "--patch" in args:
         i = args.index("--patch")
         if i + 1 >= len(args):
