@@ -10,12 +10,17 @@ recommendation — this module uses the race-free substitute:
    name, from this collector or another one on the session, never shares
    a group with an earlier run), and
 2. after execution, look up that group's jobs and their stage ids in the
-   SparkContext's status store (``sc.statusTracker()``) and fetch exactly
-   those stages from the Spark UI REST API (``/stages/{id}?details=false``:
-   the stage totals without the per-task list).
+   SparkContext's status tracker (``sc.statusTracker()``) and read exactly
+   those stages from the SparkContext's status store
+   (``AppStatusStore.stageData``, the call the REST handler for
+   ``/stages/{id}?details=false`` makes: the stage totals without the
+   per-task list), serialized by the REST API's own JSON writer, so each
+   entry carries the field names and values REST would return.
 
-The cost of one collect is one REST call per stage of the execution; it
-does not grow with the jobs the session has run before.
+The cost of one collect is two py4j calls per stage of the execution and no
+HTTP request; it does not grow with the jobs the session has run before. The
+status store exists in every live SparkContext, so metrics are collected
+with ``spark.ui.enabled=false`` too.
 
 Aggregation mirrors IcebergBenchmark.java:269-355: Σ executorRunTime,
 executorCpuTime, jvmGcTime over the query's stages, plus per-stage entries,
@@ -36,13 +41,14 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 
+# Unused here; perfbench's tracer patches it by name to count REST calls.
 def _get_json(url: str) -> Any:
     with urllib.request.urlopen(url, timeout=10) as r:  # noqa: S310 (localhost UI)
         return json.load(r)
 
 
 class StageMetricsCollector:
-    """Collects per-execution stage metrics from the Spark REST API.
+    """Collects per-execution stage metrics from Spark's status store.
 
     Usage::
 
@@ -57,13 +63,14 @@ class StageMetricsCollector:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self.sc = spark.sparkContext
-        self._ui = self.sc.uiWebUrl  # None when UI disabled
-        self._app_id = self.sc.applicationId
+        jvm = self.sc._jvm
+        # Resolved once: a py4j class lookup costs about as much as the
+        # per-stage read itself.
+        self._store = self.sc._jsc.sc().statusStore()
+        self._writer = jvm.org.apache.spark.status.api.v1.JacksonMessageWriter().mapper()
+        self._no_statuses = jvm.java.util.ArrayList()  # taskStatus filter: none
+        self._no_quantiles = self.sc._gateway.new_array(jvm.double, 0)
         self._groups: dict[str, str] = {}  # query name -> its latest job group
-
-    @property
-    def available(self) -> bool:
-        return self._ui is not None
 
     def begin(self, query_name: str) -> None:
         """Tag subsequent jobs with a job group of their own (race-free
@@ -90,6 +97,12 @@ class StageMetricsCollector:
                 ids.update(info.stageIds)
         return sorted(ids)
 
+    def _stage_attempts(self, stage_id: int) -> list[dict[str, Any]]:
+        """The stage's attempts as ``/stages/{id}?details=false`` returns
+        them; an empty list for a stage the store no longer holds."""
+        data = self._store.stageData(stage_id, False, self._no_statuses, False, self._no_quantiles)
+        return json.loads(self._writer.writeValueAsString(data))
+
     def collect(self, query_name: str) -> dict[str, Any]:
         """Aggregate stage metrics for the query's latest execution
         (IcebergBenchmark.java:269-355 field-for-field where stock Spark
@@ -101,21 +114,15 @@ class StageMetricsCollector:
             "total_input_bytes": 0,
             "total_input_records": 0,
             "stages": [],
-            "metrics_source": "rest" if self.available else "unavailable",
+            "metrics_source": "status_store",
         }
         group = self._groups.get(query_name)
-        if not self.available or group is None:
+        if group is None:
             return empty
         try:
             out = dict(empty, stages=[])
             for sid in self._stage_ids(group):
-                try:
-                    attempts = _get_json(
-                        f"{self._ui}/api/v1/applications/{self._app_id}/stages/{sid}?details=false"
-                    )
-                except Exception:
-                    continue  # skipped stages 404
-                for st in attempts:
+                for st in self._stage_attempts(sid):
                     if st.get("status") not in ("COMPLETE", "FAILED"):
                         continue
                     entry = {
@@ -141,6 +148,6 @@ class StageMetricsCollector:
                 s["executor_run_time_ms"] for s in out["stages"] if s["input_bytes"] > 0
             )
             return out
-        except Exception as e:  # REST hiccup → metrics best-effort, never fatal
+        except Exception as e:  # py4j error → metrics best-effort, never fatal
             empty["metrics_source"] = f"error: {e}"
             return empty

@@ -5,11 +5,20 @@ DataFrame as a single CSV file per run (schema IcebergBenchmark.java:131-147,
 rows :357-376, writer options :391-399). Reproduced field-for-field,
 including the writer options (header, quoteAll, escape='"', append mode,
 repartition(1) for a single output file).
+
+The buffered rows reach the JVM as one Arrow table, not as a Python list:
+``createDataFrame(list)`` parallelizes the list, and pickling it starts a
+Python daemon and its workers only to carry a dozen rows. The Arrow route
+yields a single partition that no Python worker touches, and its
+``timestamp`` column holds the naive UTC times the runner records (the list
+route reads naive values as host-local time).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -44,13 +53,13 @@ RESULTS_SCHEMA = StructType(
         StructField("end_time_ms", LongType(), True),
     ]
 )
+_ARROW_SCHEMA = to_arrow_schema(RESULTS_SCHEMA)  # timestamp: us, UTC
 
 
 def results_dataframe(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """Buffered result maps → typed DataFrame (A11 buffer → A14 schema)."""
-    cols = [f.name for f in RESULTS_SCHEMA.fields]
-    data = [tuple(r.get(c) for c in cols) for r in rows]
-    return spark.createDataFrame(data, RESULTS_SCHEMA)
+    table = pa.Table.from_pylist(rows, schema=_ARROW_SCHEMA)
+    return spark.createDataFrame(table, RESULTS_SCHEMA)
 
 
 def write_results_csv(df: DataFrame, output_path: str, run_id: str) -> str:

@@ -7,8 +7,9 @@ rows) → catch-all error capture truncated to 2000 chars → buffer a result
 map → attach stage metrics → flush CSV.
 
 Differences by design (documented, cleaner semantics):
-- metrics correlate via job groups + REST (metrics.py), not a static-state
-  listener with a 10 s sleep — one job group per execution, race-free;
+- metrics correlate via job groups + the SparkContext's status store
+  (metrics.py), not a static-state listener with a 10 s sleep — one job
+  group per execution, race-free;
 - ``use_database`` is optional: with the parquet-view catalog there is no
   USE statement to issue;
 - ``run`` times any DataFrame builder, not only SQL text (``run_sql`` is

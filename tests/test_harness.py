@@ -122,8 +122,14 @@ def test_metrics_collection_smoke(spark):
     m = json.loads(res.metrics_json)
     assert "total_executor_run_time_ms" in m
     assert 0 <= m["build_ms"] <= res.execution_time_sec * 1000
-    if m["metrics_source"] == "rest":  # UI available → stages attached
-        assert isinstance(m["stages"], list)
+    assert m["metrics_source"] == "status_store"
+    assert isinstance(m["stages"], list)
+
+
+JOIN_SQL = (
+    "SELECT l_returnflag, count(*) FROM lineitem "
+    "JOIN orders ON l_orderkey = o_orderkey GROUP BY 1"
+)
 
 
 def test_metrics_json_lists_only_its_own_execution(spark):
@@ -134,18 +140,69 @@ def test_metrics_json_lists_only_its_own_execution(spark):
     from iceberg_benchmark_java_spark.catalog import register_views
 
     register_views(spark, SF_SMOKE)
-    sql = (
-        "SELECT l_returnflag, count(*) FROM lineitem "
-        "JOIN orders ON l_orderkey = o_orderkey GROUP BY 1"
-    )
     shapes = []
     for i in range(3):
-        res = BenchmarkRunner(spark, run_id=f"own{i}").run_sql("TPC-H", "q_rerun", sql)
+        res = BenchmarkRunner(spark, run_id=f"own{i}").run_sql("TPC-H", "q_rerun", JOIN_SQL)
         m = json.loads(res.metrics_json)
-        assert m["metrics_source"] == "rest"
+        assert m["metrics_source"] == "status_store"
         shapes.append((len(m["stages"]), sum(s["num_tasks"] for s in m["stages"])))
     assert shapes[0][0] > 0
     assert shapes == [shapes[0]] * 3
+
+
+def test_metrics_match_rest_stage_endpoint(spark):
+    """The collector reads each stage from the status store as the REST
+    endpoint ``/stages/{id}?details=false`` serves it: same attempts, same
+    fields, so the per-stage entries are those REST would have given."""
+    import json
+    import urllib.error
+    import urllib.request
+
+    from iceberg_benchmark_java_spark.catalog import register_views
+
+    register_views(spark, SF_SMOKE)
+    r = BenchmarkRunner(spark, run_id="parity")
+    m = json.loads(r.run_sql("TPC-H", "q_parity", JOIN_SQL).metrics_json)
+    sc, c = spark.sparkContext, r._collector
+    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages"
+    want = []
+    for sid in c._stage_ids(c._groups["q_parity"]):
+        try:
+            with urllib.request.urlopen(f"{base}/{sid}?details=false", timeout=10) as resp:
+                attempts = json.load(resp)
+        except urllib.error.HTTPError as e:
+            assert e.code == 404  # a stage the store does not hold
+            attempts = []
+        assert c._stage_attempts(sid) == attempts
+        want += [
+            (sid, a["executorRunTime"], int(a["executorCpuTime"] / 1e6), a["jvmGcTime"],
+             a["inputBytes"], a["inputRecords"], a["numCompleteTasks"])
+            for a in attempts
+            if a["status"] in ("COMPLETE", "FAILED")
+        ]
+    got = [
+        (s["stage_id"], s["executor_run_time_ms"], s["executor_cpu_time_ms"], s["jvm_gc_time_ms"],
+         s["input_bytes"], s["input_records"], s["num_tasks"])
+        for s in m["stages"]
+    ]
+    assert want and got == want
+
+
+def test_metrics_collect_makes_no_http_request(spark, monkeypatch):
+    import json
+    import urllib.request
+
+    from iceberg_benchmark_java_spark.catalog import register_views
+
+    def no_http(*args, **kwargs):
+        raise AssertionError("the collector made an HTTP request")
+
+    register_views(spark, SF_SMOKE)
+    monkeypatch.setattr(urllib.request, "urlopen", no_http)
+    res = BenchmarkRunner(spark, run_id="nohttp").run_sql("TPC-H", "q_nohttp", JOIN_SQL)
+    m = json.loads(res.metrics_json)
+    assert m["metrics_source"] == "status_store"
+    assert m["stages"] and m["total_executor_run_time_ms"] > 0
 
 
 def test_rerun_reuses_compiled_plan(spark):
@@ -214,6 +271,94 @@ def test_results_dataframe_round_trip(spark):
     df = results_dataframe(spark, [x.as_row() for x in r.results])
     row = df.collect()[0]
     assert row.run_id == "t4" and row.status == "SUCCESS"
+
+
+RESULTS_HEADER = (
+    '"run_id","schema_size","benchmark_type","query_name","execution_time_sec","status",'
+    '"error_message","metrics_json","analytics_core_enabled","client_type",'
+    '"total_batch_scan_time_ms","timestamp","execution_id","start_time_ms","end_time_ms"\n'
+)
+
+
+def _result_row(**changes):
+    from datetime import datetime
+
+    row = dict(
+        run_id="g", schema_size="sf0.001", benchmark_type="TPC-DS", query_name="q01.sql",
+        execution_time_sec=1.5, status="SUCCESS", error_message=None, metrics_json='{"a": 1}',
+        analytics_core_enabled=False, client_type="HTTP", total_batch_scan_time_ms=7,
+        timestamp=datetime(2026, 10, 17, 10, 42, 52, 123000),  # naive UTC, as run() stores it
+        execution_id=0, start_time_ms=1792233772000, end_time_ms=1792233773500,
+    )
+    return dict(row, **changes)
+
+
+def test_results_csv_bytes_are_golden(spark, tmp_path):
+    """The flushed CSV, byte for byte: nulls, quotes, newlines and commas
+    inside fields, non-ASCII text, doubles Java prints in E notation, and a
+    run with no rows (header only)."""
+    from iceberg_benchmark_java_spark.harness import write_results_csv
+
+    rows = [
+        _result_row(
+            schema_size=None, benchmark_type=None, metrics_json=None, total_batch_scan_time_ms=None,
+            analytics_core_enabled=None, execution_id=None, start_time_ms=None, end_time_ms=None,
+            execution_time_sec=None,
+        ),
+        _result_row(
+            query_name="q02.sql", status="FAILED", error_message='say "no", then\nstop',
+            metrics_json='{"k": "v,w"}', execution_time_sec=1e-4, execution_id=1,
+        ),
+        _result_row(
+            query_name="q_é_日本.sql", error_message="", execution_time_sec=12345678.5,
+            analytics_core_enabled=True, client_type="ünï", execution_id=2,
+        ),
+    ]
+    golden = RESULTS_HEADER + (
+        '"g","","","q01.sql","","SUCCESS","","","","HTTP","","2026-10-17T10:42:52.123Z","","",""\n'
+        '"g","sf0.001","TPC-DS","q02.sql","1.0E-4","FAILED","say ""no"", then\nstop",'
+        '"{""k"": ""v,w""}","false","HTTP","7","2026-10-17T10:42:52.123Z","1","1792233772000",'
+        '"1792233773500"\n'
+        '"g","sf0.001","TPC-DS","q_é_日本.sql","1.23456785E7","SUCCESS","","{""a"": 1}","true",'
+        '"ünï","7","2026-10-17T10:42:52.123Z","2","1792233772000","1792233773500"\n'
+    )
+    for run_id, rs, want in (("rows", rows, golden), ("empty", [], RESULTS_HEADER)):
+        out = write_results_csv(results_dataframe(spark, rs), str(tmp_path), run_id)
+        files = glob.glob(out + "/*.csv")
+        assert len(files) == 1
+        with open(files[0], "rb") as f:
+            assert f.read() == want.encode("utf-8"), run_id
+
+
+def test_results_dataframe_starts_no_python_worker(spark):
+    """The rows reach the JVM as Arrow batches: no PythonRDD in the lineage,
+    so flushing starts no Python daemon or worker."""
+    df = results_dataframe(spark, [_result_row(), _result_row(execution_id=1)])
+    assert "PythonRDD" not in df._jdf.rdd().toDebugString()
+
+
+def test_results_timestamp_is_utc_on_any_host(spark):
+    """run() stores naive UTC datetimes; the flushed timestamp must not
+    shift by the host's UTC offset."""
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        df = results_dataframe(spark, [_result_row()])
+        got = df.select(F.date_format("timestamp", "yyyy-MM-dd'T'HH:mm:ss.SSS")).first()[0]
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+    assert got == "2026-10-17T10:42:52.123"
 
 
 def test_dynamic_partition_overwrite(spark, tmp_path):
