@@ -4,6 +4,9 @@ The reference assumes a pre-loaded Iceberg warehouse and only issues
 ``USE catalog.db`` (IcebergBenchmark.java:153). This module supplies the
 missing bootstrap:
 
+- ``load_table``: the one opener of a flat parquet base table. Where Iceberg
+  serves a schema from metadata, it takes it from the parquet footer on the
+  driver, so an open starts no Spark job and nothing is memoized.
 - ``register_views``: register the driver-generated parquet fixtures
   (TESTDATA.md) as temp views — the no-dependency path used by tests and
   the correctness gate.
@@ -12,17 +15,18 @@ missing bootstrap:
   warehouse axis (runner.sh:11-12 vs partitioned_runner.sh:11-12). Requires
   the iceberg-spark-runtime jar; no-ops (with a warning) otherwise.
 
-At 100 TB the same code path holds: `spark.read.parquet` over a prefix is a
-distributed scan, and CTAS into Iceberg is a distributed write; nothing here
-collects to the driver.
+At 100 TB the same code path holds: opening a table reads one footer on the
+driver, the scan is distributed, and CTAS into Iceberg is a distributed
+write; nothing here collects rows to the driver.
 """
 
 from __future__ import annotations
 
 import os
-import weakref
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType, TimestampType, _parse_datatype_json_string
 
 from .session import iceberg_available
 
@@ -55,35 +59,24 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Session-scoped memo of loaded base tables, keyed on (absolute path,
-# mtime). Every spark.read.parquet launches a schema-inference job
-# (~50 ms at sf0.01), and a pass over the registry loads the same few
-# base tables hundreds of times. This caches the lazy PLAN REFERENCE
-# only: every action still scans the parquet; no rows, counts or
-# results are stored here. The mtime key drops the entry when the
-# fixture is rewritten; weak session keys drop the map with the session.
-_TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = table_path(sf_dir, name)
-    try:
-        key = (os.path.abspath(path), os.path.getmtime(path), name)
-    except OSError:
-        key = None
-    if key is not None:
-        try:
-            cache = _TABLE_CACHE.setdefault(spark, {})
-        except TypeError:
-            cache, key = None, None
-        if cache is not None and key in cache:
-            return cache[key]
-    df = _load_table_uncached(spark, sf_dir, name)
-    if key is not None and cache is not None:
-        cache[key] = df
-    return df
+def footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers for the parquet file
+    at ``path``, converted from its footer on the driver by the code the
+    inference job runs on an executor (``ParquetFileFormat.readSchema``,
+    which honours the session's ``nanosAsLong`` and ``inferTimestampNTZ``)."""
+    # JavaClass names each class outright: resolving a dotted name through
+    # spark._jvm costs one py4j round trip per package level.
+    jss = spark._jsparkSession
+    client = spark.sparkContext._gateway._gateway_client
+    conf = jss.sessionState().newHadoopConf()
+    p = JavaClass("org.apache.hadoop.fs.Path", client)(path)
+    files = spark._jvm.PythonUtils.toSeq([p.getFileSystem(conf).getFileStatus(p)])
+    fmt = getattr(
+        JavaClass("org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat$", client),
+        "MODULE$",
+    )
+    footers = fmt.readParquetFootersInParallel(conf, files, False)
+    return _parse_datatype_json_string(fmt.readSchema(footers, jss).get().json())
 
 
 def rebalance_starved_scan(df: DataFrame) -> DataFrame:
@@ -119,20 +112,25 @@ def rebalance_starved_scan(df: DataFrame) -> DataFrame:
     return df
 
 
-def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The base table ``name`` of ``sf_dir``, read with its footer schema:
+    the schema inference gives, without the inference job. Nothing is
+    memoized, so each call sees the file as it is now."""
+    path = table_path(sf_dir, name)
     if name == "events":
         # A lakehouse ingests across eras: events.ts has shipped both as
         # parquet TIMESTAMP(NANOS) (readable only as LONG nanos under
         # spark.sql.legacy.parquet.nanosAsLong) and as TIMESTAMP(MICROS)
         # (native timestamp_ntz). Read, inspect the arrived type, and
-        # normalize — never hard-code one encoding.
+        # normalize — never hard-code one encoding. Set before the footer
+        # is converted: the conf decides how NANOS arrives.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    schema = footer_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
         from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, TimestampType
 
-        if isinstance(df.schema["ts"].dataType, LongType):
+        if isinstance(schema["ts"].dataType, LongType):
             # LONG nanos → microsecond timestamp_ntz by pure NTZ
             # arithmetic: timestamp_micros() + cast would round-trip
             # through the SESSION TIMEZONE and shift the wall-clock value
@@ -144,7 +142,7 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
                     "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
                 ),
             )
-        elif isinstance(df.schema["ts"].dataType, TimestampType):
+        elif isinstance(schema["ts"].dataType, TimestampType):
             # instant-typed era (timestamp[us] with tz) → the UTC wall
             # clock as timestamp_ntz via epoch arithmetic; a direct cast
             # would interpret through the SESSION timezone instead.

@@ -27,11 +27,12 @@ from __future__ import annotations
 
 import os
 import re
-from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .catalog import footer_schema, load_table, table_path
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURES = os.path.join(REPO, "fixtures")
@@ -70,7 +71,6 @@ def _view(suite: str, table: str) -> str:
     return f"ref_{suite}_{table}"
 
 
-@lru_cache(maxsize=None)
 def corpus_sql(suite: str, name: str) -> str:
     path = os.path.join(SUITES[suite][0], f"{name}.sql")
     with open(path) as f:
@@ -263,7 +263,7 @@ def write_partitioned_fixture_warehouse(
     if os.path.exists(marker):
         return {t: p for t, p in out.items() if os.path.isdir(p)}
     for t, path in out.items():
-        df = spark.read.parquet(os.path.join(fdir, f"{t}.parquet"))
+        df = load_table(spark, fdir, t)
         df.write.mode("overwrite").partitionBy(keys[t]).parquet(path)
     os.makedirs(out_dir, exist_ok=True)
     # marker only when every expected fact directory materialized (mirrors
@@ -278,22 +278,22 @@ def write_partitioned_fixture_warehouse(
 def _fixture_df(
     spark: SparkSession, suite: str, table: str, partitioned_dir: str | None
 ) -> DataFrame:
-    """The fixture table as a DataFrame; from the partitioned layout when
-    available there, with column order AND types restored to the flat
-    schema (partition-directory read-back reorders the key to the end and
-    narrows int64 keys to int32 — both would break SELECT * parity and
-    join-type resolution for the verbatim corpus)."""
+    """The fixture table as a DataFrame, opened by ``catalog.load_table``;
+    from the partitioned layout when available there, with column order
+    AND types restored to the flat file's footer schema (partition-directory
+    read-back reorders the key to the end and narrows int64 keys to int32 —
+    both would break SELECT * parity and join-type resolution for the
+    verbatim corpus)."""
     _, fdir, _ = SUITES[suite]
-    flat = os.path.join(fdir, f"{table}.parquet")
     if partitioned_dir and table in TPCDS_PARTITION_KEYS:
         part_path = os.path.join(partitioned_dir, table)
         if os.path.isdir(part_path):
-            ref = spark.read.parquet(flat).schema
+            ref = footer_schema(spark, table_path(fdir, table))
             df = spark.read.parquet(part_path)
             return df.select(
                 *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ref.fields]
             )
-    return spark.read.parquet(flat)
+    return load_table(spark, fdir, table)
 
 
 def register_fixture_views(
@@ -310,7 +310,10 @@ def _register(
     suite: str,
     tables: list[str],
     partitioned_dir: str | None = None,
+    bare: bool = False,
 ) -> None:
+    """Register ``tables`` of ``suite`` as temp views, under their bare
+    names when ``bare`` is set and suite-prefixed otherwise."""
     from . import fixtures
 
     fixtures.generate_all()  # no-op when the committed parquet is present
@@ -318,7 +321,7 @@ def _register(
         write_partitioned_fixture_warehouse(spark, suite, partitioned_dir)
     for t in tables:
         _fixture_df(spark, suite, t, partitioned_dir).createOrReplaceTempView(
-            _view(suite, t)
+            t if bare else _view(suite, t)
         )
 
 
@@ -330,14 +333,7 @@ def register_bare_views(
     corpus resolves exactly these). ``partitioned_dir`` switches the facts
     to the date-partitioned layout: the reference's partitioned_runner.sh
     axis over the byte-identical corpus."""
-    from . import fixtures
-
-    fixtures.generate_all()
-    if partitioned_dir:
-        write_partitioned_fixture_warehouse(spark, suite, partitioned_dir)
-    _, _fdir, tables = SUITES[suite]
-    for t in tables:
-        _fixture_df(spark, suite, t, partitioned_dir).createOrReplaceTempView(t)
+    _register(spark, suite, SUITES[suite][2], partitioned_dir, bare=True)
 
 
 def canonicalize(df: DataFrame) -> DataFrame:

@@ -3450,20 +3450,21 @@ def _index_fixture_dir(sf_dir: str, kind: str) -> str:
 
 
 def _source_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    """Cheap source-data fingerprint (file sizes + nanosecond mtimes of
-    the table's parquet file or directory tree) so a regenerated warehouse
-    invalidates any derived index built from the old bytes. st_mtime_ns
-    (not whole seconds): a same-size regen within one second must still
-    flip the stamp."""
+    """Content fingerprint of the table's parquet file or directory tree:
+    the sha256 of every file's bytes, like :func:`_builder_code_hash`. A
+    regenerated warehouse invalidates any derived index built from the old
+    bytes, even at the same size; a copied one, with the same bytes under
+    new timestamps, keeps it."""
+    import hashlib
+
     path = os.path.join(sf_dir, f"{table}.parquet")
     parts = []
     for root, _, files in (
         os.walk(path) if os.path.isdir(path) else [(os.path.dirname(path), None, [os.path.basename(path)])]
     ):
         for f in sorted(files):
-            p = os.path.join(root, f)
-            st = os.stat(p)
-            parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
+            with open(os.path.join(root, f), "rb") as fh:
+                parts.append(f"{f}:{hashlib.sha256(fh.read()).hexdigest()[:16]}")
     return ";".join(parts)
 
 
