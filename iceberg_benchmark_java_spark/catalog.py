@@ -15,9 +15,10 @@ missing bootstrap:
   warehouse axis (runner.sh:11-12 vs partitioned_runner.sh:11-12). Requires
   the iceberg-spark-runtime jar; no-ops (with a warning) otherwise.
 
-At 100 TB the same code path holds: opening a table reads one footer on the
-driver, the scan is distributed, and CTAS into Iceberg is a distributed
-write; nothing here collects rows to the driver.
+At 100 TB the same code path holds: opening a table, one file or a
+directory of part files, lists it and reads one footer on the driver, the
+scan is distributed, and CTAS into Iceberg is a distributed write; nothing
+here collects rows to the driver.
 """
 
 from __future__ import annotations
@@ -61,16 +62,29 @@ def table_path(sf_dir: str, name: str) -> str:
 
 def footer_schema(spark: SparkSession, path: str) -> StructType:
     """The schema ``spark.read.parquet(path)`` infers for the parquet file
-    at ``path``, converted from its footer on the driver by the code the
-    inference job runs on an executor (``ParquetFileFormat.readSchema``,
-    which honours the session's ``nanosAsLong`` and ``inferTimestampNTZ``)."""
+    or directory of part files at ``path``, converted from one footer on
+    the driver by the code the inference job runs on an executor
+    (``ParquetFileFormat.readSchema``, which honours the session's
+    ``nanosAsLong`` and ``inferTimestampNTZ``)."""
     # JavaClass names each class outright: resolving a dotted name through
     # spark._jvm costs one py4j round trip per package level.
     jss = spark._jsparkSession
     client = spark.sparkContext._gateway._gateway_client
     conf = jss.sessionState().newHadoopConf()
     p = JavaClass("org.apache.hadoop.fs.Path", client)(path)
-    files = spark._jvm.PythonUtils.toSeq([p.getFileSystem(conf).getFileStatus(p)])
+    fs = p.getFileSystem(conf)
+    status = fs.getFileStatus(p)
+    if status.isDirectory():
+        # Like inference without mergeSchema, read one footer: a summary
+        # file's if there is one, else the first data file's. Other names
+        # starting with "_" or "." (_SUCCESS, .crc checksums) are not parquet.
+        leaves = {s.getPath().getName(): s for s in fs.listStatus(p) if s.isFile()}
+        data = sorted(n for n in leaves if not n.startswith(("_", ".")))
+        first = next((n for n in ["_common_metadata", "_metadata", *data] if n in leaves), None)
+        if first is None:
+            raise FileNotFoundError(f"no parquet data file under {path}")
+        status = leaves[first]
+    files = spark._jvm.PythonUtils.toSeq([status])
     fmt = getattr(
         JavaClass("org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat$", client),
         "MODULE$",

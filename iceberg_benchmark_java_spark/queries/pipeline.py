@@ -3449,23 +3449,26 @@ def _index_fixture_dir(sf_dir: str, kind: str) -> str:
     return os.path.join(repo, "fixtures", kind, slug)
 
 
+def _sha16(path: str) -> str:
+    """The first 16 hex digits of the sha256 of the file at ``path``,
+    read in chunks."""
+    import hashlib
+
+    with open(path, "rb") as fh:
+        return hashlib.file_digest(fh, "sha256").hexdigest()[:16]
+
+
 def _source_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
     """Content fingerprint of the table's parquet file or directory tree:
     the sha256 of every file's bytes, like :func:`_builder_code_hash`. A
     regenerated warehouse invalidates any derived index built from the old
     bytes, even at the same size; a copied one, with the same bytes under
     new timestamps, keeps it."""
-    import hashlib
-
     path = os.path.join(sf_dir, f"{table}.parquet")
-    parts = []
-    for root, _, files in (
-        os.walk(path) if os.path.isdir(path) else [(os.path.dirname(path), None, [os.path.basename(path)])]
-    ):
-        for f in sorted(files):
-            with open(os.path.join(root, f), "rb") as fh:
-                parts.append(f"{f}:{hashlib.sha256(fh.read()).hexdigest()[:16]}")
-    return ";".join(parts)
+    files = [path] if not os.path.isdir(path) else sorted(
+        os.path.join(root, f) for root, _, names in os.walk(path) for f in names
+    )
+    return ";".join(f"{os.path.relpath(f, sf_dir)}:{_sha16(f)}" for f in files)
 
 
 def _builder_code_hash() -> str:
@@ -3474,15 +3477,8 @@ def _builder_code_hash() -> str:
     hyperplanes) lives in. Folded into each index stamp so a code change
     WITHOUT a manual version bump still invalidates materialized indexes
     instead of silently serving stale codes."""
-    import hashlib
-
-    src = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "operators",
-        "similarity.py",
-    )
-    with open(src, "rb") as fh:
-        return hashlib.sha256(fh.read()).hexdigest()[:16]
+    package = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return _sha16(os.path.join(package, "operators", "similarity.py"))
 
 
 def _index_stamp(version: str, sf_dir: str) -> str:

@@ -81,6 +81,21 @@ def test_footer_schema_matches_inference_on_unusual_types(spark, tmp_path):
         spark.conf.set(key, prior)
 
 
+def test_footer_schema_of_a_directory_of_part_files(spark, tmp_path):
+    # the layout of a scaled warehouse: one table, many part files, next
+    # to the marker and checksum files a writer leaves, which are not parquet
+    table = tmp_path / "documents.parquet"
+    table.mkdir()
+    tbl = pq.read_table("/root/testdata/sf0.001/documents.parquet")
+    step = (tbl.num_rows + 7) // 8
+    for i in range(8):
+        pq.write_table(tbl.slice(i * step, step), table / f"part-{i:04d}.parquet")
+    (table / "_SUCCESS").write_bytes(b"")
+    (table / ".part-0000.parquet.crc").write_bytes(b"not parquet")
+    assert footer_schema(spark, str(table)) == spark.read.parquet(str(table)).schema
+    assert load_table(spark, str(tmp_path), "documents").count() == tbl.num_rows
+
+
 def test_load_table_reads_with_the_footer_schema(spark):
     df = load_table(spark, "/root/testdata/sf0.001", "lineitem")
     assert df.schema == spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").schema
