@@ -209,7 +209,7 @@ def main() -> None:
     # corpus_* entries run against the committed fixtures/ warehouse at its
     # own fixed scale, not $SPARK_GRAFT_SF_DIR — label honestly so numbers
     # stay scale-comparable round-over-round.
-    from iceberg_benchmark_java_spark.corpus_ref import corpus_fixture_scale
+    from iceberg_benchmark_java_spark.corpus_ref import CORPUS_FIXTURE_SCALE
 
     full = {
         "metric": METRIC,
@@ -227,7 +227,7 @@ def main() -> None:
         },
         "failed": failed,
         "query_sf": {
-            name: (corpus_fixture_scale() if name.startswith("corpus_") else sf_val)
+            name: (CORPUS_FIXTURE_SCALE if name.startswith("corpus_") else sf_val)
             for name in HEADLINE
         },
         "sf": sf_val,

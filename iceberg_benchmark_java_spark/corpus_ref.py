@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .catalog import footer_schema, load_table, table_path
+from .catalog import read_tables
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURES = os.path.join(REPO, "fixtures")
@@ -59,10 +59,6 @@ SUITES = {
 # THIS scale regardless of $SPARK_GRAFT_SF_DIR — bench output labels them
 # with it so round-over-round numbers stay scale-comparable.
 CORPUS_FIXTURE_SCALE = 0.01
-
-
-def corpus_fixture_scale() -> float:
-    return CORPUS_FIXTURE_SCALE
 
 # Spark temp-view names are suite-prefixed so the TPC-H `customer` (unprefixed
 # columns) never collides with the TPC-DS `customer` or the driver-testdata
@@ -235,65 +231,17 @@ def duck_dialect(sql: str) -> str:
 
 
 # Date-surrogate-key partition spec for the partitioned-warehouse axis
-# (partitioned_runner.sh:11-12): the big facts partition by their sold-date
-# key — the column 198 corpus date_dim references prune against. At SF1000
-# that's ~1800 daily partitions per fact, the standard lakehouse layout.
-TPCDS_PARTITION_KEYS: dict[str, str] = {
-    "store_sales": "ss_sold_date_sk",
-    "catalog_sales": "cs_sold_date_sk",
-    "web_sales": "ws_sold_date_sk",
-    "inventory": "inv_date_sk",
+# (partitioned_runner.sh:11-12), in catalog.write_partitioned_warehouse's
+# {table: (partition column, SQL expression)} form: the big facts partition
+# by their sold-date key itself — the column 198 corpus date_dim references
+# prune against. At SF1000 that's ~1800 daily partitions per fact, the
+# standard lakehouse layout.
+TPCDS_PARTITION_KEYS: dict[str, tuple[str, str]] = {
+    "store_sales": ("ss_sold_date_sk", "ss_sold_date_sk"),
+    "catalog_sales": ("cs_sold_date_sk", "cs_sold_date_sk"),
+    "web_sales": ("ws_sold_date_sk", "ws_sold_date_sk"),
+    "inventory": ("inv_date_sk", "inv_date_sk"),
 }
-
-
-def write_partitioned_fixture_warehouse(
-    spark: SparkSession, suite: str, out_dir: str
-) -> dict[str, str]:
-    """Materialize the date-partitioned layout of the fixture facts (once —
-    marker-protected). Returns table → path for the partitioned tables."""
-    from . import fixtures
-
-    fixtures.generate_all()
-    _, fdir, tables = SUITES[suite]
-    keys = TPCDS_PARTITION_KEYS if suite == "tpcds" else {}
-    marker = os.path.join(out_dir, "_ibx_complete")
-    out = {
-        t: os.path.join(out_dir, t) for t in keys if t in tables
-    }
-    if os.path.exists(marker):
-        return {t: p for t, p in out.items() if os.path.isdir(p)}
-    for t, path in out.items():
-        df = load_table(spark, fdir, t)
-        df.write.mode("overwrite").partitionBy(keys[t]).parquet(path)
-    os.makedirs(out_dir, exist_ok=True)
-    # marker only when every expected fact directory materialized (mirrors
-    # catalog.register_views' completeness guard) — and never for suites
-    # with no partitioned facts (tpch), where an empty dir must not read
-    # as a materialized warehouse.
-    if out and all(os.path.isdir(p) for p in out.values()):
-        open(marker, "w").close()
-    return out
-
-
-def _fixture_df(
-    spark: SparkSession, suite: str, table: str, partitioned_dir: str | None
-) -> DataFrame:
-    """The fixture table as a DataFrame, opened by ``catalog.load_table``;
-    from the partitioned layout when available there, with column order
-    AND types restored to the flat file's footer schema (partition-directory
-    read-back reorders the key to the end and narrows int64 keys to int32 —
-    both would break SELECT * parity and join-type resolution for the
-    verbatim corpus)."""
-    _, fdir, _ = SUITES[suite]
-    if partitioned_dir and table in TPCDS_PARTITION_KEYS:
-        part_path = os.path.join(partitioned_dir, table)
-        if os.path.isdir(part_path):
-            ref = footer_schema(spark, table_path(fdir, table))
-            df = spark.read.parquet(part_path)
-            return df.select(
-                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ref.fields]
-            )
-    return load_table(spark, fdir, table)
 
 
 def register_fixture_views(
@@ -317,12 +265,10 @@ def _register(
     from . import fixtures
 
     fixtures.generate_all()  # no-op when the committed parquet is present
-    if partitioned_dir:
-        write_partitioned_fixture_warehouse(spark, suite, partitioned_dir)
-    for t in tables:
-        _fixture_df(spark, suite, t, partitioned_dir).createOrReplaceTempView(
-            t if bare else _view(suite, t)
-        )
+    _, fdir, _ = SUITES[suite]
+    views = read_tables(spark, fdir, tables, TPCDS_PARTITION_KEYS, partitioned_dir)
+    for t, df in views.items():
+        df.createOrReplaceTempView(t if bare else _view(suite, t))
 
 
 def register_bare_views(

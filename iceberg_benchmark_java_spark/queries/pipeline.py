@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table
+from ..catalog import _sha16, _source_fingerprint, ensure_published, load_table
 from ..operators import dedup, similarity, text
 from ..streaming import events as streaming_events
 from .registry import query
@@ -3440,35 +3440,13 @@ _IVF_PQ_INDEX_VERSION = "v1:c16:pq16x8"
 
 def _index_fixture_dir(sf_dir: str, kind: str) -> str:
     """fixtures/<kind>/<slug-of-sf_dir> under the repo root — one
-    materialized index per source warehouse, marker-protected like every
-    generated fixture (fixtures._marker_fresh discipline)."""
+    materialized index per source warehouse, published by
+    catalog.ensure_published."""
     repo = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
     slug = re.sub(r"[^A-Za-z0-9_.-]+", "_", os.path.abspath(sf_dir)).strip("_")
     return os.path.join(repo, "fixtures", kind, slug)
-
-
-def _sha16(path: str) -> str:
-    """The first 16 hex digits of the sha256 of the file at ``path``,
-    read in chunks."""
-    import hashlib
-
-    with open(path, "rb") as fh:
-        return hashlib.file_digest(fh, "sha256").hexdigest()[:16]
-
-
-def _source_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    """Content fingerprint of the table's parquet file or directory tree:
-    the sha256 of every file's bytes, like :func:`_builder_code_hash`. A
-    regenerated warehouse invalidates any derived index built from the old
-    bytes, even at the same size; a copied one, with the same bytes under
-    new timestamps, keeps it."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    files = [path] if not os.path.isdir(path) else sorted(
-        os.path.join(root, f) for root, _, names in os.walk(path) for f in names
-    )
-    return ";".join(f"{os.path.relpath(f, sf_dir)}:{_sha16(f)}" for f in files)
 
 
 def _builder_code_hash() -> str:
@@ -3481,75 +3459,18 @@ def _builder_code_hash() -> str:
     return _sha16(os.path.join(package, "operators", "similarity.py"))
 
 
-def _index_stamp(version: str, sf_dir: str) -> str:
-    return f"{version}:{_builder_code_hash()}\n{_source_fingerprint(sf_dir)}"
-
-
-def _marker_fresh_index(d: str, stamp: str) -> bool:
-    marker = os.path.join(d, "_complete")
-    if not os.path.exists(marker):
-        return False
-    with open(marker) as fh:
-        return fh.read().strip() == stamp
-
-
-def _publish_index(d: str, stamp: str, write_tables) -> None:
-    """Build-once/serve-many publication with a crash-safe, NEAR-atomic
-    swap: ``write_tables(tmp_dir)`` materializes every table into a
-    process-private temp dir, the ``_complete`` marker is written INSIDE
-    it, and only then is the temp dir renamed into place — a reader never
-    scans half-overwritten parquet (an incomplete dir has no marker, so
-    :func:`_marker_fresh_index` sends it back to the builder). The swap
-    is two renames, not one: POSIX cannot atomically exchange two
-    non-empty directories, so between displacing the old dir and
-    publishing the new one the target is briefly ABSENT, and a reader's
-    in-flight scan of the displaced dir can race its removal — acceptable
-    for this repo's fixture indexes (single host, rebuilds only on code/
-    data change), called out here because a production deployment would
-    publish under a versioned path + pointer swap instead. Two concurrent
-    BUILDERS are reconciled: if the final rename finds the target already
-    recreated, the loser accepts the winner's publication when its marker
-    carries the same stamp (same code + data ⇒ same tables) and raises
-    otherwise."""
-    import shutil
-
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    tmp = f"{d}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_tables(tmp)
-    with open(os.path.join(tmp, "_complete"), "w") as fh:
-        fh.write(stamp)
-    old = f"{d}.old.{os.getpid()}"
-    shutil.rmtree(old, ignore_errors=True)
-    try:
-        if os.path.exists(d):
-            os.rename(d, old)
-        os.rename(tmp, d)
-    except OSError:
-        if _marker_fresh_index(d, stamp):  # lost the race to a twin build
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            raise
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def _ensure_index(sf_dir: str, kind: str, version: str, build_write) -> str:
-    """THE materialized-index discipline, shared by every stored-index
+    """The stored-index stamp and directory, shared by every stored-index
     route (RP hyperplanes, IVF-PQ, two-level IVF-Flat, incremental-
     SemDeDup corpus cells): fixtures/<kind>/<warehouse-slug> keyed by a
     stamp of (version, builder-code content hash, source-data
     fingerprint) so an edited builder or regenerated warehouse rebuilds
-    instead of silently serving stale tables; publication via
-    :func:`_publish_index`; read-only when fresh — build once, serve
-    many. ``build_write(tmp_dir)`` runs the build and writes its tables
-    into the temp dir — the only per-index code, so freshness and
-    publication rules cannot drift between routes."""
-    d = _index_fixture_dir(sf_dir, kind)
-    stamp = _index_stamp(version, sf_dir)
-    if _marker_fresh_index(d, stamp):
-        return d
-    _publish_index(d, stamp, build_write)
-    return d
+    instead of silently serving stale tables; freshness and publication
+    are :func:`catalog.ensure_published`'s — build once, serve many.
+    ``build_write(tmp_dir)`` runs the build and writes its tables into
+    the temp dir — the only per-index code."""
+    stamp = f"{version}:{_builder_code_hash()}\n{_source_fingerprint(sf_dir, 'embeddings')}"
+    return ensure_published(_index_fixture_dir(sf_dir, kind), stamp, build_write)
 
 
 def _ensure_ivf_pq_index(spark: SparkSession, sf_dir: str) -> str:

@@ -155,12 +155,13 @@ def test_partitioned_warehouse_prunes(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from iceberg_benchmark_java_spark.catalog import (
+        PARQUET_PARTITION_COLS,
         load_table,
         write_partitioned_warehouse,
     )
 
     paths = write_partitioned_warehouse(
-        spark, SF_SMOKE, str(tmp_path), tables=("lineitem",)
+        spark, SF_SMOKE, str(tmp_path), {"lineitem": PARQUET_PARTITION_COLS["lineitem"]}
     )
     part = spark.read.parquet(paths["lineitem"])
     flat = load_table(spark, SF_SMOKE, "lineitem")

@@ -32,6 +32,7 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from iceberg_benchmark_java_spark.catalog import ensure_published
 from iceberg_benchmark_java_spark.harness import BenchmarkRunner
 from iceberg_benchmark_java_spark.session import build_session, local_test_config
 from tools.run_scaling import timed_run
@@ -140,15 +141,6 @@ MUTATION_RATE = 0.05  # fraction of tokens resampled in a near-dup
 # operator's own documented premise and producing the non-monotone
 # x10/x32/x100 decontamination ratios in SCALING_r10_pipe.json.
 GEN_VERSION = 2
-
-
-def _pipe_marker_fresh(marker: str, scale: int) -> bool:
-    """True when the _complete marker proves the cached warehouse was
-    generated at the requested scale BY THIS GENERATOR VERSION (legacy
-    scale-only markers read as v1 and force a regen)."""
-    if not os.path.exists(marker):
-        return False
-    return open(marker).read().strip() == f"{scale}:g{GEN_VERSION}"
 
 
 def _scaled_doc_ids(n_base: int, n: int) -> np.ndarray:
@@ -271,17 +263,17 @@ def _gen_embeddings(out_path: str, scale: int, rng: np.random.Generator) -> int:
 
 
 def gen_pipe_warehouse(out_dir: str, scale: int) -> None:
-    """Marker-protected N× documents+embeddings warehouse (marker records
-    the scale, mirroring fixtures.py's discipline)."""
-    os.makedirs(out_dir, exist_ok=True)
-    marker = os.path.join(out_dir, "_complete")
-    if _pipe_marker_fresh(marker, scale):
-        return
-    rng = np.random.default_rng(SEED + scale)
-    _gen_documents(os.path.join(out_dir, "documents.parquet"), scale, rng)
-    _gen_embeddings(os.path.join(out_dir, "embeddings.parquet"), scale, rng)
-    with open(marker, "w") as f:
-        f.write(f"{scale}:g{GEN_VERSION}")
+    """N× documents+embeddings warehouse, published by
+    catalog.ensure_published under the stamp "<scale>:g<GEN_VERSION>": a
+    cached warehouse of another scale or generator version (legacy
+    scale-only markers included) is regenerated."""
+
+    def write_tables(tmp: str) -> None:
+        rng = np.random.default_rng(SEED + scale)
+        _gen_documents(os.path.join(tmp, "documents.parquet"), scale, rng)
+        _gen_embeddings(os.path.join(tmp, "embeddings.parquet"), scale, rng)
+
+    ensure_published(out_dir, f"{scale}:g{GEN_VERSION}", write_tables)
 
 
 # A cell whose own best-of runs disagree by more than this carries noise
