@@ -215,10 +215,12 @@ def _publish_index(d: str, stamp: str, write_tables) -> None:
     it, and only then is the temp dir renamed into place — a reader never
     scans half-overwritten parquet (an incomplete dir has no marker, so
     :func:`_marker_fresh_index` sends it back to the builder). A build
-    that raises removes its temp dir and leaves ``d`` as it was. The swap
-    is two renames, not one: POSIX cannot atomically exchange two
-    non-empty directories, so between displacing the old dir and
-    publishing the new one the target is briefly ABSENT, and a reader's
+    that raises removes its temp dir and leaves ``d`` as it was; so does a
+    swap that fails between its renames, which renames the previous
+    publication back before it re-raises. The swap is two renames, not
+    one: POSIX cannot atomically exchange two non-empty directories, so
+    between displacing the old dir and publishing the new one the target
+    is briefly ABSENT, and a reader's
     in-flight scan of the displaced dir can race its removal — acceptable
     for this repo's fixture indexes (single host, rebuilds only on code/
     data change), called out here because a production deployment would
@@ -246,11 +248,13 @@ def _publish_index(d: str, stamp: str, write_tables) -> None:
             os.rename(d, old)
         os.rename(tmp, d)
     except OSError:
-        if _marker_fresh_index(d, stamp):  # lost the race to a twin build
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
+        shutil.rmtree(tmp, ignore_errors=True)
+        if os.path.exists(old) and not os.path.exists(d):
+            os.rename(old, d)  # keep serving the previous publication
+        if not _marker_fresh_index(d, stamp):  # else lost to a twin build
             raise
-    shutil.rmtree(old, ignore_errors=True)
+    finally:
+        shutil.rmtree(old, ignore_errors=True)
 
 
 def ensure_published(d: str, stamp: str, write_tables) -> str:

@@ -66,12 +66,6 @@ def davg(col: Column | str, alias: str) -> Column:
     return (F.sum(c.cast(DEC)).cast("double") / F.count(c)).alias(alias)
 
 
-def dec(col: Column | str) -> Column:
-    """Per-row cast to the standard decimal, for building exact products."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(DEC)
-
-
 # --- matching DuckDB oracle idioms -------------------------------------------
 
 

@@ -3,10 +3,12 @@
 Design (per the engine's 100 TB charter): media payloads are opaque
 ``binary`` columns riding next to typed metadata (mime, width/height,
 duration...). All *plumbing* — schema, partitioning, Arrow batch transfer,
-mapInPandas signatures — is real and tested; the decode kernels themselves
-are STUBBED behind ``DecodeNotAvailable`` / deterministic fakes because the
-media libraries (PIL/ffmpeg/librosa) are not present in this environment.
-Swap ``_decode_image_kernel`` for a real decoder and nothing else changes.
+mapInPandas signatures — is real and tested. The decoders parse the
+formats the standard library can read (binary netpbm images, RIFF/WAVE
+audio, a length-prefixed PPM frame container); any other image payload
+gets deterministic fake dims, because the media libraries
+(PIL/ffmpeg/librosa) are not installed. Swap ``_decode_image_kernel`` for
+a real decoder and nothing else changes.
 
 At scale: binary columns live in parquet/Iceberg alongside metadata, so
 metadata-only queries never read the payload bytes (column pruning), and
@@ -50,10 +52,6 @@ FEATURE_SCHEMA = StructType(
         StructField("decoded_height", IntegerType(), True),
     ]
 )
-
-
-class DecodeNotAvailable(NotImplementedError):
-    """Raised by real-decode paths: media codecs absent in this container."""
 
 
 def synthesize_media(docs: DataFrame) -> DataFrame:
@@ -251,16 +249,6 @@ def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
                 F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n))
             ).alias("frame_idx"),
         )
-    )
-
-
-def metadata_only_stats(media: DataFrame) -> DataFrame:
-    """Metadata aggregate that must NOT read payload bytes (column pruning —
-    verified in tests via the physical plan's ReadSchema)."""
-    return media.groupBy("mime").agg(
-        F.count("*").alias("n_media"),
-        F.avg("meta_width").alias("avg_width"),
-        F.avg("meta_height").alias("avg_height"),
     )
 
 

@@ -548,7 +548,6 @@ def ivf_assignments(
     embeddings: DataFrame,
     n_centroids: int = 16,
     refine_iters: int = 0,
-    two_level: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantization: deterministic centroids + nearest-centroid
     assignment.
@@ -557,27 +556,19 @@ def ivf_assignments(
     distance-aware, deterministic); ``refine_iters > 0`` runs that many
     distributed Lloyd's iterations (:func:`kmeans_refine`) before
     assignment. Assignment is argmax cosine, ties to the lowest cent_id.
-    With ``two_level=None`` the assignment route is chosen by k: flat
-    O(N·k) fold up to TWO_LEVEL_THRESHOLD centroids, the
-    :func:`two_level_assignments` O(N·sqrt(k)) route above it — the
-    switch that keeps the k ∝ N SemDeDup dial affordable.
-
-    .. warning:: the auto-route CHANGES RESULTS past the threshold: the
-       two-level path is an approximation (within-cell-only argmax — a
-       vector whose true nearest fine centroid lives in another coarse
-       cell gets its within-cell best instead). Callers that need exact
-       flat assignment at k > TWO_LEVEL_THRESHOLD must pass
-       ``two_level=False`` explicitly; every in-repo registered entry
-       models the approximate route in its oracle.
+    The assignment route is chosen by k: flat O(N·k) fold up to
+    TWO_LEVEL_THRESHOLD centroids, the :func:`two_level_assignments`
+    O(N·sqrt(k)) route above it — the switch that keeps the k ∝ N
+    SemDeDup dial affordable. Past the threshold the result is the
+    two-level approximation (within-cell-only argmax), which every
+    registered entry models in its oracle.
 
     At 100 TB: centroids are a broadcast single-row array; assignment is a
     map-side fold (no shuffle of the corpus); the assignment would be
     persisted as a partition column so queries prune to probed lists.
     Returns (centroids, assignments).
     """
-    if two_level is None:
-        two_level = n_centroids > TWO_LEVEL_THRESHOLD
-    if two_level:
+    if n_centroids > TWO_LEVEL_THRESHOLD:
         return two_level_assignments(embeddings, n_centroids, refine_iters)
     centroids = seed_centroids(embeddings, n_centroids)
     if refine_iters:
@@ -716,7 +707,7 @@ BANDED_BASE_BITS = 8
 # Slice buckets (leading-dim signs) run out of dimensions at 16 bits
 # (4 bands x 16 = all 64 fixture dims); past BANDED_SLICE_MAX_BITS the
 # banded path switches to hash-seeded random-hyperplane projections
-# (sign_bucket_rp — deterministic, oracle-reproducible), which keep
+# (_rp_band_buckets_arrow — deterministic, oracle-reproducible), which keep
 # doubling bucket counts with the corpus up to BANDED_MAX_BITS = 32
 # (occupancy flat to ~2000·2^24 ≈ 3·10^10 vectors).
 BANDED_SLICE_MAX_BITS = 16
@@ -806,8 +797,8 @@ def sign_bucket_band(emb: Column, band: int, n_bits: int = 8) -> Column:
 # blowup at x100. Two multiply rounds with xor-shift between them break
 # the linearity: measured max inter-bit |corr| 0.27, top bucket
 # occupancy 13 vs 1407 on the same corpus. All intermediates stay below
-# 2^63 (t < 2^22, masked to 31 bits between rounds), so Spark's wrapping
-# and DuckDB's overflow-checked BIGINT agree exactly.
+# 2^63 (t < 2^22, masked to 31 bits between rounds), so Python's exact
+# ints and DuckDB's overflow-checked BIGINT agree exactly.
 RP_MULT_1 = 2654435761  # xxhash/Knuth-style odd multipliers
 RP_MULT_2 = 2246822519
 RP_MASK_31 = (1 << 31) - 1
@@ -815,23 +806,13 @@ RP_DIM_STRIDE = 4096  # supports embeddings up to 4096 dims
 RP_BIT_STRIDE = 64  # up to 64 bits per band
 
 
-def _rp_weight(t: Column) -> Column:
+def _rp_weight_py(t: int) -> int:
     """Pseudo-random weight in [-65536, 65536) from a flat index:
     h = mask31(t·A1); h ^= h>>15; h = mask31(h·A2); h ^= h>>13;
-    w = (h & 131071) - 65536. All-positive BIGINT arithmetic, so
-    shift/mask/xor semantics agree between Spark and DuckDB."""
-    h = (t * F.lit(RP_MULT_1)).bitwiseAND(F.lit(RP_MASK_31))
-    h = h.bitwiseXOR(F.shiftright(h, 15))
-    h = (h * F.lit(RP_MULT_2)).bitwiseAND(F.lit(RP_MASK_31))
-    h = h.bitwiseXOR(F.shiftright(h, 13))
-    return h.bitwiseAND(F.lit(131071)) - F.lit(65536)
-
-
-def _rp_weight_py(t: int) -> int:
-    """Driver-side twin of :func:`_rp_weight` — identical all-positive
-    integer arithmetic (Python ints are exact), so a weight table built
-    here is bit-identical to the runtime-hash column expression and to
-    the DuckDB oracle's replay."""
+    w = (h & 131071) - 65536. All-positive integer arithmetic (Python
+    ints are exact), so the weights are bit-identical to the DuckDB
+    oracle's replay (queries.pipeline._duck_rp_bucket). Called only by
+    :func:`rp_hyperplane_weights`, the one weight derivation."""
     h = (t * RP_MULT_1) & RP_MASK_31
     h ^= h >> 15
     h = (h * RP_MULT_2) & RP_MASK_31
@@ -847,8 +828,9 @@ def rp_hyperplane_weights(
     ``dim`` ints from :func:`_rp_weight_py`). This is the table
     production PERSISTS next to the other index fixtures — the whole ANN
     surface then serves from stored artifacts, with no per-query
-    derivation left — and the structure :func:`sign_bucket_rp` accepts
-    back via ``weights`` so stored and derived routes share one fold."""
+    derivation left — and the structure :func:`_rp_band_buckets_arrow`
+    takes back as ``rp_weights``, so stored and derived weights go
+    through one kernel."""
     return {
         b: [
             [
@@ -859,127 +841,6 @@ def rp_hyperplane_weights(
         ]
         for b in range(n_bands)
     }
-
-
-def sign_bucket_rp(
-    emb: Column,
-    band: int,
-    n_bits: int = 8,
-    dim: int | None = None,
-    pre_quantized: bool = False,
-    weights: list[list[int]] | None = None,
-) -> Column:
-    """Random-hyperplane sign bucket: bit j = sign of the fixed-point dot
-    product of the FULL vector with hyperplane (band, j). Unlike
-    :func:`sign_bucket_band` the bit count is not bounded by the
-    dimensionality — the band's hyperplanes are distinct by seeding, not
-    by slicing disjoint dims.
-
-    With ``dim`` known (the production path — callers probe it once), the
-    hyperplane weights are PRECOMPUTED driver-side into one literal array
-    per bit (:func:`_rp_weight_py` — bit-identical ints) and each bit is a
-    zip-multiply fold over the once-quantized vector: per element that is
-    a lookup + multiply + add instead of re-running the 10-op hash mix and
-    the float quantization per (bit × element) — the same "broadcast the
-    hyperplane matrix, don't rehash per row" shape a 100 TB scan wants
-    (measured 17.7 s → ~8 s for the registered 18-bit entry at sf0.01).
-    ``pre_quantized=True`` means ``emb`` already holds the floor(x·1e6)
-    BIGINT array (callers hoist the quantization into a shared column) —
-    it is only meaningful on the literal route, so combining it with
-    ``dim=None`` raises instead of silently re-quantizing fixed-point
-    values. Without ``dim`` the runtime-hash fallback keeps the old
-    shape for dimension-agnostic callers. All routes emit identical
-    buckets **only for fixed-width corpora where every vector has
-    exactly ``dim`` elements** (the fixture invariant; callers probe
-    ``dim`` via :func:`embedding_dim`): the literal route's ``zip_with``
-    NULL-pads a shorter vector (NULL products collapse the bit to '0')
-    while the runtime-hash route hashes exactly the elements present —
-    heterogeneous-length vectors would diverge between routes, so mixed
-    widths must go through the runtime-hash route (``dim=None``).
-
-    ``weights`` short-circuits the weight derivation entirely: a list of
-    ``n_bits`` per-bit weight vectors for THIS band (one band's slice of
-    :func:`rp_hyperplane_weights`, typically read back from the persisted
-    fixtures/rp_hyperplanes parquet — with ``weights`` given, ``band`` is
-    intentionally unused: the slice already IS the band). Same literal
-    fold, same buckets — the serve-shaped route where even the
-    driver-side hash mix is a stored artifact instead of a per-query
-    derivation. Requires ``dim`` (the literal route). The slice shape is
-    VALIDATED against (n_bits, dim): a stored tensor built at a narrower
-    dial, or the wrong band's slice, must fail loudly here instead of
-    producing wrong buckets or an opaque error at plan build.
-    """
-    if pre_quantized and dim is None:
-        raise ValueError(
-            "pre_quantized=True requires dim: the runtime-hash fallback "
-            "would re-apply floor(x*1e6) to already-quantized values"
-        )
-    if weights is not None:
-        if dim is None:
-            raise ValueError(
-                "weights requires dim: stored hyperplanes only feed the "
-                "literal route"
-            )
-        if len(weights) != n_bits:
-            raise ValueError(
-                f"sign_bucket_rp: weights carries {len(weights)} "
-                f"hyperplanes but n_bits={n_bits} was requested — the "
-                "stored tensor was built at a different bit dial (or the "
-                "wrong band's slice was passed); rebuild the stored "
-                "hyperplanes or request the stored width"
-            )
-        bad = next((j for j, w in enumerate(weights) if len(w) != dim), None)
-        if bad is not None:
-            raise ValueError(
-                f"sign_bucket_rp: hyperplane {bad} carries "
-                f"{len(weights[bad])} weights but dim={dim} — the stored "
-                "tensor was built for a different embedding width"
-            )
-    if dim is not None:
-        qx = (
-            emb
-            if pre_quantized
-            else F.transform(
-                emb,
-                lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast("long"),
-            )
-        )
-        bits = []
-        for j in range(n_bits):
-            w = (
-                weights[j]
-                if weights is not None
-                else [
-                    _rp_weight_py((band * RP_BIT_STRIDE + j) * RP_DIM_STRIDE + i)
-                    for i in range(dim)
-                ]
-            )
-            s = F.aggregate(
-                F.zip_with(qx, F.lit(w), lambda x, wv: x * wv),
-                F.lit(0).cast("long"),
-                lambda acc, p: acc + p,
-            )
-            bits.append(F.when(s >= 0, F.lit("1")).otherwise(F.lit("0")))
-        return F.concat(*bits)
-
-    def bit(j: Column) -> Column:
-        prods = F.transform(
-            emb,
-            lambda x, i: _rp_weight(
-                (
-                    (F.lit(band) * RP_BIT_STRIDE + j) * RP_DIM_STRIDE + i
-                ).cast("long")
-            )
-            * F.floor(x.cast("double") * F.lit(1000000.0)).cast("long"),
-        )
-        s = F.aggregate(
-            prods, F.lit(0).cast("long"), lambda acc, p: acc + p
-        )
-        return F.when(s >= 0, F.lit("1")).otherwise(F.lit("0"))
-
-    return F.array_join(
-        F.transform(F.sequence(F.lit(0), F.lit(n_bits - 1)), bit), ""
-    )
 
 
 def _rp_band_buckets_arrow(
@@ -999,38 +860,53 @@ def _rp_band_buckets_arrow(
     Arrow for the registered 18-bit × 4-band dial at 8 000 rows, plus
     ~11 s of per-query py4j expression build eliminated).
 
-    EXACT same buckets as :func:`sign_bucket_rp` (pinned by
+    The same buckets as the DuckDB replay
+    :func:`queries.pipeline._duck_rp_bucket` (pinned row for row by
     tests/test_operators.py::test_rp_arrow_route_matches_expression_route):
-    the quantization is the identical float64 multiply + floor, weights are
-    the identical :func:`_rp_weight_py` ints (or the stored tensor), and
-    the dot product is exact int64 arithmetic (|qx| ≲ 1e7 · |w| < 2^17 ·
-    dim ≤ 4096 stays far below 2^63), where summation order cannot matter.
+    the quantization is the same float64 multiply + floor, weights are the
+    :func:`rp_hyperplane_weights` ints (derived here, or ``rp_weights``,
+    the stored tensor), and the dot product is exact int64 arithmetic
+    (|qx| ≲ 1e7 · |w| < 2^17 · dim ≤ 4096 stays far below 2^63), where
+    summation order cannot matter.
+
+    A stored tensor is read back from parquet, so its shape is checked
+    against (n_bands, n_bits, dim) here: a tensor built at another dial or
+    for another embedding width raises a ``ValueError`` naming the
+    mismatch instead of producing wrong buckets.
 
     Requires fixed-width vectors of exactly ``dim`` elements (the fixture
-    invariant — same contract as the literal route of sign_bucket_rp).
+    invariant; callers probe ``dim`` via :func:`embedding_dim`).
     """
     import numpy as np
     import pandas as pd
 
-    if rp_weights is not None:
-        w_cols = [rp_weights[b][j] for b in range(n_bands) for j in range(n_bits)]
-        for c in w_cols:
-            if len(c) != dim:
-                raise ValueError(
-                    f"_rp_band_buckets_arrow: stored hyperplane carries "
-                    f"{len(c)} weights but dim={dim}"
-                )
-        w_mat = [[w_cols[k][i] for k in range(n_bands * n_bits)] for i in range(dim)]
+    if rp_weights is None:
+        rp_weights = rp_hyperplane_weights(dim, n_bits, n_bands)
+    elif sorted(rp_weights) != list(range(n_bands)):
+        raise ValueError(
+            f"_rp_band_buckets_arrow: stored tensor carries bands "
+            f"{sorted(rp_weights)} but n_bands={n_bands} — it was built at "
+            "a different band dial"
+        )
     else:
-        w_mat = [
-            [
-                _rp_weight_py((b * RP_BIT_STRIDE + j) * RP_DIM_STRIDE + i)
-                for b in range(n_bands)
-                for j in range(n_bits)
-            ]
-            for i in range(dim)
-        ]
-    w_arr = np.array(w_mat, dtype=np.int64)  # (dim, n_bands*n_bits)
+        for b, per_bit in rp_weights.items():
+            if len(per_bit) != n_bits:
+                raise ValueError(
+                    f"_rp_band_buckets_arrow: band {b} carries "
+                    f"{len(per_bit)} hyperplanes but n_bits={n_bits} — "
+                    "the stored tensor was built at a different bit dial"
+                )
+            bad = next((j for j, w in enumerate(per_bit) if len(w) != dim), None)
+            if bad is not None:
+                raise ValueError(
+                    f"_rp_band_buckets_arrow: hyperplane ({b}, {bad}) carries "
+                    f"{len(per_bit[bad])} weights but dim={dim} — the stored "
+                    "tensor was built for a different embedding width"
+                )
+    w_arr = np.array(
+        [rp_weights[b][j] for b in range(n_bands) for j in range(n_bits)],
+        dtype=np.int64,
+    ).T  # (dim, n_bands*n_bits)
     vid_type = embeddings.schema["vec_id"].dataType.simpleString()
 
     def buckets(batches):
@@ -1070,7 +946,7 @@ def cosine_near_dup_pairs_banded(
     the single-band bucket, so the candidate set is a superset of
     :func:`cosine_near_dup_pairs` — the recall-closing move the
     single-slice path documents. Past 16 bits the bands switch to
-    hash-seeded random-hyperplane signs (:func:`sign_bucket_rp`): the
+    hash-seeded random-hyperplane signs (:func:`_rp_band_buckets_arrow`): the
     superset identity no longer holds, but bucket counts keep doubling
     with the corpus instead of capping when the slice dims run out.
 
@@ -1086,7 +962,7 @@ def cosine_near_dup_pairs_banded(
 
     ``rp_weights``: a persisted hyperplane tensor
     (:func:`rp_hyperplane_weights`, band → per-bit weight vectors) for
-    the RP route — same buckets as the derived literals, sourced from a
+    the RP route — same buckets as the derived weights, sourced from a
     stored artifact (fixtures/rp_hyperplanes) instead of a per-query
     derivation. Ignored on the slice route (<= BANDED_SLICE_MAX_BITS),
     which has no hyperplanes.
@@ -1095,9 +971,8 @@ def cosine_near_dup_pairs_banded(
         n_bits = adaptive_sign_bits(embeddings.count())
     # slice buckets while dims last; hash-seeded hyperplanes beyond —
     # the deterministic rule the oracles mirror (CASE on the bit width).
-    # The RP route probes the dimensionality once (1-row job) so the
-    # hyperplane weights become driver-built literals instead of a per-
-    # element runtime hash — same buckets, ~3x less per-row arithmetic.
+    # The RP route probes the dimensionality once (1-row job) to size the
+    # driver-built hyperplane matrix.
     if n_bits <= BANDED_SLICE_MAX_BITS:
         slim = embeddings.select(
             "vec_id",
@@ -1121,10 +996,7 @@ def cosine_near_dup_pairs_banded(
         )
     else:
         # RP route: ONE Arrow-batched int64 matmul per batch instead of
-        # n_bands × n_bits interpreted HOF folds per row (guide §4.2) —
-        # bit-identical buckets to sign_bucket_rp's literal route, pinned
-        # by test_rp_arrow_route_matches_expression_route. The dim probe
-        # is the same 1-row job the literal route paid.
+        # n_bands × n_bits interpreted HOF folds per row (guide §4.2).
         slim = _rp_band_buckets_arrow(
             embeddings,
             n_bits,

@@ -28,16 +28,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: Column) -> Column:
-    """A BPE-ish proxy: word-piece count after splitting on word boundaries
-    AND digit/letter transitions, ~ sub-word granularity without a
-    vocabulary. Deterministic regex split, JVM-side."""
-    pieces = F.split(
-        F.trim(col), r"(\s+|(?<=[a-z])(?=[0-9])|(?<=[0-9])(?=[a-z]))"
-    )
-    return F.size(pieces)
-
-
 def stopword_ratio(col: Column, markers: tuple[str, ...] = EN_MARKERS) -> Column:
     toks = tokens(col)
     hits = F.size(F.filter(toks, lambda t: t.isin(*markers)))

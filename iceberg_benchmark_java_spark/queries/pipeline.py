@@ -831,13 +831,14 @@ _DUCK_NB = """nb AS (
 
 
 def _duck_rp_bucket(b_expr: str, bits_expr: str, ee: str = "ee") -> str:
-    """DuckDB mirror of similarity.sign_bucket_rp: bit j of band b is the
-    sign of the exact BIGINT sum over dims of
-    weight((b*64 + j)*4096 + dim) * floor(x*1e6), with the xorshift-
-    multiply weight mix (h = mask31(t*A1); h ^= h>>15; h = mask31(h*A2);
-    h ^= h>>13; w = (h & 131071) - 65536) — all-positive shift/mask/xor
-    arithmetic, identical on the Spark side; the nonlinearity is what
-    keeps adjacent hyperplanes decorrelated (similarity.py comment)."""
+    """DuckDB mirror of the banded-RP kernel
+    similarity._rp_band_buckets_arrow: bit j of band b is the sign of the
+    exact BIGINT sum over dims of weight((b*64 + j)*4096 + dim) *
+    floor(x*1e6), with the xorshift-multiply weight mix (h = mask31(t*A1);
+    h ^= h>>15; h = mask31(h*A2); h ^= h>>13; w = (h & 131071) - 65536) —
+    all-positive shift/mask/xor arithmetic, the same as
+    similarity._rp_weight_py; the nonlinearity is what keeps adjacent
+    hyperplanes decorrelated (similarity.py comment)."""
     from ..operators.similarity import (
         RP_BIT_STRIDE,
         RP_DIM_STRIDE,
@@ -944,9 +945,9 @@ def embedding_near_dup_banded_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     x43.3/unmeasurable at a fixed 8-bit dial, SCALING_r06_pipe.json).
     Past 16 bits (where 4 band slices would exhaust the 64 dims) the
     bands switch to deterministic random-hyperplane signs
-    (similarity.sign_bucket_rp, modeled by the oracle's CASE), lifting
-    the former 16-bit cap to 32 — occupancy stays flat to ~3·10^10
-    vectors."""
+    (similarity._rp_band_buckets_arrow, modeled by the oracle's CASE),
+    lifting the former 16-bit cap to 32 — occupancy stays flat to
+    ~3·10^10 vectors."""
     e = load_table(spark, sf_dir, "embeddings")
     return similarity.cosine_near_dup_pairs_banded(
         e.select("vec_id", "embedding"), threshold=0.25, n_bands=4
@@ -970,7 +971,7 @@ _RP_OFFSET = 1 << 40
 # Shared verbatim by pipe_embedding_near_dup_rp and its stored-hyperplane
 # serve twin: byte-identical oracle text means hash-equality between the
 # two entries pins that the persisted weight table reproduces the derived
-# literals' buckets exactly.
+# weights' buckets exactly.
 _RP_NEAR_DUP_ORACLE = f"""
     WITH e AS (SELECT vec_id + r * {_RP_OFFSET} AS vec_id,
                       CAST(embedding AS DOUBLE[]) AS ee
@@ -1000,9 +1001,10 @@ def embedding_near_dup_rp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded near-dup through the RANDOM-HYPERPLANE kernel at a forced
     18-bit width (> BANDED_SLICE_MAX_BITS, the route the adaptive dial
     takes past ~2·10^6 vectors) over the x4-replica-inflated corpus:
-    hash-seeded fixed-point hyperplane signs (similarity.sign_bucket_rp
-    — exact BIGINT sums through the xorshift-multiply weight mix, so
-    buckets are bit-identical across engines), 4 bands, exact cosine
+    hash-seeded fixed-point hyperplane signs
+    (similarity._rp_band_buckets_arrow — exact int64 sums through the
+    xorshift-multiply weight mix, so buckets are bit-identical across
+    engines), 4 bands, exact cosine
     ≥ 0.25 re-rank. Registered so the driver's gate hash-checks the
     lifted-dial kernel itself, not just the slice route the fixture's
     8-bit dial exercises; the oracle replays the weight mix with pure
@@ -1069,7 +1071,7 @@ def embedding_near_dup_rp_served_q(
     with the same marker discipline as the IVF-PQ and two-level indexes.
     The oracle text is byte-identical to the derived twin's, so both
     entries hash-green means the stored tensor reproduces the derived
-    literals' buckets exactly (additionally pinned row-for-row by
+    weights' buckets exactly (additionally pinned row-for-row by
     tests/test_operators.py::test_rp_hyperplane_store_roundtrip)."""
     d = _ensure_rp_hyperplanes(spark, sf_dir)
     hp = spark.read.parquet(os.path.join(d, "hyperplanes")).collect()

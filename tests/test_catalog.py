@@ -214,7 +214,8 @@ def test_publication_interrupted_between_its_renames_heals(tmp_path, monkeypatch
     monkeypatch.setattr(os, "rename", rename_failing_second)
     with pytest.raises(OSError):
         ensure_published(str(d), "b", _writes("b"))
-    assert not d.exists()
+    assert _marker_fresh_index(str(d), "a")
+    assert _no_leftovers(d) == []
     monkeypatch.setattr(os, "rename", real_rename)
     ensure_published(str(d), "b", _writes("b"))
     assert _marker_fresh_index(str(d), "b")

@@ -279,39 +279,6 @@ def test_banded_rp_route_matches_duckdb(spark):
     assert not errs, "; ".join(errs)
 
 
-def test_rp_literal_route_equals_runtime_hash_route(spark):
-    """sign_bucket_rp has two evaluation routes — driver-built literal
-    weight arrays (the fast registered path; `dim` known) and the
-    original per-element runtime hash mix (`dim=None` fallback). They
-    must emit IDENTICAL buckets for every vector, band, and width,
-    otherwise the round-8 optimization silently changed results."""
-    from pyspark.sql import functions as F
-
-    from iceberg_benchmark_java_spark.operators.similarity import (
-        sign_bucket_rp,
-    )
-    from tests.conftest import SF_SMOKE
-
-    emb = (
-        spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .limit(80)
-    )
-    dim = len(emb.first()["embedding"])
-    checks = emb.select(
-        *[
-            (
-                sign_bucket_rp(F.col("embedding"), b, nb, dim=dim)
-                == sign_bucket_rp(F.col("embedding"), b, nb)
-            ).alias(f"eq_{b}_{nb}")
-            for b in (0, 3)
-            for nb in (17, 20, 32)
-        ]
-    )
-    bad = checks.filter(~F.expr(" AND ".join(c for c in checks.columns)))
-    assert bad.count() == 0, "literal and runtime RP routes disagree"
-
-
 def test_rp_bucket_bit_balance_and_decorrelation():
     """Hyperplane signs must be roughly balanced per bit (each added bit
     halves expected occupancy) AND pairwise decorrelated — the first

@@ -1281,14 +1281,67 @@ def test_incremental_semantic_dedup_ordering_guard(spark):
     assert out2.count() == 4
 
 
+def _rp_rows(n: int) -> list[tuple[int, list[float]]]:
+    """n fixed-width 8-dim vectors with negative, zero and non-dyadic
+    elements, so floor(x·1e6) is exercised on both sides of zero."""
+    return [
+        (i, [((i * 11 + j * 5) % 17 - 8) / 7.0 for j in range(8)])
+        for i in range(n)
+    ]
+
+
+def _duck_rp_rows(rows, n_bits: int, n_bands: int) -> list[tuple]:
+    """(vec_id, band_idx, bucket) rows of the DuckDB replay the banded-RP
+    oracles use (queries.pipeline._duck_rp_bucket) — an independent
+    derivation of the hyperplane weights in pure integer SQL."""
+    import duckdb
+
+    from iceberg_benchmark_java_spark.queries.pipeline import _duck_rp_bucket
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE e (vec_id BIGINT, ee DOUBLE[])")
+    con.executemany("INSERT INTO e VALUES (?, ?)", rows)
+    return con.execute(
+        f"""SELECT vec_id, CAST(t.b AS INTEGER) AS band_idx,
+               {_duck_rp_bucket("t.b", str(n_bits))} AS bucket
+        FROM e, UNNEST(generate_series(0, {n_bands - 1})) AS t(b)"""
+    ).fetchall()
+
+
+def test_package_derives_rp_weights_once():
+    """_rp_weight_py( is called in the package only inside
+    rp_hyperplane_weights: one derivation of the hyperplane weights,
+    which the kernel and the stored tensor both take."""
+    import ast
+    from pathlib import Path
+
+    package = Path(similarity.__file__).resolve().parent.parent
+    callers = []
+    for p in sorted(package.rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        defs = [
+            (n.lineno, n.end_lineno, n.name)
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for n in ast.walk(tree):
+            f = getattr(n, "func", None)
+            if getattr(f, "id", getattr(f, "attr", None)) == "_rp_weight_py":
+                inner = max(
+                    (d for d in defs if d[0] <= n.lineno <= d[1]),
+                    default=(0, 0, "<module>"),
+                )
+                callers.append(f"{p.relative_to(package)}:{inner[2]}")
+    assert callers == ["operators/similarity.py:rp_hyperplane_weights"]
+
+
 def test_rp_hyperplane_store_roundtrip(spark, tmp_path):
     """The persisted hyperplane tensor must reproduce the derived
-    literals' buckets exactly: build rp_hyperplane_weights, round-trip it
-    through parquet, and pin sign_bucket_rp(weights=stored) equal to the
-    derived route row-for-row (and to the runtime-hash route, closing
-    the loop on all three ways of producing the same bucket)."""
-    rows = [(i, [((i * 7 + j * 3) % 13 - 6) / 4.0 for j in range(8)]) for i in range(40)]
-    e = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    weights' buckets exactly: build rp_hyperplane_weights, round-trip it
+    through parquet, and pin the kernel's rows on the stored tensor equal
+    to its rows on the derived one. A stored tensor of the wrong shape
+    fails with a ValueError naming the mismatch."""
+    e = spark.createDataFrame(_rp_rows(40), ["vec_id", "embedding"])
     w = similarity.rp_hyperplane_weights(dim=8, n_bits=10, n_bands=2)
     hp = spark.createDataFrame(
         [(b, j, wv) for b, per in w.items() for j, wv in enumerate(per)],
@@ -1301,32 +1354,19 @@ def test_rp_hyperplane_store_roundtrip(spark, tmp_path):
         back.setdefault(r.band, {})[r.bit] = list(r.w)
     stored = {b: [bits[j] for j in sorted(bits)] for b, bits in back.items()}
     assert stored == w  # exact integer round-trip
-    for band in (0, 1):
-        cols = e.select(
-            "vec_id",
-            similarity.sign_bucket_rp(
-                F.col("embedding"), band, 10, dim=8
-            ).alias("derived"),
-            similarity.sign_bucket_rp(
-                F.col("embedding"), band, 10, dim=8, weights=stored[band]
-            ).alias("served"),
-            similarity.sign_bucket_rp(F.col("embedding"), band, 10).alias(
-                "runtime"
-            ),
-        ).collect()
-        assert all(r.derived == r.served == r.runtime for r in cols)
-    with pytest.raises(ValueError, match="weights requires dim"):
-        similarity.sign_bucket_rp(F.col("embedding"), 0, 10, weights=stored[0])
-    # stored tensor at a narrower dial than requested: loud, named error
+    derived = similarity._rp_band_buckets_arrow(e, 10, 2, 8).collect()
+    served = similarity._rp_band_buckets_arrow(
+        e, 10, 2, 8, rp_weights=stored
+    ).collect()
+    assert len(derived) == 80
+    assert sorted(map(tuple, served)) == sorted(map(tuple, derived))
+    # stored tensor at another dial or width than requested: loud, named
     with pytest.raises(ValueError, match="different bit dial"):
-        similarity.sign_bucket_rp(
-            F.col("embedding"), 0, 12, dim=8, weights=stored[0]
-        )
-    # stored tensor built for a different embedding width
+        similarity._rp_band_buckets_arrow(e, 12, 2, 8, rp_weights=stored)
+    with pytest.raises(ValueError, match="different band dial"):
+        similarity._rp_band_buckets_arrow(e, 10, 3, 8, rp_weights=stored)
     with pytest.raises(ValueError, match="different embedding width"):
-        similarity.sign_bucket_rp(
-            F.col("embedding"), 0, 10, dim=9, weights=stored[0]
-        )
+        similarity._rp_band_buckets_arrow(e, 10, 2, 9, rp_weights=stored)
 
 
 def test_source_overlap_known_jaccard(spark):
@@ -2079,65 +2119,23 @@ def test_dup_span_removal_planted_and_reconciles(spark):
 
 def test_rp_arrow_route_matches_expression_route(spark):
     """The Arrow-batched NumPy kernel (_rp_band_buckets_arrow) must emit
-    exactly the expression route\'s (vec_id, band_idx, bucket) rows — same
-    float64 quantization, same _rp_weight_py ints, exact int64 dot — for
-    both the derived and the stored-tensor weight sources. This is the
-    equality that keeps the banded-RP entries\' oracle hashes invariant
-    under the §4.2 vectorization."""
-    rows = [
-        (i, [((i * 11 + j * 5) % 17 - 8) / 4.0 for j in range(8)])
-        for i in range(60)
-    ]
+    exactly the (vec_id, band_idx, bucket) rows of the DuckDB replay the
+    oracles use — same float64 quantization, same xorshift-multiply
+    weights, exact integer dot — for both the derived and the
+    stored-tensor weight sources. This is the equality that keeps the
+    banded-RP entries' oracle hashes invariant."""
+    rows = _rp_rows(60)
     e = spark.createDataFrame(rows, ["vec_id", "embedding"])
     n_bits, n_bands, dim = 18, 2, 8
-    qx = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast("long"),
-    )
-    expr_rows = (
-        e.select("vec_id", qx.alias("_qx"))
-        .select(
-            "vec_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).cast("int").alias("band_idx"),
-                            similarity.sign_bucket_rp(
-                                F.col("_qx"),
-                                b,
-                                n_bits,
-                                dim=dim,
-                                pre_quantized=True,
-                            ).alias("bucket"),
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("bb"),
-        )
-        .select("vec_id", "bb.band_idx", "bb.bucket")
-    )
-    arrow_rows = similarity._rp_band_buckets_arrow(e, n_bits, n_bands, dim)
-    assert (
-        arrow_rows.exceptAll(expr_rows).count() == 0
-        and expr_rows.exceptAll(arrow_rows).count() == 0
-    )
-    # stored-tensor source: same rows again
+    want = sorted(_duck_rp_rows(rows, n_bits, n_bands))
+    assert len(want) == 120 and len({r[2] for r in want}) > 1
+    derived = similarity._rp_band_buckets_arrow(e, n_bits, n_bands, dim)
+    assert sorted(map(tuple, derived.collect())) == want
     w = similarity.rp_hyperplane_weights(dim=dim, n_bits=n_bits, n_bands=n_bands)
-    arrow_stored = similarity._rp_band_buckets_arrow(
+    stored = similarity._rp_band_buckets_arrow(
         e, n_bits, n_bands, dim, rp_weights=w
     )
-    assert (
-        arrow_stored.exceptAll(expr_rows).count() == 0
-        and expr_rows.exceptAll(arrow_stored).count() == 0
-    )
-    # shape mismatch in a stored tensor fails loudly
-    import pytest as _pytest
-
-    bad = {b: [wv[:-1] for wv in per] for b, per in w.items()}
-    with _pytest.raises(ValueError, match="weights but dim"):
-        similarity._rp_band_buckets_arrow(e, n_bits, n_bands, dim, rp_weights=bad)
+    assert sorted(map(tuple, stored.collect())) == want
 
 
 def test_cosine_arrow_matches_expression_route(spark):

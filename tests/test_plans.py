@@ -573,13 +573,42 @@ def test_unigram_logprob_broadcasts_vocab(spark):
 @pytest.fixture(scope="module")
 def tpcds_part_dir(spark, tmp_path_factory):
     """Materialize + register the date-partitioned TPC-DS fixture facts;
-    restore the flat views afterwards so later tests see the flat axis."""
+    restore the flat views afterwards so later tests see the flat axis.
+
+    The facts come from a copy of the suite that keeps only the sold
+    dates these tests read (every November for q03, March 2000 for the
+    DPP probe), so the layout writes hundreds of partitions, not
+    thousands; q03 returns the same rows on the copy as on the full
+    fixtures."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     from iceberg_benchmark_java_spark import corpus_ref
 
+    real = corpus_ref.SUITES["tpcds"]
+    fixtures = tmp_path_factory.mktemp("tpcds_fixtures") / "tpcds"
+    shutil.copytree(real[1], fixtures)
+    dates = pq.read_table(fixtures / "date_dim.parquet")
+    read_months = pc.or_(
+        pc.equal(dates["d_moy"], 11),
+        pc.and_(pc.equal(dates["d_year"], 2000), pc.equal(dates["d_moy"], 3)),
+    )
+    read_dates = dates["d_date_sk"].filter(read_months)
+    for t, (key, _) in corpus_ref.TPCDS_PARTITION_KEYS.items():
+        path = fixtures / f"{t}.parquet"
+        tbl = pq.read_table(path)
+        pq.write_table(tbl.filter(pc.is_in(tbl[key], read_dates)), path)
+
+    corpus_ref.SUITES["tpcds"] = (real[0], str(fixtures), real[2])
     d = str(tmp_path_factory.mktemp("tpcds_part"))
-    corpus_ref.register_fixture_views(spark, "tpcds", partitioned_dir=d)
-    yield d
-    corpus_ref.register_fixture_views(spark, "tpcds")
+    try:
+        corpus_ref.register_fixture_views(spark, "tpcds", partitioned_dir=d)
+        yield d
+    finally:
+        corpus_ref.SUITES["tpcds"] = real
+        corpus_ref.register_fixture_views(spark, "tpcds")
 
 
 @pytest.mark.slow
