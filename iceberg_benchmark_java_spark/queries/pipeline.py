@@ -14,6 +14,7 @@ rounding of every ratio.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 
@@ -21,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import _sha16, _source_fingerprint, ensure_published, load_table
+from ..catalog import _source_fingerprint, ensure_published, load_table
 from ..operators import dedup, similarity, text
 from ..streaming import events as streaming_events
 from .registry import query
@@ -78,6 +79,13 @@ def _duck_h60(expr: str) -> str:
         "list_sum(list_transform(generate_series(1,15), hx -> "
         f"(strpos('0123456789abcdef', substr(md5({expr}), hx, 1)) - 1)::BIGINT"
         " * (1::BIGINT << (4 * (15 - hx)))))"
+    )
+
+
+def _duck_cos(a: str, b: str) -> str:
+    return (
+        f"ROUND(list_dot_product({a}, {b}) / "
+        f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
     )
 
 
@@ -160,9 +168,11 @@ def ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- MinHash + LSH candidates ------------------------------------------------
-# Shared CTE chain (shingles -> signatures -> band keys), reused verbatim by
-# the candidates oracle and the dedup-graph-stats oracle so the two can
-# never drift.
+# Shared CTE chain (shingles -> signatures -> band keys). All eight MinHash
+# oracles open with it (candidates, estimator quality, clusters, decision,
+# incremental dedup, graph stats, method agreement, savings), so their
+# signatures can never drift; the two connected-component oracles put
+# WITH RECURSIVE in front of it.
 _DUCK_MINHASH_BANDS = f"""{_DUCK_SHINGLES},
     sig AS (
       SELECT doc_id,
@@ -240,15 +250,7 @@ def simhash_near_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "pipe_minhash_est_quality",
     oracle=f"""
-    WITH {_DUCK_SHINGLES},
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(substr(md5(concat('{'a' if k < dedup.N_HASHES // 2 else 'b'}|', shingle)), {(k % (dedup.N_HASHES // 2)) * 8 + 1}, 8)) AS h{k}" for k in range(dedup.N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, {b} AS band_idx, concat(h{2 * b}, h{2 * b + 1}) AS band_key FROM sig" for b in range(dedup.N_HASHES // dedup.BAND_SIZE))}
-    ),
+    WITH {_DUCK_MINHASH_BANDS},
     cand AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b
@@ -339,15 +341,7 @@ def minhash_est_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "pipe_dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE {_DUCK_SHINGLES},
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(substr(md5(concat('{'a' if k < dedup.N_HASHES // 2 else 'b'}|', shingle)), {(k % (dedup.N_HASHES // 2)) * 8 + 1}, 8)) AS h{k}" for k in range(dedup.N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, {b} AS band_idx, concat(h{2 * b}, h{2 * b + 1}) AS band_key FROM sig" for b in range(dedup.N_HASHES // dedup.BAND_SIZE))}
-    ),
+    WITH RECURSIVE {_DUCK_MINHASH_BANDS},
     pairs AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b
@@ -390,15 +384,7 @@ def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "pipe_dedup_decision",
     oracle=f"""
-    WITH RECURSIVE {_DUCK_SHINGLES},
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(substr(md5(concat('{'a' if k < dedup.N_HASHES // 2 else 'b'}|', shingle)), {(k % (dedup.N_HASHES // 2)) * 8 + 1}, 8)) AS h{k}" for k in range(dedup.N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, {b} AS band_idx, concat(h{2 * b}, h{2 * b + 1}) AS band_key FROM sig" for b in range(dedup.N_HASHES // dedup.BAND_SIZE))}
-    ),
+    WITH RECURSIVE {_DUCK_MINHASH_BANDS},
     pairs AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b
@@ -499,11 +485,104 @@ def simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- brute-force cosine top-k ------------------------------------------------
+# The ANN evaluation scaffold, one copy per engine: vectors 0-9 are the
+# query set, and an approximate path is scored by recall@5, the share of
+# its top-5 that lies in the exact cosine top-5 (ties to the lowest vec_id
+# on both sides).
 _DUCK_ANN_BASE = """
   q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
         FROM embeddings WHERE vec_id < 10),
   e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ee FROM embeddings)
 """
+
+# Exact top-5 (btop) over CTEs q(query_id, qe) and e(vec_id, ee).
+_DUCK_EXACT_TOP5 = f"""bs AS (
+      SELECT query_id, vec_id,
+             ROW_NUMBER() OVER (PARTITION BY query_id
+               ORDER BY {_duck_cos("qe", "ee")} DESC, vec_id) AS rn
+      FROM q, e WHERE query_id <> vec_id),
+    btop AS (SELECT query_id, vec_id FROM bs WHERE rn <= 5)"""
+
+
+def _duck_recall_at_5(top: str, method: str | None = None) -> str:
+    """Per-query recall@5 of the CTE ``top`` against btop: one row per
+    query, 0.0 when nothing hits, led by a ``method`` tag if given."""
+    lead = f"'{method}' AS method, " if method else ""
+    return f"""SELECT {lead}q.query_id, COUNT(b.vec_id) / 5.0 AS recall_at_5
+    FROM q
+    LEFT JOIN {top} t ON t.query_id = q.query_id
+    LEFT JOIN btop b ON b.query_id = t.query_id AND b.vec_id = t.vec_id
+    GROUP BY q.query_id"""
+
+
+def _duck_avg_recall_at_5(top: str) -> str:
+    """Recall@5 of the CTE ``top`` averaged over the query set (6dp), the
+    measure of one sweep row."""
+    return f"""ROUND((SELECT COUNT(*) FROM {top} t JOIN btop b
+                  ON b.query_id = t.query_id AND b.vec_id = t.vec_id)
+                 / ((SELECT COUNT(*) FROM q) * 5.0), 6) AS avg_recall"""
+
+
+def _ann_queries(e: DataFrame, *extra) -> DataFrame:
+    """The query set: vectors 0-9 of ``e`` as (query_id, q_embedding),
+    plus any ``extra`` columns."""
+    return e.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_embedding"),
+        *extra,
+    )
+
+
+def _exact_top5(e: DataFrame, q: DataFrame) -> DataFrame:
+    """(query_id, vec_id) of the exact cosine top-5 of each query in ``q``."""
+    return similarity.cosine_topk_bruteforce(e, q, k=5).select(
+        "query_id", "vec_id"
+    )
+
+
+def _hits(approx: DataFrame, exact: DataFrame) -> DataFrame:
+    return approx.select("query_id", "vec_id").join(exact, ["query_id", "vec_id"])
+
+
+def _recall_at_5(
+    q: DataFrame, exact: DataFrame, approx: DataFrame, method: str | None = None
+) -> DataFrame:
+    """Per-query recall@5 of ``approx`` against ``exact``: one row per
+    query, 0.0 when nothing hits, led by a ``method`` tag if given."""
+    hits = _hits(approx, exact).groupBy("query_id").agg(F.count("*").alias("n_hits"))
+    lead = [F.lit(method).alias("method")] if method else []
+    return (
+        q.select("query_id")
+        .join(hits, "query_id", "left")
+        .select(
+            *lead,
+            "query_id",
+            (F.coalesce(F.col("n_hits"), F.lit(0)) / F.lit(5.0)).alias(
+                "recall_at_5"
+            ),
+        )
+    )
+
+
+def _avg_recall_at_5(
+    q: DataFrame, exact: DataFrame, sweep: list[tuple[dict, DataFrame]]
+) -> DataFrame:
+    """One row per (dials, approx) of ``sweep``: the dials as int columns,
+    then recall@5 of ``approx`` averaged over the query set (6dp)."""
+    nq = q.agg(F.count("*").alias("n_q"))
+    parts = [
+        _hits(approx, exact)
+        .agg(F.count("*").alias("n_hits"))
+        .crossJoin(F.broadcast(nq))
+        .select(
+            *[F.lit(v).cast("int").alias(k) for k, v in dials.items()],
+            F.round(F.col("n_hits") / (F.col("n_q") * F.lit(5.0)), 6).alias(
+                "avg_recall"
+            ),
+        )
+        for dials, approx in sweep
+    ]
+    return functools.reduce(DataFrame.unionAll, parts)
 
 
 @query(
@@ -529,9 +608,7 @@ def ann_cosine_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness baseline. Dot products via zip_with/aggregate fold (JVM,
     codegen); float→double promotion keeps both engines bit-identical."""
     e = load_table(spark, sf_dir, "embeddings")
-    queries_df = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
+    queries_df = _ann_queries(e)
     return similarity.cosine_topk_bruteforce(e.select("vec_id", "embedding"), queries_df, k=5)
 
 
@@ -564,9 +641,7 @@ def ann_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed ANN: sign-LSH on the leading 8 dims restricts candidates to
     one bucket (equi-join instead of cross join) — the 100 TB query path."""
     e = load_table(spark, sf_dir, "embeddings")
-    queries_df = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
+    queries_df = _ann_queries(e)
     return similarity.cosine_topk_lsh(e.select("vec_id", "embedding"), queries_df, k=5)
 
 
@@ -612,28 +687,16 @@ def curation_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- IVF ANN -----------------------------------------------------------------
-def _duck_cos(a: str, b: str) -> str:
-    return (
-        f"ROUND(list_dot_product({a}, {b}) / "
-        f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-    )
-
-
-def _duck_ivf_oracle(refine_iters: int, final_select: str | None = None) -> str:
-    """DuckDB oracle for cosine_topk_ivf(k=5, n_centroids=16, n_probe=4),
-    with ``refine_iters`` unrolled Lloyd's iterations — generated from one
-    template so the refined and unrefined entries can never drift.
-    ``final_select`` swaps the top-k tail for a different projection over
-    the same CTEs (e.g. list-size diagnostics over ``assign``).
-
-    Mirrors operators/similarity.py exactly: sign-orthant seeding (4 bits,
-    min vec_id per bucket, cent_id ranked by bucket), argmax-cosine
-    assignment with lowest-cent_id ties, and fixed-point member means
-    (floor(val·1e6) BIGINT sums — order-independent, so bit-identical to
-    Spark's distributed aggregation — rounded to 4dp)."""
-    its = []
-    for i in range(1, refine_iters + 1):
-        its.append(f"""
+def _duck_ivf_assign(refine_iters: int = 0) -> str:
+    """The flat IVF index CTEs over e(vec_id, ee), ending in
+    assign(vec_id, cent_id) against cent{refine_iters}. Mirrors
+    operators/similarity.py exactly: sign-orthant seeding (eb -> cent0: 4
+    bits, min vec_id per bucket, cent_id ranked by bucket), then
+    ``refine_iters`` unrolled Lloyd's iterations with fixed-point member
+    means (floor(val·1e6) BIGINT sums — order-independent, so
+    bit-identical to Spark's distributed aggregation — rounded to 4dp),
+    then argmax-cosine assignment with lowest-cent_id ties."""
+    its = "".join(f"""
     a{i} AS (
       SELECT vec_id, cent_id, ee FROM (
         SELECT e.vec_id, c.cent_id, e.ee,
@@ -650,23 +713,32 @@ def _duck_ivf_oracle(refine_iters: int, final_select: str | None = None) -> str:
       SELECT c.cent_id, COALESCE(m.ce2, c.ce) AS ce
       FROM cent{i - 1} c LEFT JOIN (
         SELECT cent_id, list(mv ORDER BY pos) AS ce2 FROM m{i} GROUP BY cent_id
-      ) m USING (cent_id))""")
-    cent = f"cent{refine_iters}"
-    return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ee FROM embeddings),
-    eb AS (SELECT vec_id, array_to_string(list_transform(ee[1:4],
+      ) m USING (cent_id)),""" for i in range(1, refine_iters + 1))
+    return f"""eb AS (SELECT vec_id, array_to_string(list_transform(ee[1:4],
              x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '') AS bucket FROM e),
     cent0 AS (
       SELECT CAST(ROW_NUMBER() OVER (ORDER BY b.bucket) AS INTEGER) - 1 AS cent_id,
              e2.ee AS ce
       FROM (SELECT bucket, MIN(vec_id) AS vec_id FROM eb GROUP BY bucket) b
-      JOIN e e2 USING (vec_id)),{",".join(its)}{"," if its else ""}
+      JOIN e e2 USING (vec_id)),{its}
     assign AS (
       SELECT vec_id, cent_id FROM (
         SELECT e.vec_id, c.cent_id,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id
                  ORDER BY {_duck_cos("e.ee", "c.ce")} DESC, c.cent_id) AS rn
-        FROM e, {cent} c) x WHERE rn = 1),
+        FROM e, cent{refine_iters} c) x WHERE rn = 1)"""
+
+
+def _duck_ivf_oracle(refine_iters: int, final_select: str | None = None) -> str:
+    """DuckDB oracle for cosine_topk_ivf(k=5, n_centroids=16, n_probe=4),
+    with ``refine_iters`` unrolled Lloyd's iterations — generated from one
+    template so the refined and unrefined entries can never drift.
+    ``final_select`` swaps the top-k tail for a different projection over
+    the same CTEs (e.g. list-size diagnostics over ``assign``)."""
+    cent = f"cent{refine_iters}"
+    return f"""
+    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ee FROM embeddings),
+    {_duck_ivf_assign(refine_iters)},
     q AS (SELECT vec_id AS query_id, ee AS qe FROM e WHERE vec_id < 10),
     probes AS (
       SELECT query_id, cent_id FROM (
@@ -696,9 +768,7 @@ def ann_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 probed lists per query, exact cosine re-rank — the third ANN path
     beside brute-force and sign-LSH."""
     e = load_table(spark, sf_dir, "embeddings")
-    queries_df = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
+    queries_df = _ann_queries(e)
     return similarity.cosine_topk_ivf(
         e.select("vec_id", "embedding"), queries_df, k=5, n_centroids=16, n_probe=4
     )
@@ -712,9 +782,7 @@ def ann_ivf_refined_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     means make the iteration bit-reproducible across engines, so this
     entry is fully hash-checked rather than rows-only."""
     e = load_table(spark, sf_dir, "embeddings")
-    queries_df = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
+    queries_df = _ann_queries(e)
     return similarity.cosine_topk_ivf(
         e.select("vec_id", "embedding"), queries_df,
         k=5, n_centroids=16, n_probe=4, refine_iters=2,
@@ -725,38 +793,24 @@ def ann_ivf_refined_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PROBE_SWEEP = (1, 2, 4, 8)
 
 
-def _duck_probe_sweep_oracle() -> str:
+def _duck_probe_sweep_oracle(index: str, sweep: tuple[int, ...]) -> str:
+    """avg recall@5 per probed-list count in ``sweep`` over an IVF index
+    whose CTEs ``index`` (WITH ... assign) define e, cent0 and assign:
+    each query ranks every list once, and tp{p} re-ranks the members of
+    its first p lists. One template for the flat and two-level sweeps."""
     seeds = f"""
-    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ee FROM embeddings),
-    eb AS (SELECT vec_id, array_to_string(list_transform(ee[1:4],
-             x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '') AS bucket FROM e),
-    cent0 AS (
-      SELECT CAST(ROW_NUMBER() OVER (ORDER BY b.bucket) AS INTEGER) - 1 AS cent_id,
-             e2.ee AS ce
-      FROM (SELECT bucket, MIN(vec_id) AS vec_id FROM eb GROUP BY bucket) b
-      JOIN e e2 USING (vec_id)),
-    assign AS (
-      SELECT vec_id, cent_id FROM (
-        SELECT e.vec_id, c.cent_id,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_duck_cos("e.ee", "c.ce")} DESC, c.cent_id) AS rn
-        FROM e, cent0 c) x WHERE rn = 1),
     q AS (SELECT vec_id AS query_id, ee AS qe FROM e WHERE vec_id < 10),
     qscore AS (
       SELECT query_id, cent_id,
              ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY {_duck_cos("qe", "c.ce")} DESC, c.cent_id) AS probe_rank
+               ORDER BY {_duck_cos("qe", "c.ce")} DESC, c.cent_id)
+               AS probe_rank
       FROM q, cent0 c),
     cand AS (
       SELECT p.query_id, p.probe_rank, a.vec_id
       FROM qscore p JOIN assign a USING (cent_id)
       WHERE p.query_id <> a.vec_id),
-    bs AS (
-      SELECT query_id, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY {_duck_cos("qe", "ee")} DESC, vec_id) AS rn
-      FROM q, e WHERE query_id <> vec_id),
-    btop AS (SELECT query_id, vec_id FROM bs WHERE rn <= 5)"""
+    {_DUCK_EXACT_TOP5}"""
     tops = ",".join(
         f"""
     tp{p} AS (
@@ -767,20 +821,26 @@ def _duck_probe_sweep_oracle() -> str:
         FROM cand c JOIN q ON q.query_id = c.query_id
         JOIN e ON e.vec_id = c.vec_id
         WHERE c.probe_rank <= {p}) x WHERE rnk <= 5)"""
-        for p in _PROBE_SWEEP
+        for p in sweep
     )
     selects = " UNION ALL ".join(
         f"""
     SELECT CAST({p} AS INTEGER) AS n_probe,
-           ROUND((SELECT COUNT(*) FROM tp{p} t JOIN btop b
-                  ON b.query_id = t.query_id AND b.vec_id = t.vec_id)
-                 / ((SELECT COUNT(*) FROM q) * 5.0), 6) AS avg_recall"""
-        for p in _PROBE_SWEEP
+           {_duck_avg_recall_at_5(f"tp{p}")}"""
+        for p in sweep
     )
-    return f"WITH {seeds},{tops} {selects}"
+    return f"{index},{seeds},{tops} {selects}"
 
 
-@query("pipe_ann_probe_sweep", oracle=_duck_probe_sweep_oracle())
+@query(
+    "pipe_ann_probe_sweep",
+    oracle=_duck_probe_sweep_oracle(
+        f"""
+    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ee FROM embeddings),
+    {_duck_ivf_assign()}""",
+        _PROBE_SWEEP,
+    ),
+)
 def ann_probe_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF recall as a function of probed lists (n_probe ∈ 1,2,4,8):
     average recall@5 vs brute force across the query set — the measured
@@ -788,33 +848,12 @@ def ann_probe_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     The index (centroids + assignments) is built once per probe setting by
     the operator under test; candidates are bounded by the probed lists."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    brute = similarity.cosine_topk_bruteforce(e, q, k=5).select(
-        "query_id", "vec_id"
-    )
-    nq = q.agg(F.count("*").alias("n_q"))
-    parts = []
-    for p in _PROBE_SWEEP:
-        hits = (
-            similarity.cosine_topk_ivf(e, q, k=5, n_centroids=16, n_probe=p)
-            .select("query_id", "vec_id")
-            .join(brute, ["query_id", "vec_id"])
-            .agg(F.count("*").alias("n_hits"))
-        )
-        parts.append(
-            hits.crossJoin(F.broadcast(nq)).select(
-                F.lit(p).cast("int").alias("n_probe"),
-                F.round(
-                    F.col("n_hits") / (F.col("n_q") * F.lit(5.0)), 6
-                ).alias("avg_recall"),
-            )
-        )
-    out = parts[0]
-    for df in parts[1:]:
-        out = out.unionAll(df)
-    return out
+    q = _ann_queries(e)
+    return _avg_recall_at_5(q, _exact_top5(e, q), [
+        ({"n_probe": p},
+         similarity.cosine_topk_ivf(e, q, k=5, n_centroids=16, n_probe=p))
+        for p in _PROBE_SWEEP
+    ])
 
 
 # --- embedding-cosine near-duplicate pairs -----------------------------------
@@ -1771,23 +1810,14 @@ _DUCK_SQ8 = """
     oracle=f"""
     WITH {_DUCK_ANN_BASE},
     {_DUCK_SQ8},
-    bs AS (
-      SELECT query_id, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY {_duck_cos("qe", "ee")} DESC, vec_id) AS rn
-      FROM q, e WHERE query_id <> vec_id),
-    btop AS (SELECT query_id, vec_id FROM bs WHERE rn <= 5),
+    {_DUCK_EXACT_TOP5},
     ss AS (
       SELECT query_id, vec_id,
              ROW_NUMBER() OVER (PARTITION BY query_id
                ORDER BY {_duck_cos("dq", "de")} DESC, vec_id) AS rn
       FROM qdq, edq WHERE query_id <> vec_id),
     stop AS (SELECT query_id, vec_id FROM ss WHERE rn <= 5)
-    SELECT q.query_id, COUNT(b.vec_id) / 5.0 AS recall_at_5
-    FROM q
-    LEFT JOIN stop t ON t.query_id = q.query_id
-    LEFT JOIN btop b ON b.query_id = t.query_id AND b.vec_id = t.vec_id
-    GROUP BY q.query_id
+    {_duck_recall_at_5("stop")}
     """,
 )
 def ann_sq8_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1801,28 +1831,8 @@ def ann_sq8_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast row; quantize/dequantize is a narrow JVM transform; no
     extra shuffle beyond the scoring join."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    brute = similarity.cosine_topk_bruteforce(e, q, k=5).select(
-        "query_id", "vec_id"
-    )
-    sq = similarity.sq8_topk(e, q, k=5).select("query_id", "vec_id")
-    hits = (
-        sq.join(brute, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    return (
-        q.select("query_id")
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            (F.coalesce(F.col("n_hits"), F.lit(0)) / F.lit(5.0)).alias(
-                "recall_at_5"
-            ),
-        )
-    )
+    q = _ann_queries(e)
+    return _recall_at_5(q, _exact_top5(e, q), similarity.sq8_topk(e, q, k=5))
 
 
 # --- ANN recall@k: approximate paths scored against brute force --------------
@@ -1830,12 +1840,7 @@ def ann_sq8_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipe_ann_recall",
     oracle=f"""
     WITH {_DUCK_ANN_BASE},
-    bs AS (
-      SELECT query_id, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY {_duck_cos("qe", "ee")} DESC, vec_id) AS rn
-      FROM q, e WHERE query_id <> vec_id),
-    btop AS (SELECT query_id, vec_id FROM bs WHERE rn <= 5),
+    {_DUCK_EXACT_TOP5},
     qb AS (SELECT query_id, qe, array_to_string(list_transform(qe[1:8],
              x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '') AS bucket FROM q),
     eb8 AS (SELECT vec_id, ee, array_to_string(list_transform(ee[1:8],
@@ -1846,18 +1851,10 @@ def ann_sq8_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                ORDER BY {_duck_cos("qe", "ee")} DESC, vec_id) AS rn
       FROM qb JOIN eb8 USING (bucket) WHERE query_id <> vec_id),
     ltop AS (SELECT query_id, vec_id FROM ls WHERE rn <= 5),
-    itop AS (SELECT query_id, vec_id FROM ({_duck_ivf_oracle(0)})),
-    methods AS (
-      SELECT 'lsh' AS method, query_id, vec_id FROM ltop
-      UNION ALL
-      SELECT 'ivf' AS method, query_id, vec_id FROM itop)
-    SELECT m.method, q.query_id,
-           COUNT(b.vec_id) / 5.0 AS recall_at_5
-    FROM (SELECT 'lsh' AS method UNION ALL SELECT 'ivf') m
-    CROSS JOIN q
-    LEFT JOIN methods t ON t.method = m.method AND t.query_id = q.query_id
-    LEFT JOIN btop b ON b.query_id = t.query_id AND b.vec_id = t.vec_id
-    GROUP BY m.method, q.query_id
+    itop AS (SELECT query_id, vec_id FROM ({_duck_ivf_oracle(0)}))
+    {_duck_recall_at_5("ltop", "lsh")}
+    UNION ALL
+    {_duck_recall_at_5("itop", "ivf")}
     """,
 )
 def ann_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1867,33 +1864,13 @@ def ann_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameters (bits, lists, probes) are recalling enough. Deterministic:
     every path's top-k set is exactly reproducible in both engines."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
+    q = _ann_queries(e)
+    exact = _exact_top5(e, q)
+    lsh = similarity.cosine_topk_lsh(e, q, k=5)
+    ivf = similarity.cosine_topk_ivf(e, q, k=5, n_centroids=16, n_probe=4)
+    return _recall_at_5(q, exact, lsh, "lsh").unionAll(
+        _recall_at_5(q, exact, ivf, "ivf")
     )
-    brute = similarity.cosine_topk_bruteforce(e, q, k=5).select("query_id", "vec_id")
-    approx = {
-        "lsh": similarity.cosine_topk_lsh(e, q, k=5),
-        "ivf": similarity.cosine_topk_ivf(e, q, k=5, n_centroids=16, n_probe=4),
-    }
-    qids = q.select("query_id")
-    parts = []
-    for method, df in approx.items():
-        hits = (
-            df.select("query_id", "vec_id")
-            .join(brute, ["query_id", "vec_id"])
-            .groupBy("query_id")
-            .agg(F.count("*").alias("n_hits"))
-        )
-        parts.append(
-            qids.join(hits, "query_id", "left").select(
-                F.lit(method).alias("method"),
-                "query_id",
-                (F.coalesce(F.col("n_hits"), F.lit(0)) / F.lit(5.0)).alias(
-                    "recall_at_5"
-                ),
-            )
-        )
-    return parts[0].unionAll(parts[1])
 
 
 # --- video frame sampling (explode-then-decode shape) ------------------------
@@ -2072,15 +2049,7 @@ def quality_filter_decision_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "pipe_incremental_lsh_dedup",
     oracle=f"""
-    WITH {_DUCK_SHINGLES},
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"MIN(substr(md5(concat('{'a' if k < dedup.N_HASHES // 2 else 'b'}|', shingle)), {(k % (dedup.N_HASHES // 2)) * 8 + 1}, 8)) AS h{k}" for k in range(dedup.N_HASHES))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, {b} AS band_idx, concat(h{2 * b}, h{2 * b + 1}) AS band_key FROM sig" for b in range(dedup.N_HASHES // dedup.BAND_SIZE))}
-    ),
+    WITH {_DUCK_MINHASH_BANDS},
     cand AS (
       SELECT nb.doc_id AS new_id, cb.doc_id AS corpus_id
       FROM bands nb JOIN bands cb
@@ -3039,18 +3008,8 @@ def pq_codebook_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM scores) x
       WHERE rn <= 5
     ),
-    bs AS (
-      SELECT query_id, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY {_duck_cos("qe", "ee")} DESC, vec_id) AS rn
-      FROM q, e WHERE query_id <> vec_id),
-    btop AS (SELECT query_id, vec_id FROM bs WHERE rn <= 5)
-    SELECT 'pq_adc' AS method, q.query_id,
-           COUNT(b.vec_id) / 5.0 AS recall_at_5
-    FROM q
-    LEFT JOIN ptop t ON t.query_id = q.query_id
-    LEFT JOIN btop b ON b.query_id = t.query_id AND b.vec_id = t.vec_id
-    GROUP BY q.query_id
+    {_DUCK_EXACT_TOP5}
+    {_duck_recall_at_5("ptop", "pq_adc")}
     """,
 )
 def ann_pq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3065,30 +3024,13 @@ def ann_pq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01 - well below lsh/ivf, which is the point of pinning it: the
     compression-recall tradeoff is a measured dial, not a guess."""
     e = load_table(spark, sf_dir, "embeddings")
-    queries_df = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_embedding"),
-    )
+    queries_df = _ann_queries(e)
     corpus = e.select("vec_id", "embedding")
-    exact = similarity.cosine_topk_bruteforce(corpus, queries_df, k=5).select(
-        "query_id", "vec_id"
-    )
-    pq = similarity.pq_adc_topk(corpus, queries_df, k=5).select(
-        "query_id", "vec_id"
-    )
-    hits = (
-        pq.join(exact, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    return (
-        queries_df.select("query_id")
-        .join(hits, "query_id", "left")
-        .select(
-            F.lit("pq_adc").alias("method"),
-            "query_id",
-            (F.coalesce(F.col("n_hits"), F.lit(0)) / 5.0).alias("recall_at_5"),
-        )
+    return _recall_at_5(
+        queries_df,
+        _exact_top5(corpus, queries_df),
+        similarity.pq_adc_topk(corpus, queries_df, k=5),
+        "pq_adc",
     )
 
 
@@ -3097,29 +3039,17 @@ def _duck_ivf_pq_oracle(
     final_select: str, n_probe: int = 4, refine_k: int = 32
 ) -> str:
     """DuckDB oracle for similarity.ivf_pq_topk(k=5, n_centroids=16,
-    ``n_probe``, ``refine_k``) — the IVF seed/assign/probe CTEs of
-    _duck_ivf_oracle composed with the PQ codebook/LUT/ADC CTEs of
-    _DUCK_PQ_BASE, scores restricted to probed lists, exact-cosine refine
-    of the refine_k-deep ADC shortlist. ``final_select`` swaps the tail so
-    the top-k entry, its recall companion, and the tuned recall entry
-    share every CTE; the dials are template parameters so the tuned
-    config (from the registered probe sweep) can never drift from the
-    baseline's derivation."""
+    ``n_probe``, ``refine_k``) — the IVF index CTEs of _duck_ivf_assign
+    and the probe CTE of _duck_ivf_oracle composed with the PQ
+    codebook/LUT/ADC CTEs of _DUCK_PQ_BASE, scores restricted to probed
+    lists, exact-cosine refine of the refine_k-deep ADC shortlist.
+    ``final_select`` swaps the tail so the top-k entry, its recall
+    companion, and the tuned recall entry share every CTE; the dials are
+    template parameters so the tuned config (from the registered probe
+    sweep) can never drift from the baseline's derivation."""
     return f"""
     WITH {_DUCK_PQ_BASE},
-    eb AS (SELECT vec_id, array_to_string(list_transform(ee[1:4],
-             x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '') AS bucket FROM e),
-    cent0 AS (
-      SELECT CAST(ROW_NUMBER() OVER (ORDER BY b.bucket) AS INTEGER) - 1 AS cent_id,
-             e2.ee AS ce
-      FROM (SELECT bucket, MIN(vec_id) AS vec_id FROM eb GROUP BY bucket) b
-      JOIN e e2 USING (vec_id)),
-    assign AS (
-      SELECT vec_id, cent_id FROM (
-        SELECT e.vec_id, c.cent_id,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_duck_cos("e.ee", "c.ce")} DESC, c.cent_id) AS rn
-        FROM e, cent0 c) x WHERE rn = 1),
+    {_duck_ivf_assign()},
     q AS (SELECT vec_id AS query_id, ee AS qe FROM e WHERE vec_id < 10),
     probes AS (
       SELECT query_id, cent_id FROM (
@@ -3174,9 +3104,7 @@ def ann_ivf_pq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     only. Completes the ANN family: brute / LSH / IVF / SQ8 / PQ-ADC /
     two-level IVF / IVF-PQ."""
     e = load_table(spark, sf_dir, "embeddings")
-    queries_df = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
+    queries_df = _ann_queries(e)
     return similarity.ivf_pq_topk(
         e.select("vec_id", "embedding"), queries_df,
         k=5, n_centroids=16, n_probe=4, refine_k=32,
@@ -3185,20 +3113,10 @@ def ann_ivf_pq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pipe_ann_ivf_pq_recall",
-    oracle=_duck_ivf_pq_oracle("""
-    , bs AS (
-      SELECT query_id, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY {cos} DESC, vec_id) AS rn
-      FROM q, e WHERE query_id <> vec_id),
-    btop AS (SELECT query_id, vec_id FROM bs WHERE rn <= 5)
-    SELECT 'ivf_pq' AS method, q.query_id,
-           COUNT(b.vec_id) / 5.0 AS recall_at_5
-    FROM q
-    LEFT JOIN rtop t ON t.query_id = q.query_id
-    LEFT JOIN btop b ON b.query_id = t.query_id AND b.vec_id = t.vec_id
-    GROUP BY q.query_id
-    """.replace("{cos}", _duck_cos("qe", "ee"))),
+    oracle=_duck_ivf_pq_oracle(f"""
+    , {_DUCK_EXACT_TOP5}
+    {_duck_recall_at_5("rtop", "ivf_pq")}
+    """),
 )
 def ann_ivf_pq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the composed IVF-PQ path against exact cosine top-5 —
@@ -3218,32 +3136,14 @@ def _ivf_pq_recall(
     """Shared builder for the IVF-PQ recall entries: per-query recall@5
     of similarity.ivf_pq_topk at the given dials vs exact brute force."""
     e = load_table(spark, sf_dir, "embeddings")
-    queries_df = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_embedding"),
-    )
+    queries_df = _ann_queries(e)
     corpus = e.select("vec_id", "embedding")
-    exact = similarity.cosine_topk_bruteforce(corpus, queries_df, k=5).select(
-        "query_id", "vec_id"
-    )
+    exact = _exact_top5(corpus, queries_df)
     ivfpq = similarity.ivf_pq_topk(
         corpus, queries_df, k=5, n_centroids=16,
         n_probe=n_probe, refine_k=refine_k,
-    ).select("query_id", "vec_id")
-    hits = (
-        ivfpq.join(exact, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
     )
-    return (
-        queries_df.select("query_id")
-        .join(hits, "query_id", "left")
-        .select(
-            F.lit(method).alias("method"),
-            "query_id",
-            (F.coalesce(F.col("n_hits"), F.lit(0)) / 5.0).alias("recall_at_5"),
-        )
-    )
+    return _recall_at_5(queries_df, exact, ivfpq, method)
 
 
 # The IVF-PQ route's tuned dials, sized by the registered probe sweep
@@ -3261,21 +3161,10 @@ _IVF_PQ_TUNED_REFINE_K = 128
 
 @query(
     "pipe_ann_ivf_pq_recall_tuned",
-    oracle=_duck_ivf_pq_oracle("""
-    , bs AS (
-      SELECT query_id, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY {cos} DESC, vec_id) AS rn
-      FROM q, e WHERE query_id <> vec_id),
-    btop AS (SELECT query_id, vec_id FROM bs WHERE rn <= 5)
-    SELECT 'ivf_pq_tuned' AS method, q.query_id,
-           COUNT(b.vec_id) / 5.0 AS recall_at_5
-    FROM q
-    LEFT JOIN rtop t ON t.query_id = q.query_id
-    LEFT JOIN btop b ON b.query_id = t.query_id AND b.vec_id = t.vec_id
-    GROUP BY q.query_id
-    """.replace("{cos}", _duck_cos("qe", "ee")),
-    n_probe=_IVF_PQ_TUNED_PROBE, refine_k=_IVF_PQ_TUNED_REFINE_K),
+    oracle=_duck_ivf_pq_oracle(f"""
+    , {_DUCK_EXACT_TOP5}
+    {_duck_recall_at_5("rtop", "ivf_pq_tuned")}
+    """, n_probe=_IVF_PQ_TUNED_PROBE, refine_k=_IVF_PQ_TUNED_REFINE_K),
 )
 def ann_ivf_pq_recall_tuned_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF-PQ recall entry at the TUNED dials: the round-9 sweep
@@ -3313,19 +3202,7 @@ def _duck_ivf_pq_sweep_oracle() -> str:
     guarantees the sweep measures exactly the registered index."""
     shared = f"""
     WITH {_DUCK_PQ_BASE},
-    eb AS (SELECT vec_id, array_to_string(list_transform(ee[1:4],
-             x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '') AS bucket FROM e),
-    cent0 AS (
-      SELECT CAST(ROW_NUMBER() OVER (ORDER BY b.bucket) AS INTEGER) - 1 AS cent_id,
-             e2.ee AS ce
-      FROM (SELECT bucket, MIN(vec_id) AS vec_id FROM eb GROUP BY bucket) b
-      JOIN e e2 USING (vec_id)),
-    assign AS (
-      SELECT vec_id, cent_id FROM (
-        SELECT e.vec_id, c.cent_id,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_duck_cos("e.ee", "c.ce")} DESC, c.cent_id) AS rn
-        FROM e, cent0 c) x WHERE rn = 1),
+    {_duck_ivf_assign()},
     q AS (SELECT vec_id AS query_id, ee AS qe FROM e WHERE vec_id < 10),
     qscore AS (
       SELECT query_id, cent_id,
@@ -3346,12 +3223,7 @@ def _duck_ivf_pq_sweep_oracle() -> str:
       JOIN lut l ON l.query_id = p.query_id AND l.s = c.s AND l.code = c.code
       WHERE p.query_id <> a.vec_id
       GROUP BY 1, 2, 3),
-    bs AS (
-      SELECT query_id, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY {_duck_cos("qe", "ee")} DESC, vec_id) AS rn
-      FROM q, e WHERE query_id <> vec_id),
-    btop AS (SELECT query_id, vec_id FROM bs WHERE rn <= 5)"""
+    {_DUCK_EXACT_TOP5}"""
     tails = ",".join(
         f"""
     sh_{p}_{rk} AS (
@@ -3372,9 +3244,7 @@ def _duck_ivf_pq_sweep_oracle() -> str:
     selects = " UNION ALL ".join(
         f"""
     SELECT CAST({p} AS INTEGER) AS n_probe, CAST({rk} AS INTEGER) AS refine_k,
-           ROUND((SELECT COUNT(*) FROM rt_{p}_{rk} t JOIN btop b
-                  ON b.query_id = t.query_id AND b.vec_id = t.vec_id)
-                 / ((SELECT COUNT(*) FROM q) * 5.0), 6) AS avg_recall"""
+           {_duck_avg_recall_at_5(f"rt_{p}_{rk}")}"""
         for p, rk in _IVF_PQ_SWEEP
     )
     return f"{shared},{tails} {selects}"
@@ -3400,38 +3270,17 @@ def ann_ivf_pq_probe_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     and rank-limits it per combo, so the index under test is provably
     the registered one."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    brute = similarity.cosine_topk_bruteforce(e, q, k=5).select(
-        "query_id", "vec_id"
-    )
-    nq = q.agg(F.count("*").alias("n_q"))
+    q = _ann_queries(e)
+    exact = _exact_top5(e, q)
     # the index is deterministic: build it once, sweep the query path
     centroids, index, cb = similarity.build_ivf_pq_index(e, n_centroids=16)
-    parts = []
-    for p, rk in _IVF_PQ_SWEEP:
-        hits = (
-            similarity.ivf_pq_topk_from_index(
-                centroids, index, cb, e, q, k=5, n_probe=p, refine_k=rk
-            )
-            .select("query_id", "vec_id")
-            .join(brute, ["query_id", "vec_id"])
-            .agg(F.count("*").alias("n_hits"))
-        )
-        parts.append(
-            hits.crossJoin(F.broadcast(nq)).select(
-                F.lit(p).cast("int").alias("n_probe"),
-                F.lit(rk).cast("int").alias("refine_k"),
-                F.round(
-                    F.col("n_hits") / (F.col("n_q") * F.lit(5.0)), 6
-                ).alias("avg_recall"),
-            )
-        )
-    out = parts[0]
-    for df in parts[1:]:
-        out = out.unionAll(df)
-    return out
+    return _avg_recall_at_5(q, exact, [
+        ({"n_probe": p, "refine_k": rk},
+         similarity.ivf_pq_topk_from_index(
+             centroids, index, cb, e, q, k=5, n_probe=p, refine_k=rk
+         ))
+        for p, rk in _IVF_PQ_SWEEP
+    ])
 
 
 # --- build-once / query-many: the IVF-PQ index persisted to parquet ----------
@@ -3451,27 +3300,45 @@ def _index_fixture_dir(sf_dir: str, kind: str) -> str:
     return os.path.join(repo, "fixtures", kind, slug)
 
 
-def _builder_code_hash() -> str:
-    """Content hash of operators/similarity.py — the module every stored
-    index's build path (seeding, assignment, PQ codes, codebooks, RP
-    hyperplanes) lives in. Folded into each index stamp so a code change
-    WITHOUT a manual version bump still invalidates materialized indexes
-    instead of silently serving stale codes."""
-    package = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return _sha16(os.path.join(package, "operators", "similarity.py"))
+def _code_hash(path: str) -> str:
+    """Hash of the code of the Python module at ``path``: the first 16 hex
+    digits of the sha256 of its AST dump with every docstring removed.
+    Comments are not in the AST and line numbers are not in the dump, so
+    only a code edit changes it."""
+    import ast
+    import hashlib
+
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    for node in ast.walk(tree):
+        body = getattr(node, "body", None)
+        if (
+            isinstance(
+                node,
+                (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+            )
+            and body
+            and isinstance(body[0], ast.Expr)
+            and isinstance(body[0].value, ast.Constant)
+            and isinstance(body[0].value.value, str)
+        ):
+            node.body = body[1:]
+    return hashlib.sha256(ast.dump(tree).encode()).hexdigest()[:16]
 
 
 def _ensure_index(sf_dir: str, kind: str, version: str, build_write) -> str:
     """The stored-index stamp and directory, shared by every stored-index
     route (RP hyperplanes, IVF-PQ, two-level IVF-Flat, incremental-
     SemDeDup corpus cells): fixtures/<kind>/<warehouse-slug> keyed by a
-    stamp of (version, builder-code content hash, source-data
+    stamp of (version, :func:`_code_hash` of operators/similarity.py —
+    the module every index build path lives in — and source-data
     fingerprint) so an edited builder or regenerated warehouse rebuilds
-    instead of silently serving stale tables; freshness and publication
-    are :func:`catalog.ensure_published`'s — build once, serve many.
+    instead of silently serving stale tables, while a comment or
+    docstring edit rebuilds nothing; freshness and publication are
+    :func:`catalog.ensure_published`'s — build once, serve many.
     ``build_write(tmp_dir)`` runs the build and writes its tables into
     the temp dir — the only per-index code."""
-    stamp = f"{version}:{_builder_code_hash()}\n{_source_fingerprint(sf_dir, 'embeddings')}"
+    stamp = f"{version}:{_code_hash(similarity.__file__)}\n{_source_fingerprint(sf_dir, 'embeddings')}"
     return ensure_published(_index_fixture_dir(sf_dir, kind), stamp, build_write)
 
 
@@ -3525,9 +3392,7 @@ def ann_ivf_pq_serve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = spark.read.parquet(os.path.join(d, "index"))
     cb = spark.read.parquet(os.path.join(d, "codebooks"))
     e = load_table(spark, sf_dir, "embeddings")
-    queries_df = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
+    queries_df = _ann_queries(e)
     return similarity.ivf_pq_topk_from_index(
         centroids, index, cb, e.select("vec_id", "embedding"), queries_df,
         k=5, n_probe=4, refine_k=32,
@@ -3609,11 +3474,7 @@ def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from the identical LSH/IVF bucketing with the label-mismatch
     filter applied at re-rank, so the plan shape is already built."""
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_embedding"),
-        F.col("label").alias("q_label"),
-    )
+    q = _ann_queries(e, F.col("label").alias("q_label"))
     corpus = e.select("vec_id", "embedding", F.col("label").alias("neg_label"))
     scored = (
         q.crossJoin(corpus)
@@ -5318,12 +5179,7 @@ def _duck_two_level_recall_oracle(n_probe: int) -> str:
     return f"""
     {_DUCK_TWO_LEVEL_ASSIGN},
     q AS (SELECT vec_id AS query_id, ee AS qe FROM e WHERE vec_id < 10),
-    bs AS (
-      SELECT query_id, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY {_duck_cos("qe", "ee")} DESC, vec_id) AS rn
-      FROM q, e WHERE query_id <> vec_id),
-    btop AS (SELECT query_id, vec_id FROM bs WHERE rn <= 5),
+    {_DUCK_EXACT_TOP5},
     probes AS (
       SELECT query_id, cent_id FROM (
         SELECT q.query_id, c.cent_id,
@@ -5339,14 +5195,8 @@ def _duck_two_level_recall_oracle(n_probe: int) -> str:
         JOIN assign a USING (cent_id)
         JOIN q ON q.query_id = p.query_id
         JOIN e e2 ON e2.vec_id = a.vec_id
-        WHERE p.query_id <> a.vec_id) x WHERE rn <= 5),
-    hits AS (
-      SELECT i.query_id, CAST(COUNT(*) AS BIGINT) AS n
-      FROM itop i JOIN btop b
-        ON b.query_id = i.query_id AND b.vec_id = i.vec_id
-      GROUP BY 1)
-    SELECT q.query_id, COALESCE(h.n, 0) / 5.0 AS recall_at_5
-    FROM q LEFT JOIN hits h USING (query_id)
+        WHERE p.query_id <> a.vec_id) x WHERE rn <= 5)
+    {_duck_recall_at_5("itop")}
     """
 
 
@@ -5367,8 +5217,9 @@ def ann_two_level_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     knows the recall price alongside the x26.4 -> x10.4 assignment
     speedup (SCALING_r07 artifacts). Measured 0.62 mean recall@5 at
     sf0.01 — the baseline pipe_ann_two_level_recall_tuned buys back.
-    Oracle reuses the two-level assignment CTE verbatim — no drift
-    possible vs pipe_semantic_dedup_two_level."""
+    The oracle opens with _DUCK_TWO_LEVEL_ASSIGN, the CTEs of
+    pipe_semantic_dedup_two_level, so the two cannot drift, and scores
+    with the exact top-5 and recall tail every recall oracle uses."""
     return _two_level_recall(spark, sf_dir, n_probe=8)
 
 
@@ -5379,31 +5230,13 @@ def _two_level_recall(
     recall@5 of cosine_topk_ivf at adaptive k (routes two-level) with
     ``n_probe`` probed lists vs exact brute force."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
+    q = _ann_queries(e)
     k_cents = similarity.adaptive_centroids(e.count())
-    brute = similarity.cosine_topk_bruteforce(e, q, k=5).select(
-        "query_id", "vec_id"
-    )
+    exact = _exact_top5(e, q)
     ivf = similarity.cosine_topk_ivf(
         e, q, k=5, n_centroids=k_cents, n_probe=n_probe
-    ).select("query_id", "vec_id")
-    hits = (
-        ivf.join(brute, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
     )
-    return (
-        q.select("query_id")
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            (F.coalesce(F.col("n_hits"), F.lit(0)) / F.lit(5.0)).alias(
-                "recall_at_5"
-            ),
-        )
-    )
+    return _recall_at_5(q, exact, ivf)
 
 
 @query(
@@ -5420,8 +5253,8 @@ def ann_two_level_recall_tuned_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~3.0 s vs 2.9 s query wall at sf0.01/local[32] (probing 24 of 64
     lists triples candidates, but candidates are re-rank-bounded).
     refine_iters=1 continues to 0.82@24 / 0.88@32 for corpora that can
-    afford one Lloyd pass. Oracle shares the recall template and
-    two-level CTE verbatim with the baseline entry."""
+    afford one Lloyd pass. The oracle is the baseline's template
+    (_duck_two_level_recall_oracle) at n_probe=24."""
     return _two_level_recall(spark, sf_dir, n_probe=24)
 
 
@@ -5484,123 +5317,40 @@ def ann_two_level_serve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = spark.read.parquet(os.path.join(d, "centroids"))
     index = spark.read.parquet(os.path.join(d, "index"))
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
-    brute = similarity.cosine_topk_bruteforce(e, q, k=5).select(
-        "query_id", "vec_id"
-    )
+    q = _ann_queries(e)
+    exact = _exact_top5(e, q)
     ivf = similarity.two_level_topk_from_index(
         centroids, index, q, k=5, n_probe=24
-    ).select("query_id", "vec_id")
-    hits = (
-        ivf.join(brute, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
     )
-    return (
-        q.select("query_id")
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            (F.coalesce(F.col("n_hits"), F.lit(0)) / F.lit(5.0)).alias(
-                "recall_at_5"
-            ),
-        )
-    )
+    return _recall_at_5(q, exact, ivf)
 
 
 # --- probe sweep through the two-level route (sizes the tuned entry) ---------
 _TWO_LEVEL_PROBE_SWEEP = (8, 16, 24, 32)
 
 
-def _duck_two_level_probe_sweep_oracle() -> str:
-    """avg recall@5 per probed-list count through the two-level
-    assignment — the flat _duck_probe_sweep_oracle's shape over the
-    _DUCK_TWO_LEVEL_ASSIGN CTEs (adaptive k, within-cell argmax)."""
-    seeds = f"""
-    q AS (SELECT vec_id AS query_id, ee AS qe FROM e WHERE vec_id < 10),
-    qscore AS (
-      SELECT query_id, cent_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY {_duck_cos("qe", "c.ce")} DESC, c.cent_id)
-               AS probe_rank
-      FROM q, cent0 c),
-    cand AS (
-      SELECT p.query_id, p.probe_rank, a.vec_id
-      FROM qscore p JOIN assign a USING (cent_id)
-      WHERE p.query_id <> a.vec_id),
-    bs AS (
-      SELECT query_id, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY {_duck_cos("qe", "ee")} DESC, vec_id) AS rn
-      FROM q, e WHERE query_id <> vec_id),
-    btop AS (SELECT query_id, vec_id FROM bs WHERE rn <= 5)"""
-    tops = ",".join(
-        f"""
-    tp{p} AS (
-      SELECT query_id, vec_id FROM (
-        SELECT c.query_id, c.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY c.query_id
-                 ORDER BY {_duck_cos("q.qe", "e.ee")} DESC, c.vec_id) AS rnk
-        FROM cand c JOIN q ON q.query_id = c.query_id
-        JOIN e ON e.vec_id = c.vec_id
-        WHERE c.probe_rank <= {p}) x WHERE rnk <= 5)"""
-        for p in _TWO_LEVEL_PROBE_SWEEP
-    )
-    selects = " UNION ALL ".join(
-        f"""
-    SELECT CAST({p} AS INTEGER) AS n_probe,
-           ROUND((SELECT COUNT(*) FROM tp{p} t JOIN btop b
-                  ON b.query_id = t.query_id AND b.vec_id = t.vec_id)
-                 / ((SELECT COUNT(*) FROM q) * 5.0), 6) AS avg_recall"""
-        for p in _TWO_LEVEL_PROBE_SWEEP
-    )
-    return f"{_DUCK_TWO_LEVEL_ASSIGN},{seeds},{tops} {selects}"
-
-
 @query(
     "pipe_ann_two_level_probe_sweep",
-    oracle=_duck_two_level_probe_sweep_oracle(),
+    oracle=_duck_probe_sweep_oracle(
+        _DUCK_TWO_LEVEL_ASSIGN, _TWO_LEVEL_PROBE_SWEEP
+    ),
 )
 def ann_two_level_probe_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall/latency dial THROUGH the two-level assignment (adaptive k):
     avg recall@5 vs brute force at n_probe ∈ {8,16,24,32} — the sweep
     that sized pipe_ann_two_level_recall_tuned (0.62 → 0.80 between 8
     and 24 probes at fixture scale). Same measurement semantics as the
-    flat pipe_ann_probe_sweep; the oracle reuses _DUCK_TWO_LEVEL_ASSIGN
-    verbatim so the index under test is provably the registered one."""
+    flat pipe_ann_probe_sweep, whose oracle template it runs over
+    _DUCK_TWO_LEVEL_ASSIGN, so the index under test is provably the
+    registered one."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
+    q = _ann_queries(e)
     k_cents = similarity.adaptive_centroids(e.count())
-    brute = similarity.cosine_topk_bruteforce(e, q, k=5).select(
-        "query_id", "vec_id"
-    )
-    nq = q.agg(F.count("*").alias("n_q"))
-    parts = []
-    for p in _TWO_LEVEL_PROBE_SWEEP:
-        hits = (
-            similarity.cosine_topk_ivf(
-                e, q, k=5, n_centroids=k_cents, n_probe=p
-            )
-            .select("query_id", "vec_id")
-            .join(brute, ["query_id", "vec_id"])
-            .agg(F.count("*").alias("n_hits"))
-        )
-        parts.append(
-            hits.crossJoin(F.broadcast(nq)).select(
-                F.lit(p).cast("int").alias("n_probe"),
-                F.round(
-                    F.col("n_hits") / (F.col("n_q") * F.lit(5.0)), 6
-                ).alias("avg_recall"),
-            )
-        )
-    out = parts[0]
-    for df in parts[1:]:
-        out = out.unionAll(df)
-    return out
+    return _avg_recall_at_5(q, _exact_top5(e, q), [
+        ({"n_probe": p},
+         similarity.cosine_topk_ivf(e, q, k=5, n_centroids=k_cents, n_probe=p))
+        for p in _TWO_LEVEL_PROBE_SWEEP
+    ])
 
 
 # --- occupancy-split recall price (split vs exact SemDeDup, measured) --------
@@ -5616,8 +5366,8 @@ _SPLIT_PRICE_BASE = 500
 
 def _duck_split_price_oracle() -> str:
     """Both SemDeDup routes (multi-probe occupancy-split and exact
-    full-cluster pair stage) over one shared flat-16 clustering of the
-    inflated corpus, reduced to a single reconciliation row. The split
+    full-cluster pair stage) over one shared flat-16 clustering
+    (_duck_ivf_assign) of the inflated corpus, reduced to a single reconciliation row. The split
     route's CTEs mirror _semdedup_final verbatim (caps list, post-seeding
     sub-key, boundary multi-probe key set, distinct-pair stage, keep
     rule); the exact route is the same pair/keep logic with the sub-key
@@ -5637,19 +5387,7 @@ def _duck_split_price_oracle() -> str:
       FROM embeddings, UNNEST(generate_series(0, {_SPLIT_PRICE_INFLATE - 1})) g(r)
       WHERE vec_id < {_SPLIT_PRICE_BASE}),
     e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ee FROM inf),
-    eb AS (SELECT vec_id, array_to_string(list_transform(ee[1:4],
-             x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '') AS bucket FROM e),
-    cent0 AS (
-      SELECT CAST(ROW_NUMBER() OVER (ORDER BY b.bucket) AS INTEGER) - 1 AS cent_id,
-             e2.ee AS ce
-      FROM (SELECT bucket, MIN(vec_id) AS vec_id FROM eb GROUP BY bucket) b
-      JOIN e e2 USING (vec_id)),
-    assign AS (
-      SELECT vec_id, cent_id FROM (
-        SELECT e.vec_id, c.cent_id,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_duck_cos("e.ee", "c.ce")} DESC, c.cent_id) AS rn
-        FROM e, cent0 c) x WHERE rn = 1),
+    {_duck_ivf_assign()},
     occ AS (
       SELECT cent_id, CAST(COUNT(*) AS BIGINT) AS occ
       FROM assign GROUP BY cent_id),
@@ -9002,9 +8740,7 @@ def ann_ranking_margin_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval-side companion to the recall entries (same 10-query eval slice,
     same broadcast-query scoring shape)."""
     e = load_table(spark, sf_dir, "embeddings")
-    queries_df = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
+    queries_df = _ann_queries(e)
     topk = similarity.cosine_topk_bruteforce(
         e.select("vec_id", "embedding"), queries_df, k=2
     )

@@ -23,7 +23,7 @@ swapping the reader.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -138,7 +138,22 @@ SESSION_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _make_sessionize_group(use_timeout: bool):
+def _processing_time_timer(state: GroupState, last_epoch: float) -> None:
+    state.setTimeoutDuration(SESSION_GAP_SECONDS * 1000)
+
+
+def _event_time_timer(state: GroupState, last_epoch: float) -> None:
+    # close when the WATERMARK passes last event + gap (not wall clock)
+    state.setTimeoutTimestamp(int(last_epoch * 1000) + SESSION_GAP_SECONDS * 1000)
+
+
+def _make_sessionize_group(
+    set_timer: Callable[[GroupState, float], None] | None,
+):
+    """The sessionizer kernel, one for every timer: ``set_timer(state,
+    last_epoch)`` arms the close timer after each batch
+    (_processing_time_timer, _event_time_timer), or None for no timer."""
+
     def _sessionize_group(
         key: tuple[Any, ...],
         batches: Iterator[pd.DataFrame],
@@ -185,8 +200,8 @@ def _make_sessionize_group(use_timeout: bool):
             n += 1
             last_epoch = epoch
         state.update((session_id, last_epoch, n))
-        if use_timeout:
-            state.setTimeoutDuration(SESSION_GAP_SECONDS * 1000)
+        if set_timer is not None:
+            set_timer(state, last_epoch)
         out_rows.append((user_id, session_id, n, 0))  # open session snapshot
         yield pd.DataFrame(
             out_rows, columns=["user_id", "session_id", "n_events", "closed"]
@@ -218,72 +233,14 @@ def sessionize_stream(events: DataFrame, close_by_timeout: bool = True) -> DataF
         events.select("user_id", "ts")
         .groupBy("user_id")
         .applyInPandasWithState(
-            _make_sessionize_group(close_by_timeout),
+            _make_sessionize_group(
+                _processing_time_timer if close_by_timeout else None
+            ),
             outputStructType=SESSION_OUTPUT_SCHEMA,
             stateStructType=SESSION_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=timeout_conf,
         )
-    )
-
-
-def _sessionize_event_time_group(
-    key: tuple[Any, ...],
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Event-time sessionizer kernel: same gap rule as the processing-time
-    variant, but the close timer is an EVENT-TIME timestamp (last event +
-    gap) fired by watermark progress — deterministic under replay and
-    backfill, where wall-clock timers are not.
-
-    Ordering contract: events are sorted WITHIN each micro-batch; ACROSS
-    batches the kernel assumes per-user event-time-monotone delivery (each
-    batch's events for a user are at or after that user's previous batch).
-    An above-watermark event older than the state's last_epoch (allowed
-    late data arriving out of order across batches) would be appended to
-    the current session with a negative gap — to also reorder across
-    batches, buffer events in state until the watermark passes them before
-    assigning sessions (a state-size trade this engine doesn't take).
-    Replay/backfill of an ordered log satisfies the contract."""
-    (user_id,) = key
-    if state.hasTimedOut:
-        session_id, _last, n = state.get
-        # Tombstone (see _make_sessionize_group): persist the next session
-        # id so a post-timeout return continues at session_id+1 instead of
-        # colliding with the closed session's id. No timeout is registered
-        # on the tombstone, so it never re-fires; state is one tuple per
-        # user ever seen.
-        state.update((session_id + 1, None, 0))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "session_id": [session_id],
-                "n_events": [n],
-                "closed": [1],
-            }
-        )
-        return
-    rows = pd.concat(list(batches), ignore_index=True).sort_values("ts")
-    if state.exists:
-        session_id, last_epoch, n = state.get
-    else:
-        session_id, last_epoch, n = 0, None, 0
-    out_rows = []
-    for ts in rows["ts"]:
-        epoch = ts.timestamp()
-        if last_epoch is not None and (epoch - last_epoch) > SESSION_GAP_SECONDS:
-            out_rows.append((user_id, session_id, n, 1))  # close previous
-            session_id += 1
-            n = 0
-        n += 1
-        last_epoch = epoch
-    state.update((session_id, last_epoch, n))
-    # close when the WATERMARK passes last event + gap (not wall clock)
-    state.setTimeoutTimestamp(int(last_epoch * 1000) + SESSION_GAP_SECONDS * 1000)
-    out_rows.append((user_id, session_id, n, 0))  # open session snapshot
-    yield pd.DataFrame(
-        out_rows, columns=["user_id", "session_id", "n_events", "closed"]
     )
 
 
@@ -297,13 +254,23 @@ def sessionize_stream_event_time(
     terminates cleanly under availableNow (timeouts fire from watermark
     advance, including the final no-data batch), and late events below the
     watermark are dropped by the engine before the kernel sees them. State
-    is one tuple per user within the watermark horizon."""
+    is one tuple per user within the watermark horizon.
+
+    Ordering contract: events are sorted WITHIN each micro-batch; ACROSS
+    batches the kernel assumes per-user event-time-monotone delivery (each
+    batch's events for a user are at or after that user's previous batch).
+    An above-watermark event older than the state's last_epoch (allowed
+    late data arriving out of order across batches) would be appended to
+    the current session with a negative gap — to also reorder across
+    batches, buffer events in state until the watermark passes them before
+    assigning sessions (a state-size trade this engine doesn't take).
+    Replay/backfill of an ordered log satisfies the contract."""
     return (
         events.select("user_id", "ts")
         .withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
-            _sessionize_event_time_group,
+            _make_sessionize_group(_event_time_timer),
             outputStructType=SESSION_OUTPUT_SCHEMA,
             stateStructType=SESSION_STATE_SCHEMA,
             outputMode="append",
@@ -330,7 +297,7 @@ def _sessionize_buffered_group(
     """Buffer-until-watermark sessionizer kernel: incoming events are held
     in per-user state and only assigned to sessions once the watermark has
     passed them, in global event-time order — so unlike
-    _sessionize_event_time_group, the output is correct even when a user's
+    the event-time sessionizer, the output is correct even when a user's
     events arrive OUT OF ORDER ACROSS micro-batches (any above-watermark
     late data). This is the canonical ordered-processing trade: state grows
     by the events inside the watermark horizon (bounded by horizon ×

@@ -1335,6 +1335,69 @@ def test_package_derives_rp_weights_once():
     assert callers == ["operators/similarity.py:rp_hyperplane_weights"]
 
 
+def test_pipeline_writes_shared_fragments_once():
+    """queries/pipeline.py writes each fragment its ANN and MinHash
+    entries share exactly once, inside the helper that owns it: the ANN
+    query set, the exact top-5 CTEs, the flat IVF seeding and the MinHash
+    signature CTE. A pasted copy anywhere else fails."""
+    import ast
+    from pathlib import Path
+
+    from iceberg_benchmark_java_spark.queries import pipeline
+
+    src = Path(pipeline.__file__).read_text()
+    spans = {}
+    for n in ast.parse(src).body:
+        names = [n.name] if isinstance(n, ast.FunctionDef) else [
+            t.id for t in getattr(n, "targets", []) if isinstance(t, ast.Name)
+        ]
+        for name in names:
+            spans[name] = (n.lineno, n.end_lineno)
+    owners = {
+        'F.col("vec_id") < 10': "_ann_queries",
+        "btop AS (": "_DUCK_EXACT_TOP5",
+        "MIN(vec_id) AS vec_id FROM eb GROUP BY bucket": "_duck_ivf_assign",
+        "MIN(substr(md5(concat(": "_DUCK_MINHASH_BANDS",
+    }
+    for fragment, owner in owners.items():
+        lines = [
+            i for i, ln in enumerate(src.splitlines(), 1) if fragment in ln
+        ]
+        lo, hi = spans[owner]
+        assert len(lines) == 1 and lo <= lines[0] <= hi, (fragment, lines)
+
+
+def test_index_code_hash_ignores_docstrings_and_comments(tmp_path):
+    """The stored-index stamp hashes operators/similarity.py's code: a
+    docstring-only or comment-only edit keeps the hash (no index
+    rebuilds), a one-token code edit changes it."""
+    from pathlib import Path
+
+    from iceberg_benchmark_java_spark.queries.pipeline import _code_hash
+
+    src = Path(similarity.__file__).read_text()
+    base = tmp_path / "similarity.py"
+    base.write_text(src)
+    h = _code_hash(str(base))
+
+    doc = 'def rp_hyperplane_weights(\n'
+    assert src.count(doc) == 1
+    i = src.index('"""', src.index(doc)) + 3
+    edits = {
+        "docstring": src[:i] + "Reworded. " + src[i:],
+        "comment": "# a new comment line\n" + src.replace("\n\n\n", "\n\n\n# note\n", 1),
+    }
+    for what, text in edits.items():
+        p = tmp_path / f"{what}.py"
+        p.write_text(text)
+        assert _code_hash(str(p)) == h, what
+
+    assert "RP_BIT_STRIDE = 64" in src
+    code = tmp_path / "code.py"
+    code.write_text(src.replace("RP_BIT_STRIDE = 64", "RP_BIT_STRIDE = 65", 1))
+    assert _code_hash(str(code)) != h
+
+
 def test_rp_hyperplane_store_roundtrip(spark, tmp_path):
     """The persisted hyperplane tensor must reproduce the derived
     weights' buckets exactly: build rp_hyperplane_weights, round-trip it
