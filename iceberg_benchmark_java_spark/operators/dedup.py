@@ -132,6 +132,43 @@ def with_word_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     return base.mapInPandas(gen, f"doc_id {vid}, shingle string")
 
 
+def _shingle_sets(docs: DataFrame, n: int | None) -> DataFrame:
+    """(doc_id, shingle) at width ``n``, or at the corpus dial
+    (:func:`corpus_shingle_dial`, one probe pass) when ``n`` is None."""
+    return with_word_shingles(docs, corpus_shingle_dial(docs) if n is None else n)
+
+
+def _shingle_overlaps(
+    docs: DataFrame, n: int | None, max_df: int | None, pair: F.Column
+) -> tuple[DataFrame, DataFrame]:
+    """The shingle self-join of the pairwise set-overlap operators:
+    (doc_a, doc_b, inter) = shared distinct shingles of every doc pair
+    passing ``pair``, and (doc_id, sz) = each doc's shingle count.
+    Shingles in more than ``max_df`` docs are dropped from both (None =
+    keep all)."""
+    sh = _shingle_sets(docs, n)
+    if max_df is not None:
+        rare = (
+            sh.groupBy("shingle")
+            .agg(F.count("*").alias("df"))
+            .filter(F.col("df") <= max_df)
+            .select("shingle")
+        )
+        # re-select: a USING join moves the key to column 0, and the
+        # positional toDF renames below depend on (doc_id, shingle) order
+        sh = sh.join(rare, "shingle").select("doc_id", "shingle")
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    a = sh.toDF("doc_a", "shingle")
+    b = sh.toDF("doc_b", "shingle")
+    inter = (
+        a.join(b, "shingle")
+        .filter(pair)
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("inter"))
+    )
+    return inter, sizes
+
+
 # --- exact dedup -------------------------------------------------------------
 
 
@@ -186,27 +223,8 @@ def ngram_jaccard_pairs(
     themselves — an operator-held cache() pins corpus-scale state in
     executor storage for the session lifetime.
     """
-    if n is None:
-        n = corpus_shingle_dial(docs)
-    sh = with_word_shingles(docs, n)
-    if max_df is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_df)
-            .select("shingle")
-        )
-        # re-select: a USING join moves the key to column 0, and the
-        # positional toDF renames below depend on (doc_id, shingle) order
-        sh = sh.join(rare, "shingle").select("doc_id", "shingle")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.toDF("doc_a", "shingle")
-    b = sh.toDF("doc_b", "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
+    inter, sizes = _shingle_overlaps(
+        docs, n, max_df, F.col("doc_a") < F.col("doc_b")
     )
     sz_a = sizes.toDF("doc_a", "sz_a")
     sz_b = sizes.toDF("doc_b", "sz_b")
@@ -358,8 +376,6 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
 
 def connected_components(
     pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
     max_iter: int = 25,
     check_every: int = 2,
     stats: dict | None = None,
@@ -397,9 +413,10 @@ def connected_components(
     ``stats``: pass a dict to receive {"rounds": r, "checks": c} — the
     observability hook the batching test pins (c ≈ r / check_every).
 
-    Returns (doc_id, cluster_id) for every node that appears in ``pairs``.
+    Returns (doc_id, cluster_id) for every node that appears in ``pairs``
+    (edges doc_a — doc_b).
     """
-    e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    e = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     edges = (
         e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
@@ -828,25 +845,8 @@ def containment_pairs(
     directed (doc_a = the contained side, both orientations emitted when
     both clear the threshold), doc_a != doc_b.
     """
-    if n is None:
-        n = corpus_shingle_dial(docs)
-    sh = with_word_shingles(docs, n)
-    if max_df is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_df)
-            .select("shingle")
-        )
-        sh = sh.join(rare, "shingle").select("doc_id", "shingle")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.toDF("doc_a", "shingle")
-    b = sh.toDF("doc_b", "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
+    inter, sizes = _shingle_overlaps(
+        docs, n, max_df, F.col("doc_a") != F.col("doc_b")
     )
     containment = F.col("inter") / F.col("sz_a")
     return (
@@ -1057,6 +1057,71 @@ def bloom_prefilter_contamination(
     )
 
 
+def _prefix_rows(sh: DataFrame, tau_num: int, tau_den: int) -> DataFrame:
+    """The prefix rows of each doc's shingle set ``sh`` (doc_id, shingle):
+    shingles ranked per doc by the global order (corpus df asc, shingle
+    asc) as ``rnk``, ``n`` = the doc's set size, kept while
+    rnk <= p = n - ceil(tau·n) + 1 (tau = tau_num/tau_den)."""
+    from pyspark.sql.window import Window
+
+    df = sh.groupBy("shingle").agg(F.count("*").alias("df"))
+    ranked = (
+        sh.join(df, "shingle")
+        .withColumn(
+            "rnk",
+            F.row_number().over(
+                Window.partitionBy("doc_id").orderBy("df", "shingle")
+            ),
+        )
+        .withColumn("n", F.count("*").over(Window.partitionBy("doc_id")))
+    )
+    p = (
+        F.col("n")
+        - F.floor(
+            (F.lit(tau_num) * F.col("n") + F.lit(tau_den - 1)) / F.lit(tau_den)
+        )
+        + 1
+    )
+    return ranked.filter(F.col("rnk") <= p)
+
+
+def _verified_pairs(
+    cand: DataFrame, sh: DataFrame, tau_num: int, tau_den: int
+) -> DataFrame:
+    """Exact verification of candidate pairs (doc_a, doc_b, n_a, n_b):
+    the shared shingles of each pair counted against the full sets ``sh``,
+    kept by the exact integer test
+    (tau_den + tau_num)·|a∩b| >= tau_num·(|a|+|b|).
+    Out: doc_a, doc_b, n_a, n_b, n_common, jaccard (6dp)."""
+    common = (
+        cand.join(sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a")
+        .join(
+            sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
+            ["doc_b", "shingle"],
+        )
+        .groupBy("doc_a", "doc_b", "n_a", "n_b")
+        .agg(F.count("*").alias("n_common"))
+    )
+    return (
+        common.filter(
+            F.lit(tau_den + tau_num) * F.col("n_common")
+            >= F.lit(tau_num) * (F.col("n_a") + F.col("n_b"))
+        )
+        .select(
+            "doc_a",
+            "doc_b",
+            "n_a",
+            "n_b",
+            "n_common",
+            F.round(
+                F.col("n_common")
+                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+                6,
+            ).alias("jaccard"),
+        )
+    )
+
+
 def prefix_filter_pairs(
     docs: DataFrame,
     n: int | None = None,
@@ -1088,38 +1153,14 @@ def prefix_filter_pairs(
     the rarest prefix shingle's df grows linearly in the corpus and the
     candidate join quadratically. The default width therefore ADAPTS
     (``corpus_shingle_dial``: one probe pass, n grows with
-    log_vocab(corpus) — measured as the healthy dial by
-    tools/run_scaling_pipe.py's prefix_filter_scaled_n row), exactly as
+    log_vocab(corpus) — measured as the healthy dial by the
+    prefix_filter_scaled_n row of SCALING_r06_pipe.json), exactly as
     LSH widens its bit width.
 
     Out: doc_a, doc_b, n_a, n_b, n_common, jaccard (6dp).
     """
-    from pyspark.sql.window import Window
-
-    if n is None:
-        n = corpus_shingle_dial(docs)
-    sh = with_word_shingles(docs, n=n)
-    df = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    ranked = (
-        sh.join(df, "shingle")
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy("df", "shingle")
-            ),
-        )
-        .withColumn(
-            "n", F.count("*").over(Window.partitionBy("doc_id"))
-        )
-    )
-    p = (
-        F.col("n")
-        - F.floor(
-            (F.lit(tau_num) * F.col("n") + F.lit(tau_den - 1)) / F.lit(tau_den)
-        )
-        + 1
-    )
-    prefix = ranked.filter(F.col("rnk") <= p).select("doc_id", "shingle", "n")
+    sh = _shingle_sets(docs, n)
+    prefix = _prefix_rows(sh, tau_num, tau_den).select("doc_id", "shingle", "n")
     cand = (
         prefix.select(
             F.col("doc_id").alias("doc_a"),
@@ -1138,35 +1179,7 @@ def prefix_filter_pairs(
         .select("doc_a", "doc_b", "n_a", "n_b")
         .distinct()
     )
-    common = (
-        cand.join(
-            sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a"
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    return (
-        common.filter(
-            F.lit(tau_den + tau_num) * F.col("n_common")
-            >= F.lit(tau_num) * (F.col("n_a") + F.col("n_b"))
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_a",
-            "n_b",
-            "n_common",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
+    return _verified_pairs(cand, sh, tau_num, tau_den)
 
 
 # --- sorted-neighborhood blocking ---------------------------------------------
@@ -1264,30 +1277,8 @@ def ppjoin_pairs(
 
     Out: doc_a, doc_b, n_a, n_b, n_common, jaccard (6dp).
     """
-    from pyspark.sql.window import Window
-
-    if n is None:
-        n = corpus_shingle_dial(docs)
-    sh = with_word_shingles(docs, n=n)
-    df = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    ranked = (
-        sh.join(df, "shingle")
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy("df", "shingle")
-            ),
-        )
-        .withColumn("n", F.count("*").over(Window.partitionBy("doc_id")))
-    )
-    p = (
-        F.col("n")
-        - F.floor(
-            (F.lit(tau_num) * F.col("n") + F.lit(tau_den - 1)) / F.lit(tau_den)
-        )
-        + 1
-    )
-    prefix = ranked.filter(F.col("rnk") <= p).select(
+    sh = _shingle_sets(docs, n)
+    prefix = _prefix_rows(sh, tau_num, tau_den).select(
         "doc_id", "shingle", "n", "rnk"
     )
     ub = F.least(F.col("pa"), F.col("pb")) + F.least(
@@ -1328,30 +1319,4 @@ def ppjoin_pairs(
         .filter(F.col("max_ub") >= alpha)
         .select("doc_a", "doc_b", "n_a", "n_b")
     )
-    common = (
-        cand.join(sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a")
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    return (
-        common.filter(
-            F.lit(tau_den + tau_num) * F.col("n_common")
-            >= F.lit(tau_num) * (F.col("n_a") + F.col("n_b"))
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_a",
-            "n_b",
-            "n_common",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
+    return _verified_pairs(cand, sh, tau_num, tau_den)

@@ -27,10 +27,10 @@ from pyspark.sql import functions as F
 SIM_SCALE = 6
 
 
-def embedding_dim(df: DataFrame, col: str = "embedding") -> int:
-    """Dimensionality of the embedding column — a 1-row eager probe at
+def embedding_dim(df: DataFrame) -> int:
+    """Dimensionality of the ``embedding`` column — a 1-row eager probe at
     plan-build time."""
-    return df.select(F.size(col).alias("d")).limit(1).first()["d"]
+    return df.select(F.size("embedding").alias("d")).limit(1).first()["d"]
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -137,6 +137,45 @@ def _with_cosine_arrow(
     )
 
 
+def _cosine_topk(
+    cand: DataFrame, k: int, cols: tuple[str, ...] = ("query_id", "vec_id")
+) -> DataFrame:
+    """The exact re-rank every top-k path ends with: over candidate rows
+    carrying ``q_embedding`` and ``embedding``, sim = 6dp cosine, rnk =
+    row_number per query_id by (sim desc, vec_id asc), rows with
+    rnk <= k. Out: ``cols``, sim, rnk."""
+    scored = cand.select(
+        *cols,
+        F.round(cosine(F.col("q_embedding"), F.col("embedding")), SIM_SCALE).alias("sim"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select(*cols, "sim", "rnk")
+    )
+
+
+def _probe_lists(
+    queries: DataFrame, centroids: DataFrame, n_probe: int, *cols
+) -> DataFrame:
+    """IVF query routing: each query scored against the broadcast
+    ``centroids`` (csim = 6dp cosine), keeping its ``n_probe`` best lists
+    by (csim desc, cent_id asc). Out: ``cols``."""
+    q_scored = queries.crossJoin(F.broadcast(centroids)).select(
+        "query_id",
+        "q_embedding",
+        "cent_id",
+        F.round(cosine(F.col("q_embedding"), F.col("c_emb")), SIM_SCALE).alias("csim"),
+    )
+    w_probe = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("cent_id"))
+    return (
+        q_scored.withColumn("rn", F.row_number().over(w_probe))
+        .filter(F.col("rn") <= n_probe)
+        .select(*cols)
+    )
+
+
 def cosine_topk_bruteforce(
     embeddings: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
@@ -154,17 +193,7 @@ def cosine_topk_bruteforce(
     joined = F.broadcast(queries).crossJoin(embeddings).filter(
         F.col("query_id") != F.col("vec_id")
     )
-    scored = joined.select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("q_embedding"), F.col("embedding")), SIM_SCALE).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "vec_id", "sim", "rnk")
-    )
+    return _cosine_topk(joined, k)
 
 
 def sign_bucket(emb: Column, n_bits: int = 8) -> Column:
@@ -244,11 +273,11 @@ def _centroid_rows(centroids: DataFrame) -> list:
 def nearest_centroid(
     df: DataFrame,
     centroids: DataFrame,
-    emb_col: str = "embedding",
     _rows: list | None = None,
 ) -> DataFrame:
-    """Map-side nearest-centroid assignment (argmax cosine, ties to the
-    lowest cent_id), appended as column ``cent_id``.
+    """Map-side nearest-centroid assignment of the ``embedding`` column
+    (argmax cosine, ties to the lowest cent_id), appended as column
+    ``cent_id``.
 
     The centroid table is pulled to the driver once per call (an eager
     k-row job — k is metadata-sized by construction: ≤ 2^16 lists even at
@@ -298,7 +327,7 @@ def nearest_centroid(
         for pdf in batches:
             if not len(pdf):
                 continue
-            emb = _embedding_matrix(pdf[emb_col], emb_col)
+            emb = _embedding_matrix(pdf["embedding"], "embedding")
             d = emb.shape[1]
             nx = 0.0 + emb[:, 0] * emb[:, 0]
             for i in range(1, d):
@@ -366,19 +395,25 @@ SEMDEDUP_BASE_BITS = 6  # k = 64 at base scale
 SEMDEDUP_MAX_BITS = 16
 
 
-def adaptive_centroids(
-    n_vectors: int,
-    base_n: int = SEMDEDUP_BASE_VECTORS,
-    base_bits: int = SEMDEDUP_BASE_BITS,
-    max_bits: int = SEMDEDUP_MAX_BITS,
-) -> int:
-    """k = 2**min(max_bits, base_bits + e) with the smallest e such that
-    base_n * 2**e >= n_vectors — the same doubling schedule as
-    adaptive_sign_bits, expressed as a centroid count."""
+def _doubled_bits(n_vectors: int, base_n: int, base_bits: int, max_bits: int) -> int:
+    """Smallest ``base_bits + e`` with base_n * 2**e >= n_vectors, capped
+    at ``max_bits`` — one more bit per doubling of the corpus past the
+    base size. Integer shifts only, so the DuckDB oracles derive the
+    same value."""
     e = 0
     while (base_n << e) < n_vectors:
         e += 1
-    return 1 << min(max_bits, base_bits + e)
+    return min(max_bits, base_bits + e)
+
+
+def adaptive_centroids(n_vectors: int) -> int:
+    """k = 2**min(SEMDEDUP_MAX_BITS, SEMDEDUP_BASE_BITS + e) with the
+    smallest e such that SEMDEDUP_BASE_VECTORS * 2**e >= n_vectors — the
+    same doubling schedule as adaptive_sign_bits, expressed as a centroid
+    count."""
+    return 1 << _doubled_bits(
+        n_vectors, SEMDEDUP_BASE_VECTORS, SEMDEDUP_BASE_BITS, SEMDEDUP_MAX_BITS
+    )
 
 
 def two_level_assignments(
@@ -665,32 +700,13 @@ def cosine_topk_ivf(
     ``refine_iters``: k-means refinement passes for the centroids.
     """
     centroids, assignments = ivf_assignments(embeddings, n_centroids, refine_iters)
-    q_scored = queries.crossJoin(F.broadcast(centroids)).select(
-        "query_id",
-        "q_embedding",
-        "cent_id",
-        F.round(cosine(F.col("q_embedding"), F.col("c_emb")), SIM_SCALE).alias("csim"),
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("cent_id"))
-    probes = (
-        q_scored.withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "q_embedding", "cent_id")
+    probes = _probe_lists(
+        queries, centroids, n_probe, "query_id", "q_embedding", "cent_id"
     )
     cand = probes.join(assignments, "cent_id").filter(
         F.col("query_id") != F.col("vec_id")
     )
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("q_embedding"), F.col("embedding")), SIM_SCALE).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "vec_id", "sim", "rnk")
-    )
+    return _cosine_topk(cand, k)
 
 
 # Adaptive sign-LSH sizing: keep expected bucket occupancy at the level
@@ -714,20 +730,14 @@ BANDED_SLICE_MAX_BITS = 16
 BANDED_MAX_BITS = 32
 
 
-def adaptive_sign_bits(
-    n_vectors: int,
-    base_n: int = BANDED_BASE_VECTORS,
-    base_bits: int = BANDED_BASE_BITS,
-    max_bits: int = BANDED_MAX_BITS,
-) -> int:
-    """Smallest ``base_bits + e`` with base_n * 2**e >= n_vectors, capped
-    at ``max_bits`` — i.e. double the bucket count every time the corpus
-    doubles past the base size, so per-bucket occupancy (and hence
-    candidate-pair cost per bucket) stays constant."""
-    e = 0
-    while (base_n << e) < n_vectors:
-        e += 1
-    return min(max_bits, base_bits + e)
+def adaptive_sign_bits(n_vectors: int) -> int:
+    """Smallest ``BANDED_BASE_BITS + e`` with BANDED_BASE_VECTORS * 2**e
+    >= n_vectors, capped at BANDED_MAX_BITS — i.e. double the bucket
+    count every time the corpus doubles past the base size, so per-bucket
+    occupancy (and hence candidate-pair cost per bucket) stays constant."""
+    return _doubled_bits(
+        n_vectors, BANDED_BASE_VECTORS, BANDED_BASE_BITS, BANDED_MAX_BITS
+    )
 
 
 def cosine_near_dup_pairs(
@@ -1038,25 +1048,16 @@ def cosine_near_dup_pairs_banded(
 
 
 def cosine_topk_lsh(
-    embeddings: DataFrame, queries: DataFrame, k: int = 5, n_bits: int = 8
+    embeddings: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
-    """Bucketed ANN: candidates share the query's sign bucket; exact cosine
-    re-rank inside the bucket. Recall < 1.0 by design — the oracle defines
-    the same bucketed semantics, so results are exactly comparable."""
-    emb_b = embeddings.withColumn("bucket", sign_bucket(F.col("embedding"), n_bits))
-    q_b = queries.withColumn("bucket", sign_bucket(F.col("q_embedding"), n_bits))
+    """Bucketed ANN: candidates share the query's 8-bit sign bucket
+    (:func:`sign_bucket`'s default width); exact cosine re-rank inside the
+    bucket. Recall < 1.0 by design — the oracle defines the same bucketed
+    semantics, so results are exactly comparable."""
+    emb_b = embeddings.withColumn("bucket", sign_bucket(F.col("embedding")))
+    q_b = queries.withColumn("bucket", sign_bucket(F.col("q_embedding")))
     joined = q_b.join(emb_b, "bucket").filter(F.col("query_id") != F.col("vec_id"))
-    scored = joined.select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("q_embedding"), F.col("embedding")), SIM_SCALE).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "vec_id", "sim", "rnk")
-    )
+    return _cosine_topk(joined, k)
 
 
 # --- product quantization (ADC) ----------------------------------------------
@@ -1248,6 +1249,47 @@ def pq_codes(norm_emb: DataFrame, d_sub: int) -> DataFrame:
     )
 
 
+def _pq_lut(
+    queries: DataFrame, codebooks: DataFrame, d_sub: int | Column
+) -> DataFrame:
+    """(query_id, lut): each query's PQ_M×PQ_K lookup table of subspace
+    partial inner products against the broadcast ``codebooks`` codewords,
+    as a map key = s·PQ_K + code → floor(partial·1e6) BIGINT, so the sum
+    over subspaces is order-independent. ``d_sub`` is the subspace width,
+    an int or a Column."""
+    return (
+        queries.crossJoin(F.broadcast(codebooks))
+        .select(
+            "query_id",
+            (F.col("s") * PQ_K + F.col("code")).alias("key"),
+            F.floor(
+                _dot(
+                    F.slice(F.col("q_embedding"), F.col("s") * d_sub + 1, d_sub),
+                    F.col("c_emb"),
+                )
+                * MEAN_QUANT
+            )
+            .cast("long")
+            .alias("p_int"),
+        )
+        .groupBy("query_id")
+        .agg(
+            F.map_from_entries(F.collect_list(F.struct("key", "p_int"))).alias("lut")
+        )
+    )
+
+
+def _adc_score() -> Column:
+    """The ADC score s_int of a row carrying ``codes`` and its query's
+    ``lut``: one fold over the code array summing the LUT partials."""
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(PQ_M - 1)),
+        F.lit(0).cast("long"),
+        lambda acc, s: acc
+        + F.element_at(F.col("lut"), s * PQ_K + F.element_at(F.col("codes"), s + 1)),
+    )
+
+
 def pq_adc_topk(
     embeddings: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
@@ -1266,44 +1308,12 @@ def pq_adc_topk(
     d = embedding_dim(embeddings)
     d_sub = _pq_d_sub(d)
     ne = normalize_embeddings(embeddings)
-    cb = pq_codebooks(ne, d_sub)
-    lut = (
-        queries.crossJoin(F.broadcast(cb))
-        .select(
-            "query_id",
-            (F.col("s") * PQ_K + F.col("code")).alias("key"),
-            F.floor(
-                _dot(
-                    F.slice(F.col("q_embedding"), F.col("s") * d_sub + 1, d_sub),
-                    F.col("c_emb"),
-                )
-                * MEAN_QUANT
-            )
-            .cast("long")
-            .alias("p_int"),
-        )
-        .groupBy("query_id")
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("key", "p_int"))).alias(
-                "lut"
-            )
-        )
-    )
+    lut = _pq_lut(queries, pq_codebooks(ne, d_sub), d_sub)
     scored = (
         pq_codes(ne, d_sub)
         .crossJoin(F.broadcast(lut))
         .filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn(
-            "s_int",
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-                F.lit(0).cast("long"),
-                lambda acc, s: acc
-                + F.element_at(
-                    F.col("lut"), s * PQ_K + F.element_at(F.col("codes"), s + 1)
-                ),
-            ),
-        )
+        .withColumn("s_int", _adc_score())
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("s_int"), F.asc("vec_id"))
     return (
@@ -1421,54 +1431,15 @@ def ivf_pq_topk_from_index(
     subspace width is each codebook row's ``size(c_emb)``, so the query
     path runs no probe job.
     """
-    d_sub = F.size(F.col("c_emb"))
-    q_scored = queries.crossJoin(F.broadcast(centroids)).select(
-        "query_id",
-        "q_embedding",
-        "cent_id",
-        F.round(cosine(F.col("q_embedding"), F.col("c_emb")), SIM_SCALE).alias("csim"),
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("cent_id"))
-    probes = (
-        q_scored.withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "cent_id")
-    )
-    lut = (
-        queries.crossJoin(F.broadcast(codebooks.select("s", "code", "c_emb")))
-        .select(
-            "query_id",
-            (F.col("s") * PQ_K + F.col("code")).alias("key"),
-            F.floor(
-                _dot(
-                    F.slice(F.col("q_embedding"), F.col("s") * d_sub + 1, d_sub),
-                    F.col("c_emb"),
-                )
-                * MEAN_QUANT
-            )
-            .cast("long")
-            .alias("p_int"),
-        )
-        .groupBy("query_id")
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("key", "p_int"))).alias("lut")
-        )
+    probes = _probe_lists(queries, centroids, n_probe, "query_id", "cent_id")
+    lut = _pq_lut(
+        queries, codebooks.select("s", "code", "c_emb"), F.size(F.col("c_emb"))
     )
     cand = (
         index.join(F.broadcast(probes), "cent_id")
         .filter(F.col("query_id") != F.col("vec_id"))
         .join(F.broadcast(lut), "query_id")
-        .withColumn(
-            "s_int",
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-                F.lit(0).cast("long"),
-                lambda acc, s: acc
-                + F.element_at(
-                    F.col("lut"), s * PQ_K + F.element_at(F.col("codes"), s + 1)
-                ),
-            ),
-        )
+        .withColumn("s_int", _adc_score())
     )
     w_adc = Window.partitionBy("query_id").orderBy(F.desc("s_int"), F.asc("vec_id"))
     short = (
@@ -1481,17 +1452,8 @@ def ivf_pq_topk_from_index(
     )
     refined = corpus.select("vec_id", "embedding").join(
         F.broadcast(short_q), "vec_id"
-    ).select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("q_embedding"), F.col("embedding")), SIM_SCALE).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        refined.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "vec_id", "sim", "rnk")
-    )
+    return _cosine_topk(refined, k)
 
 
 # Bounded physical-partition count for the stored two-level index: the
@@ -1553,24 +1515,14 @@ def two_level_topk_from_index(
     — no orthant seeding, no coarse/fine mapping, no corpus argmax
     (plan-asserted by tests/test_plans.py::
     test_two_level_serve_path_reads_stored_index)."""
-    q_scored = queries.crossJoin(F.broadcast(centroids)).select(
+    probes = _probe_lists(
+        queries,
+        centroids,
+        n_probe,
         "query_id",
         "q_embedding",
         "cent_id",
-        F.round(cosine(F.col("q_embedding"), F.col("c_emb")), SIM_SCALE).alias("csim"),
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("cent_id"))
-    probes = (
-        q_scored.withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= n_probe)
-        .select(
-            "query_id",
-            "q_embedding",
-            "cent_id",
-            F.pmod(F.col("cent_id"), F.lit(TWO_LEVEL_INDEX_SHARDS)).alias(
-                "shard"
-            ),
-        )
+        F.pmod(F.col("cent_id"), F.lit(TWO_LEVEL_INDEX_SHARDS)).alias("shard"),
     )
     # join on (shard, cent_id): shard is the index's physical partition
     # column, so the broadcast probe side prunes the scan to ≤ n_probe
@@ -1578,17 +1530,7 @@ def two_level_topk_from_index(
     cand = index.join(F.broadcast(probes), ["shard", "cent_id"]).filter(
         F.col("query_id") != F.col("vec_id")
     )
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("q_embedding"), F.col("embedding")), SIM_SCALE).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "vec_id", "sim", "rnk")
-    )
+    return _cosine_topk(cand, k)
 
 
 # Occupancy bound for SemDeDup's within-cluster pair stage. The pair
@@ -1640,7 +1582,6 @@ def semantic_dedup(
     n_centroids: int | None = 16,
     threshold: float = 0.2,
     occupancy_bound: int | None = SEMDEDUP_OCC_BOUND,
-    probe_margin: float | None = SEMDEDUP_PROBE_MARGIN,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
     the corpus with the deterministic IVF path, then WITHIN each cluster
@@ -1675,20 +1616,18 @@ def semantic_dedup(
     (pure integer derivation, same on the DuckDB oracle side) instead of
     a scale cliff. ``None`` disables the bound (exact paper semantics).
 
-    ``probe_margin`` (default SEMDEDUP_PROBE_MARGIN) is the multi-probe
-    boundary dial that buys back most of the split's pair recall: a
-    vector whose split-dim value is within margin·rms(v) of the sign
-    boundary also probes the adjacent sub-cell (that bit flipped, one
-    flip per boundary dim — single-bit probes, so ≤ e+1 keys/vector),
-    and a pair is compared iff EITHER endpoint's probe-key set contains
-    the other's primary sub-key (the asymmetric candidate rule of
-    :func:`_pair_partners` — ~1.93× pair volume instead of the symmetric
-    intersection rule's ~3.15×; duplicates from two-direction discovery
-    are removed before the partner counts). Measured on the forced-split
-    corpus (pipe_semantic_dedup_split_price): pair retention 0.915,
-    drop retention 0.991, drop-set still a subset of the exact route's.
-    ``None`` restores the round-8 single-probe split (used by tests
-    pinning the price of the bare bound).
+    The split buys back most of its pair recall by multi-probe at the
+    SEMDEDUP_PROBE_MARGIN boundary margin: a vector whose split-dim value
+    is within margin·rms(v) of the sign boundary also probes the adjacent
+    sub-cell (that bit flipped, one flip per boundary dim — single-bit
+    probes, so ≤ e+1 keys/vector), and a pair is compared iff EITHER
+    endpoint's probe-key set contains the other's primary sub-key (the
+    asymmetric candidate rule of :func:`_pair_partners` — ~1.93× pair
+    volume instead of the symmetric intersection rule's ~3.15×;
+    duplicates from two-direction discovery are removed before the
+    partner counts). Measured on the forced-split corpus
+    (pipe_semantic_dedup_split_price): pair retention 0.915, drop
+    retention 0.991, drop-set still a subset of the exact route's.
 
     Out: vec_id, cent_id, cent_sim, n_dup_partners, keep.
     """
@@ -1719,9 +1658,16 @@ def semantic_dedup(
         cs = cs.withColumn(
             "_occ", F.count("*").over(Window.partitionBy("cent_id"))
         )
-    cs = _attach_probe_keys(cs, n_centroids, occupancy_bound, probe_margin)
-    d = _pair_partners(cs, cs, threshold, symmetric=True)
-    return cs.join(d, "vec_id", "left").select(
+    cs = _attach_probe_keys(cs, n_centroids, occupancy_bound)
+    return _keep_decision(cs, _pair_partners(cs, cs, threshold, symmetric=True))
+
+
+def _keep_decision(cells: DataFrame, partners: DataFrame) -> DataFrame:
+    """The SemDeDup decision per member of ``cells``: its partner counts
+    from ``partners`` (0 when it has none), kept iff no partner beats it.
+    Out: vec_id, cent_id, cent_sim, n_dup_partners, keep (the explicit
+    projection drops the internal sub_keys)."""
+    return cells.join(partners, "vec_id", "left").select(
         "vec_id",
         "cent_id",
         "cent_sim",
@@ -1729,14 +1675,11 @@ def semantic_dedup(
         .cast("long")
         .alias("n_dup_partners"),
         (F.coalesce(F.col("n_better"), F.lit(0)) == 0).alias("keep"),
-    )  # sub_keys is internal: dropped by the explicit projection
+    )
 
 
 def _attach_probe_keys(
-    cs: DataFrame,
-    n_centroids: int,
-    occupancy_bound: int | None,
-    probe_margin: float | None,
+    cs: DataFrame, n_centroids: int, occupancy_bound: int | None
 ) -> DataFrame:
     """Derive the occupancy-split multi-probe key set ``sub_keys`` on a
     cells DataFrame (vec_id, cent_id, embedding, cent_sim[, _occ]) —
@@ -1779,47 +1722,43 @@ def _attach_probe_keys(
         "_e",
         F.size(F.filter(caps, lambda c: c < F.col("_occ"))),
     ).withColumn("sub_key", primary)
-    if probe_margin is not None:
-        # Multi-probe: one extra key per split dim within
-        # margin·rms(v) of the sign boundary — the flipped-bit
-        # sub-cell. rms is the scale-free per-dim magnitude
-        # (sqrt(<v,v>/d)), identical arithmetic on the oracle side.
-        # 1-based boundary dims; -1 sentinel filtered out.
-        rms = F.sqrt(
-            _dot(F.col("embedding"), F.col("embedding"))
-            / F.size(F.col("embedding"))
-        )
-        flip_idx = F.filter(
-            F.transform(
-                vals,
-                lambda v, i: F.when(
-                    F.abs(v) < F.lit(probe_margin) * F.col("_rms"),
-                    i + 1,
-                ).otherwise(F.lit(-1)),
+    # Multi-probe: one extra key per split dim within
+    # SEMDEDUP_PROBE_MARGIN·rms(v) of the sign boundary — the flipped-bit
+    # sub-cell. rms is the scale-free per-dim magnitude (sqrt(<v,v>/d)),
+    # identical arithmetic on the oracle side. 1-based boundary dims; -1
+    # sentinel filtered out.
+    rms = F.sqrt(
+        _dot(F.col("embedding"), F.col("embedding")) / F.size(F.col("embedding"))
+    )
+    flip_idx = F.filter(
+        F.transform(
+            vals,
+            lambda v, i: F.when(
+                F.abs(v) < F.lit(SEMDEDUP_PROBE_MARGIN) * F.col("_rms"),
+                i + 1,
+            ).otherwise(F.lit(-1)),
+        ),
+        lambda j: j > 0,
+    )
+    flip_key = lambda j: F.concat(  # noqa: E731
+        F.substr(F.col("sub_key"), F.lit(1), j - 1),
+        F.when(
+            F.substr(F.col("sub_key"), j, F.lit(1)) == "1",
+            F.lit("0"),
+        ).otherwise(F.lit("1")),
+        F.substr(F.col("sub_key"), j + 1),
+    )
+    cs = (
+        cs.withColumn("_rms", rms)
+        .withColumn(
+            "sub_keys",
+            F.array_union(
+                F.array(F.col("sub_key")),
+                F.transform(flip_idx, flip_key),
             ),
-            lambda j: j > 0,
         )
-        flip_key = lambda j: F.concat(  # noqa: E731
-            F.substr(F.col("sub_key"), F.lit(1), j - 1),
-            F.when(
-                F.substr(F.col("sub_key"), j, F.lit(1)) == "1",
-                F.lit("0"),
-            ).otherwise(F.lit("1")),
-            F.substr(F.col("sub_key"), j + 1),
-        )
-        cs = (
-            cs.withColumn("_rms", rms)
-            .withColumn(
-                "sub_keys",
-                F.array_union(
-                    F.array(F.col("sub_key")),
-                    F.transform(flip_idx, flip_key),
-                ),
-            )
-            .drop("_rms")
-        )
-    else:
-        cs = cs.withColumn("sub_keys", F.array(F.col("sub_key")))
+        .drop("_rms")
+    )
     return cs.drop("_e", "_occ", "sub_key")
 
 
@@ -1984,8 +1923,6 @@ def incremental_semantic_dedup(
     batch: DataFrame,
     n_centroids: int = 16,
     threshold: float = 0.2,
-    occupancy_bound: int | None = SEMDEDUP_OCC_BOUND,
-    probe_margin: float | None = SEMDEDUP_PROBE_MARGIN,
     check_ordered: bool = True,
     corpus_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
@@ -2117,20 +2054,12 @@ def incremental_semantic_dedup(
     u = c_cells.withColumn("_b", F.lit(False)).unionAll(
         b_cells.withColumn("_b", F.lit(True))
     )
-    if occupancy_bound:
-        occ = u.groupBy("cent_id").agg(F.count("*").alias("_occ"))
-        u = u.join(F.broadcast(occ), "cent_id")
-    u_keys = _attach_probe_keys(u, n_centroids, occupancy_bound, probe_margin)
+    occ = u.groupBy("cent_id").agg(F.count("*").alias("_occ"))
+    u = u.join(F.broadcast(occ), "cent_id")
+    u_keys = _attach_probe_keys(u, n_centroids, SEMDEDUP_OCC_BOUND)
     b_keys = u_keys.filter(F.col("_b")).drop("_b")
-    d = _pair_partners(b_keys, u_keys.drop("_b"), threshold)
-    return b_keys.join(d, "vec_id", "left").select(
-        "vec_id",
-        "cent_id",
-        "cent_sim",
-        F.coalesce(F.col("n_dup_partners"), F.lit(0))
-        .cast("long")
-        .alias("n_dup_partners"),
-        (F.coalesce(F.col("n_better"), F.lit(0)) == 0).alias("keep"),
+    return _keep_decision(
+        b_keys, _pair_partners(b_keys, u_keys.drop("_b"), threshold)
     )
 
 

@@ -3476,27 +3476,12 @@ def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     q = _ann_queries(e, F.col("label").alias("q_label"))
     corpus = e.select("vec_id", "embedding", F.col("label").alias("neg_label"))
-    scored = (
-        q.crossJoin(corpus)
-        .filter(
-            (F.col("query_id") != F.col("vec_id"))
-            & (F.col("neg_label") != F.col("q_label"))
-        )
-        .select(
-            "query_id",
-            "q_label",
-            "vec_id",
-            "neg_label",
-            F.round(
-                similarity.cosine(F.col("q_embedding"), F.col("embedding")), 6
-            ).alias("sim"),
-        )
+    cand = q.crossJoin(corpus).filter(
+        (F.col("query_id") != F.col("vec_id"))
+        & (F.col("neg_label") != F.col("q_label"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "q_label", "vec_id", "neg_label", "sim", "rnk")
+    return similarity._cosine_topk(
+        cand, 3, ("query_id", "q_label", "vec_id", "neg_label")
     )
 
 
@@ -5479,7 +5464,7 @@ def semantic_dedup_split_price_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors near a sub-cell face also compare against the adjacent
     sub-cell; a pair qualifies iff either endpoint probes the other's
     PRIMARY sub-cell): pair_retention 0.915 and drop_retention 0.991,
-    vs 0.556 / 0.945 for the r8 single-probe split (probe_margin=None)
+    vs 0.556 / 0.945 for the r8 split without boundary probes
     — the n_probe move applied to the orthant split, at ~1.93 probe
     keys/vector ≈ 1.93× pair volume (the r9 symmetric-intersection rule
     bought 0.926 retention at ~3.15×). The

@@ -1335,17 +1335,57 @@ def test_package_derives_rp_weights_once():
     assert callers == ["operators/similarity.py:rp_hyperplane_weights"]
 
 
-def test_pipeline_writes_shared_fragments_once():
-    """queries/pipeline.py writes each fragment its ANN and MinHash
-    entries share exactly once, inside the helper that owns it: the ANN
-    query set, the exact top-5 CTEs, the flat IVF seeding and the MinHash
-    signature CTE. A pasted copy anywhere else fails."""
+@pytest.mark.parametrize(
+    "module, owners",
+    [
+        (
+            "queries/pipeline.py",
+            {
+                'F.col("vec_id") < 10': "_ann_queries",
+                "btop AS (": "_DUCK_EXACT_TOP5",
+                "MIN(vec_id) AS vec_id FROM eb GROUP BY bucket": "_duck_ivf_assign",
+                "MIN(substr(md5(concat(": "_DUCK_MINHASH_BANDS",
+            },
+        ),
+        (
+            "operators/similarity.py",
+            {
+                'orderBy(F.desc("sim"), F.asc("vec_id"))': "_cosine_topk",
+                "crossJoin(F.broadcast(centroids))": "_probe_lists",
+                "map_from_entries(": "_pq_lut",
+                'F.element_at(F.col("codes"), s + 1)': "_adc_score",
+                'F.coalesce(F.col("n_better"), F.lit(0)) == 0': "_keep_decision",
+                "while (base_n << e) < n_vectors:": "_doubled_bits",
+            },
+        ),
+        (
+            "operators/dedup.py",
+            {
+                "corpus_shingle_dial(docs)": "_shingle_sets",
+                'F.col("df") <= max_df': "_shingle_overlaps",
+                'orderBy("df", "shingle")': "_prefix_rows",
+                'F.lit(tau_den + tau_num) * F.col("n_common")': "_verified_pairs",
+            },
+        ),
+    ],
+    ids=["pipeline", "similarity", "dedup"],
+)
+def test_pipeline_writes_shared_fragments_once(module, owners):
+    """Each module writes every fragment its entries or operators share
+    exactly once, inside the helper that owns it — in queries/pipeline.py
+    the ANN query set, the exact top-5 CTEs, the flat IVF seeding and the
+    MinHash signature CTE; in operators/similarity.py the exact-cosine
+    top-k ranker, the IVF probe router, the PQ lookup table, the ADC
+    fold, the SemDeDup keep decision and the doubling schedule; in
+    operators/dedup.py the shingle dial, the max_df shingle self-join,
+    the prefix ranking and the exact Jaccard verification. A pasted copy
+    anywhere else fails."""
     import ast
     from pathlib import Path
 
-    from iceberg_benchmark_java_spark.queries import pipeline
+    import iceberg_benchmark_java_spark as pkg
 
-    src = Path(pipeline.__file__).read_text()
+    src = (Path(pkg.__file__).parent / module).read_text()
     spans = {}
     for n in ast.parse(src).body:
         names = [n.name] if isinstance(n, ast.FunctionDef) else [
@@ -1353,12 +1393,6 @@ def test_pipeline_writes_shared_fragments_once():
         ]
         for name in names:
             spans[name] = (n.lineno, n.end_lineno)
-    owners = {
-        'F.col("vec_id") < 10': "_ann_queries",
-        "btop AS (": "_DUCK_EXACT_TOP5",
-        "MIN(vec_id) AS vec_id FROM eb GROUP BY bucket": "_duck_ivf_assign",
-        "MIN(substr(md5(concat(": "_DUCK_MINHASH_BANDS",
-    }
     for fragment, owner in owners.items():
         lines = [
             i for i, ln in enumerate(src.splitlines(), 1) if fragment in ln

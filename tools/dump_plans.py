@@ -1,19 +1,31 @@
 """Dump .explain('formatted') for named registered queries to files.
 
 Usage: python tools/dump_plans.py <out_dir> <suffix> <query> [<query> ...]
-Writes <out_dir>/<query>_<suffix>.txt — the judge-facing plan evidence
-(plans/rNN/<query>_{before,after}.txt).
+Writes <out_dir>/<query>_<suffix>.txt — the plan evidence
+(plans/rNN/<query>_{before,after}.txt). The ids that count up with the
+session's history are masked, so two dumps of the same plan are equal:
+expression ids (``#123`` → ``#N``), exchange plan ids (``plan_id=N``),
+lambda variables (``lambda x_848`` → ``lambda x_N``) and the RDD id and
+call site of a checkpointed scan (``RDD[N] at localCheckpoint``).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from iceberg_benchmark_java_spark.queries import all_queries
 from iceberg_benchmark_java_spark.session import build_session, local_test_config
+
+_MASKS = (
+    (r"#\d+", "#N"),
+    (r"plan_id=\d+", "plan_id=N"),
+    (r"lambda (\w+?)_\d+", r"lambda \1_N"),
+    (r"RDD\[\d+\] at (\w+) at [^,\s]+", r"RDD[N] at \1"),
+)
 
 
 def main() -> None:
@@ -27,6 +39,8 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
+        for pattern, mask in _MASKS:
+            plan = re.sub(pattern, mask, plan)
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(plan)
         print("wrote", name, suffix, len(plan), "bytes")
