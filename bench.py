@@ -49,52 +49,52 @@ HEADLINE = [
     "pipe_embedding_near_dup",
     "pipe_text_quality",
     "pipe_events_hourly",
-    # round-5 additions (new computation, disclosed in BENCH_DELTA_r05):
+    # round-5 additions (new computation, disclosed in artifacts/BENCH_DELTA_r05):
     "pipe_decontamination",
     "pipe_sequence_packing_sharded",
     "tpch_q08_market_share",
     "tpch_q21_waiting_supplier",
-    # round-6 additions (new computation, disclosed in BENCH_DELTA_r06):
+    # round-6 additions (new computation, disclosed in artifacts/BENCH_DELTA_r06):
     "pipe_dup_span_coverage",
     "pipe_scd2_history",
     "pipe_prefix_filter_pairs",
     "pipe_semantic_dedup",
     "pipe_session_window_agg",
     # round-6 closing-session additions (new computation, disclosed in
-    # BENCH_DELTA_r06):
+    # artifacts/BENCH_DELTA_r06):
     "pipe_image_near_dup",
     "pipe_sorted_neighborhood",
     "pipe_ann_sq8_recall",
     "pipe_zorder_pruning",
     # round-6 continuation additions (new computation, disclosed in
-    # BENCH_DELTA_r06):
+    # artifacts/BENCH_DELTA_r06):
     "pipe_dsir_importance",
     "pipe_dedup_method_agreement",
-    # round-7 additions (new computation, disclosed in BENCH_DELTA_r07):
+    # round-7 additions (new computation, disclosed in artifacts/BENCH_DELTA_r07):
     "pipe_semantic_dedup_two_level",
-    # round-8 additions (new computation, disclosed in BENCH_DELTA_r08):
+    # round-8 additions (new computation, disclosed in artifacts/BENCH_DELTA_r08):
     "pipe_dup_span_removal",
     "pipe_embedding_near_dup_rp",
     "pipe_ann_two_level_recall_tuned",
     "pipe_ann_ivf_pq_topk",
-    # round-9 additions (new computation, disclosed in BENCH_DELTA_r09):
+    # round-9 additions (new computation, disclosed in artifacts/BENCH_DELTA_r09):
     # serve-path twin of pipe_ann_ivf_pq_topk (reads the materialized
     # index — the build-vs-serve latency gap is the pair of these rows)
     # and the batch-ingest SemDeDup.
     "pipe_ann_ivf_pq_serve",
     "pipe_incremental_semantic_dedup",
-    # round-10 addition (new computation, disclosed in BENCH_DELTA_r10):
+    # round-10 addition (new computation, disclosed in artifacts/BENCH_DELTA_r10):
     # serve-path twin of pipe_ann_two_level_recall_tuned (reads the
     # materialized two-level IVF-Flat index — the second build-vs-serve
     # row pair, covering the registered 0.80-recall production dial).
     "pipe_ann_two_level_serve",
-    # round-11 addition (new computation, disclosed in BENCH_DELTA_r11):
+    # round-11 addition (new computation, disclosed in artifacts/BENCH_DELTA_r11):
     # serve-path twin of pipe_incremental_semantic_dedup (per-batch plan
     # reads the materialized corpus cells instead of re-deriving the
     # corpus seeding + argmax — the third build-vs-serve row pair).
     "pipe_incremental_semantic_dedup_served",
     # round-12 addition (new computation, disclosed in
-    # OPTIMIZATION_r12.md / BENCH_DELTA_r12opt2): the deliberately
+    # artifacts/OPTIMIZATION_r12.md): the deliberately
     # compute-bound core-scaling witness. After the r11 optimizations
     # every headline entry at sf0.1 is fixed-overhead-bound, so the
     # driver's 8-vs-32-core probe read ≈1.0 everywhere and flagged

@@ -779,50 +779,14 @@ def gen_inventory(rng):
     }
 
 
-def _marker_fresh(marker: str, scale: int, force: bool) -> bool:
-    """True when an existing ``_complete`` marker proves the warehouse was
-    generated at the REQUESTED scale (the marker records the scale; legacy
-    empty markers read as scale=1). A dir previously generated at a
-    different scale is regenerated instead of silently reused — a scaling
-    run pointed at a reused dir must never measure the wrong data volume."""
-    if force or not os.path.exists(marker):
-        return False
-    content = open(marker).read().strip()
-    try:
-        recorded = int(content) if content else 1
-    except ValueError:  # corrupt marker: regenerate rather than trust it
-        return False
-    return recorded == scale
-
-
-def generate_tpcds(
-    out_dir: str = TPCDS_DIR,
-    force: bool = False,
-    scale: int = 1,
-    _marker_scale: int = 1,
-) -> list[str]:
-    """Generate the TPC-DS fixture warehouse. ``scale`` multiplies the FACT
-    group counts (store tickets / catalog orders / web orders — returns and
-    line counts follow proportionally) while dimensions stay fixed — the
-    realistic growth shape (facts grow, dims don't) that also preserves the
-    planted predicate domains. Used by tools/run_scaling.py to produce the
-    10× warehouse for scaling-curve measurements; the committed fixtures
-    are scale=1."""
-    global N_STORE_TICKETS, N_CATALOG_ORDERS, N_WEB_ORDERS
-    if scale != 1:
-        saved = (N_STORE_TICKETS, N_CATALOG_ORDERS, N_WEB_ORDERS)
-        N_STORE_TICKETS, N_CATALOG_ORDERS, N_WEB_ORDERS = (
-            x * scale for x in saved
-        )
-        try:
-            return generate_tpcds(
-                out_dir, force, scale=1, _marker_scale=scale
-            )
-        finally:
-            N_STORE_TICKETS, N_CATALOG_ORDERS, N_WEB_ORDERS = saved
+def generate_tpcds(out_dir: str = TPCDS_DIR, force: bool = False) -> list[str]:
+    """Generate the TPC-DS fixture warehouse into ``out_dir`` and return the
+    names of the tables written. An existing ``_complete`` marker means the
+    warehouse is already there: nothing is written and ``[]`` is returned,
+    unless ``force`` is set."""
     os.makedirs(out_dir, exist_ok=True)
     marker = os.path.join(out_dir, "_complete")
-    if _marker_fresh(marker, _marker_scale, force):
+    if not force and os.path.exists(marker):
         return []
     rng = np.random.default_rng(SEED)
     zips = _zip_pool()
@@ -887,8 +851,7 @@ def generate_tpcds(
     write("web_returns", wr_cols)
 
     write("inventory", gen_inventory(rng))
-    with open(marker, "w") as f:
-        f.write(str(_marker_scale))
+    open(marker, "w").close()
     return written
 
 
@@ -955,29 +918,12 @@ def _phone(rng, nationkeys):
     return [f"{10 + nk}-{x}-{y}-{z}" for nk, x, y, z in zip(nationkeys, a, b, c)]
 
 
-def generate_tpch(
-    out_dir: str = TPCH_DIR,
-    force: bool = False,
-    scale: int = 1,
-    _marker_scale: int = 1,
-) -> list[str]:
-    """Generate the TPC-H fixture warehouse. ``scale`` multiplies the
-    order count (lineitem follows at ~4 lines/order); part/supplier/
-    customer stay fixed, the facts-grow-dims-don't shape used by
-    tools/run_scaling.py. Committed fixtures are scale=1. The ``_complete``
-    marker records the scale (see :func:`_marker_fresh`), so re-pointing a
-    scaling run at a dir generated at another scale regenerates it."""
-    global NH_ORDERS
-    if scale != 1:
-        saved = NH_ORDERS
-        NH_ORDERS = saved * scale
-        try:
-            return generate_tpch(out_dir, force, scale=1, _marker_scale=scale)
-        finally:
-            NH_ORDERS = saved
+def generate_tpch(out_dir: str = TPCH_DIR, force: bool = False) -> list[str]:
+    """Generate the TPC-H fixture warehouse into ``out_dir``; the ``_complete``
+    marker and ``force`` behave as in :func:`generate_tpcds`."""
     os.makedirs(out_dir, exist_ok=True)
     marker = os.path.join(out_dir, "_complete")
-    if _marker_fresh(marker, _marker_scale, force):
+    if not force and os.path.exists(marker):
         return []
     rng = np.random.default_rng(SEED + 1)
     written = []
@@ -1108,8 +1054,7 @@ def generate_tpch(
         "shipmode": pa.array([SHIPMODES[i] for i in rng.integers(0, 7, n_li)]),
         "comment": pa.array(_comments(rng, n_li)),
     })
-    with open(marker, "w") as f:
-        f.write(str(_marker_scale))
+    open(marker, "w").close()
     return written
 
 

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 # corpus outgrows the shingle space every "rare" shingle has high df and
 # the candidate join degrades toward quadratic (measured: n=3 on the
 # 31-word fixture vocab went x7.5 wall at x10 data while n=5 measured
-# x2.5/x3.3 at x10/x100 — SCALING_r06_containment.json). The dial picks
+# x2.5/x3.3 at x10/x100 — artifacts/SCALING_r06_containment.json). The dial picks
 # the smallest n in [3, 8] whose shingle space covers the corpus with
 # margin: V^n >= 32 * n_docs. V is clamped to 2^15 so the HUGEINT power
 # in the DuckDB oracle can't overflow (past the clamp, n=3 always wins
@@ -1154,7 +1154,7 @@ def prefix_filter_pairs(
     candidate join quadratically. The default width therefore ADAPTS
     (``corpus_shingle_dial``: one probe pass, n grows with
     log_vocab(corpus) — measured as the healthy dial by the
-    prefix_filter_scaled_n row of SCALING_r06_pipe.json), exactly as
+    prefix_filter_scaled_n row of artifacts/SCALING_r06_pipe.json), exactly as
     LSH widens its bit width.
 
     Out: doc_a, doc_b, n_a, n_b, n_common, jaccard (6dp).

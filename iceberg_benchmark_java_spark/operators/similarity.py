@@ -15,8 +15,14 @@ Determinism: embeddings are float32; all arithmetic is promoted to double
 similarities are rounded to 6dp with doc-id tie-breaks — so top-k sets are
 stable across engines and partitionings.
 
-No Python UDFs: dot products use F.zip_with + F.aggregate (Catalyst
-HigherOrderFunctions, whole-stage codegen'd).
+Dot products in plain expressions use F.zip_with + F.aggregate (Catalyst
+HigherOrderFunctions). Four stages run Arrow-batched ``mapInPandas``
+kernels instead, where the interpreted folds dominate CPU:
+``nearest_centroid`` and ``two_level_assignments`` (argmax-cosine
+assignment), ``_with_cosine_arrow`` (pair-bounded exact re-rank) and
+``_rp_band_buckets_arrow`` (banded random-projection buckets). Each one
+keeps the expression route's arithmetic (the same sequential float64 fold,
+or exact int64 math), so its output is bit-identical to it.
 """
 
 from __future__ import annotations
@@ -378,7 +384,7 @@ def nearest_centroid(
 # Flat assignment scores every vector against ALL k centroids — O(N·k)
 # FLOPs, which turns quadratic when k scales with the corpus
 # (k ~ N/target_cluster_size, the SemDeDup dial: measured x26.4 wall at
-# x32 data for the scaled-k cell, SCALING_r06_pipe.json). Above this
+# x32 data for the scaled-k cell, artifacts/SCALING_r06_pipe.json). Above this
 # threshold ivf_assignments switches to the two-level route (coarse
 # ~sqrt(k) cells -> fine argmax within the cell): O(N·sqrt(k)) FLOPs,
 # same broadcast-fold plan shape, no corpus shuffle either way.
@@ -715,7 +721,7 @@ def cosine_topk_ivf(
 # are quadratic in occupancy, so a FIXED bit width saturates as the corpus
 # grows (measured: n_bits=8 went x43.3 wall at x32 data and unmeasurable
 # at x100, while 8+ceil(log2(N/N0)) bits measured x2.9/x5.45 —
-# SCALING_r06_pipe.json / _x100.json). The dial is derived from ONE
+# artifacts/SCALING_r06_pipe.json / _x100.json). The dial is derived from ONE
 # count() at plan-build time; integer shift arithmetic keeps the Python
 # and DuckDB-oracle derivations bit-identical.
 BANDED_BASE_VECTORS = 2000
@@ -1398,10 +1404,11 @@ def build_ivf_pq_index(
     # PROVIDED components are normal-range floats from a non-zero vector:
     # x = ±0.0 on a zero-norm row (0/0 → NaN fails `>= 0`) or a denormal
     # x that underflows to -0.0 after the divide would flip the coded bit
-    # vs the normalized-side oracle. The fixture generators guarantee
-    # this (Gaussian float32 components, |x| ≫ denormal range — see
-    # tools/run_scaling_pipe._gen_embeddings); corpora that can't are
-    # routed through pq_codes(normalize_embeddings(...)) instead.
+    # vs the normalized-side oracle. The sf0.001-sf0.1 `embeddings`
+    # tables hold no zero and no subnormal component (smallest |x| is
+    # ~1e-6, far above float32's 1.2e-38 normal floor); a corpus that
+    # can't promise this is routed through
+    # pq_codes(normalize_embeddings(...)) instead.
     index = assignments.select(
         "vec_id", "cent_id", _pq_code_array(d_sub, ne_col="embedding").alias("codes")
     )
@@ -1538,7 +1545,7 @@ def two_level_topk_from_index(
 # only until SEMDEDUP_MAX_BITS caps k = 65,536 — past the cap (and under
 # orthant skew before it) individual clusters grow with the corpus and
 # the pair stage turns quadratic again (measured x33.3 wall at x100,
-# SCALING_r07_semdedup_addendum.json). Clusters above the bound are
+# artifacts/SCALING_r07_semdedup_addendum.json). Clusters above the bound are
 # re-split by sign-orthant on the dimensions AFTER the seeding bits
 # (the same deterministic re-seed geometry seed_centroids uses, applied
 # within the oversize cell): each doubling of occupancy past the bound

@@ -981,7 +981,7 @@ def embedding_near_dup_banded_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     adaptive_sign_bits(count) — 8 bits at fixture scale, +1 per corpus
     doubling past 2000 vectors — so the REGISTERED entry is the measured
     scale-safe plan (x2.9 wall at x32, x5.45 at x100 vs
-    x43.3/unmeasurable at a fixed 8-bit dial, SCALING_r06_pipe.json).
+    x43.3/unmeasurable at a fixed 8-bit dial, artifacts/SCALING_r06_pipe.json).
     Past 16 bits (where 4 band slices would exhaust the 64 dims) the
     bands switch to deterministic random-hyperplane signs
     (similarity._rp_band_buckets_arrow, modeled by the oracle's CASE),
@@ -2864,7 +2864,7 @@ def containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest n in [3,8] with vocab^n >= 32*n_docs (n=3 at fixture scale;
     n=5 on the x10..x100 scaling warehouses, the dial measured at
     x2.5/x3.3 wall vs x7.5+ for fixed n=3 —
-    SCALING_r06_containment.json), so the REGISTERED entry is the
+    artifacts/SCALING_r06_containment.json), so the REGISTERED entry is the
     scale-safe plan. Same bounded self-join shape as
     pipe_ngram_jaccard_pairs."""
     d = load_table(spark, sf_dir, "documents")
@@ -5200,7 +5200,7 @@ def ann_two_level_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     a coarse cell it wasn't routed to). This entry measures the COMPOSED
     effect, so an operator adopting the O(N·sqrt(k)) assignment at 100 TB
     knows the recall price alongside the x26.4 -> x10.4 assignment
-    speedup (SCALING_r07 artifacts). Measured 0.62 mean recall@5 at
+    speedup (artifacts/SCALING_r07_*.json). Measured 0.62 mean recall@5 at
     sf0.01 — the baseline pipe_ann_two_level_recall_tuned buys back.
     The oracle opens with _DUCK_TWO_LEVEL_ASSIGN, the CTEs of
     pipe_semantic_dedup_two_level, so the two cannot drift, and scores
@@ -5457,7 +5457,7 @@ def semantic_dedup_split_price_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-cluster pairs) — and reconcile: what fraction of e-neighbor
     pairs and of dropped duplicates does the bound retain? This is the
     quantified trade that replaced the x33-at-x100 pair-stage cliff
-    (SCALING_r07/r08 artifacts): the split keeps the pair stage
+    (artifacts/SCALING_r0{7,8}_*.json): the split keeps the pair stage
     bounded per cell at ANY corpus size, and this entry pins what
     it gives up. Measured at sf0.01 WITH the round-10 asymmetric
     multi-probe boundary assignment (SEMDEDUP_PROBE_MARGIN=0.95·rms,

@@ -6,7 +6,9 @@ driver, so it must (a) give exactly the schema Spark's inference gives,
 (b) start no Spark job, and (c) never serve a stale table. The publisher
 keys derived state on content: a changed source rebuilds, an unchanged
 one is served as published, and a failed or interrupted build never
-leaves a half-written table served. The source guards pin both.
+leaves a half-written table served. The source guards pin both. The
+committed fixture warehouses sit outside the publisher: their generators
+must reproduce them, marker included.
 """
 
 from __future__ import annotations
@@ -32,6 +34,7 @@ from iceberg_benchmark_java_spark.catalog import (
     load_table,
     register_views,
 )
+from iceberg_benchmark_java_spark.fixtures import generate_tpcds, generate_tpch
 from tests.conftest import SF_CORRECTNESS, SF_SMOKE
 
 REPO = Path(__file__).resolve().parent.parent
@@ -303,3 +306,24 @@ def test_partitioned_tpcds_fact_follows_a_rewritten_source(spark, tmp_path, monk
     assert (part / "store_sales").stat().st_ino != inos["store_sales"]
     for t in ("catalog_sales", "web_sales", "inventory"):
         assert (part / t).stat().st_ino == inos[t]
+
+
+# --- committed fixture warehouses --------------------------------------------
+
+
+@pytest.mark.parametrize("suite", ["tpcds", "tpch"])
+def test_fixture_generators_reproduce_committed_warehouse(suite, tmp_path):
+    # the generators are the recipe of the tracked warehouse: they must
+    # write it table for table, and their `_complete` marker byte for byte,
+    # so regenerating in place leaves the tree clean
+    generate = {"tpcds": generate_tpcds, "tpch": generate_tpch}[suite]
+    committed = REPO / "fixtures" / suite
+    names = sorted(p.stem for p in committed.glob("*.parquet"))
+    out = tmp_path / suite
+    assert sorted(generate(str(out))) == names
+    for name in names:
+        got = pq.read_table(out / f"{name}.parquet")
+        assert got.equals(pq.read_table(committed / f"{name}.parquet")), name
+    assert (out / "_complete").read_bytes() == (committed / "_complete").read_bytes()
+    assert generate(str(out)) == []
+    assert sorted(generate(str(out), force=True)) == names

@@ -231,7 +231,7 @@ CORPUS_PLAN_SAMPLE = [
 BNLJ_OK = {"q88", "q90"}
 
 
-@pytest.mark.slow  # corpus tier: also re-run at 1x AND 10x by tools/run_scaling.py
+@pytest.mark.slow  # corpus tier
 @pytest.mark.parametrize("name", CORPUS_PLAN_SAMPLE)
 def test_corpus_plan_quality(spark, name):
     """Marquee verbatim TPC-DS files: filters reach the parquet scan, no
@@ -1393,7 +1393,7 @@ GLOBAL_WINDOW_ALLOWED = {
     # collect job, not the registered entry's plan. Entries above keep
     # the window because their plans also consume the centroid table
     # through routing joins. Re-audited by the committed
-    # WINDOW_INVENTORY_r11opt1.json. ((*) ivf_balance left too: its
+    # artifacts/WINDOW_INVENTORY_r11opt1.json. ((*) ivf_balance left too: its
     # remaining windows are cent_id-partitioned.)
 }
 
@@ -1407,7 +1407,7 @@ def test_global_window_allowlist(spark):
     Known blind spot, by construction: windows buried inside
     localCheckpoint RDD buffers (the in-plan incremental-SemDeDup twin's
     seeding) are invisible to the final plan string; the serve-path plan
-    tests cover those routes. The committed WINDOW_INVENTORY_r11.json
+    tests cover those routes. The committed artifacts/WINDOW_INVENTORY_r11.json
     records the per-entry occurrence counts from the same tool."""
     from iceberg_benchmark_java_spark.queries import all_queries
     from tools.window_inventory import inventory

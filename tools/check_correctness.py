@@ -94,7 +94,7 @@ def main() -> int:
     from iceberg_benchmark_java_spark.queries import all_oracles, all_queries
     from iceberg_benchmark_java_spark.session import build_session, local_test_config
 
-    # Sweep-at-HEAD guard: a CORRECTNESS_LOCAL_r*.json artifact claims
+    # Sweep-at-HEAD guard: a CORRECTNESS_LOCAL_*.json artifact claims
     # "every registered query, at the committed HEAD". Refuse to write
     # one from a dirty source tree or a partial run — the invariant that
     # slipped in rounds 6-7 (sweeps that predated the final commits),

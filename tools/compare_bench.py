@@ -4,7 +4,7 @@ Usage: python tools/compare_bench.py <old.json> <new.json> [threshold_pct]
        python tools/compare_bench.py <old> <new> [threshold_pct] --out FILE
 
 ``--out FILE`` additionally writes the full report (probe classification +
-per-query table) to FILE — the mechanism that generates BENCH_DELTA_r{N}.txt
+per-query table) to FILE — the mechanism that generates artifacts/BENCH_DELTA_r{N}.txt
 directly from the tool, so the host-noise argument is mechanical rather than
 hand-written.
 
