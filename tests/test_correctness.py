@@ -32,7 +32,7 @@ ORACLES = all_oracles()
 #   slow   — the 125 verbatim corpus entries (full reference SQL through
 #            Spark AND DuckDB), plain `pytest` for everything.
 # The canonical full-registry gate remains tools/check_correctness.py at
-# sf0.01 (artifacts/CORRECTNESS_LOCAL_r{N}.json), swept every round regardless of
+# sf0.01 (artifacts/CORRECTNESS_LOCAL_*.json), swept every round regardless of
 # tiering, so demoting a test here never reduces what's hash-checked.
 FAST_SET = {
     # relational families
