@@ -8,10 +8,9 @@ missing bootstrap:
   serves a schema from metadata, it takes it from the parquet footer on the
   driver, so an open starts no Spark job and nothing is memoized.
 - ``ensure_published``: the one publisher of derived on-disk tables
-  (stored indexes, partitioned layouts, scaled warehouses). A directory is
-  served while its ``_complete`` marker carries the caller's stamp of the
-  content it derives from, and otherwise rebuilt in a temp dir and renamed
-  into place.
+  (stored indexes, partitioned layouts). A directory is served while its
+  ``_complete`` marker carries the caller's stamp of the content it derives
+  from, and otherwise rebuilt in a temp dir and renamed into place.
 - ``register_views``: register the driver-generated parquet fixtures
   (TESTDATA.md) as temp views — the no-dependency path used by tests and
   the correctness gate. ``read_tables`` is the one reader of the flat and
@@ -258,8 +257,8 @@ def _publish_index(d: str, stamp: str, write_tables) -> None:
 
 
 def ensure_published(d: str, stamp: str, write_tables) -> str:
-    """THE discipline for derived on-disk state (stored indexes,
-    partitioned layouts, scaled warehouses): ``d`` is served read-only
+    """THE discipline for derived on-disk state (stored indexes and
+    partitioned layouts): ``d`` is served read-only
     while its ``_complete`` marker carries ``stamp``, and otherwise
     rebuilt by ``write_tables(tmp_dir)`` and published by
     :func:`_publish_index`. The stamp names everything the tables derive

@@ -9,20 +9,20 @@ Mirrors the reference's picocli surface (IcebergBenchmark.java:31-90):
   --run-id                      run identifier (results land under it)
 
 Plus rebuild-specific axes replacing runner.sh/partitioned_runner.sh:
-  --sf-dir          parquet fixture dir → registered as temp views when no
-                    Iceberg catalog is configured (local mode)
+  --fixture-suite   register the committed fixtures/<suite> warehouse under
+                    bare table names (local mode, no Iceberg catalog)
+  --partitioned-warehouse   date-partitioned facts under <path>/<suite>
   --shuffle-partitions / --no-aqe / --schema-size
 
-Run:  python -m iceberg_benchmark_java_spark.cli --tpch-dir corpus/tpch \
-          --run-id local-1 --output-gcs-path /tmp/ibx-results --sf-dir \
-          /root/testdata/sf0.01
+Run:  python -m iceberg_benchmark_java_spark.cli --tpch-dir corpus/tpch_ref \
+          --fixture-suite tpch --run-id local-1 \
+          --output-gcs-path /tmp/ibx-results
 """
 
 from __future__ import annotations
 
 import argparse
 
-from .catalog import register_views
 from .harness.runner import BenchmarkRunner
 from .session import SparkConfig, build_session
 
@@ -31,10 +31,8 @@ def make_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(description="PySpark benchmark harness")
     p.add_argument("--tpcds-dir", default=None)
     p.add_argument("--tpch-dir", default=None)
-    p.add_argument("--pipeline-dir", default=None, help="training-data pipeline suite")
     p.add_argument("--tpcds-data-db", default="tpcds")
     p.add_argument("--tpch-data-db", default="tpch")
-    p.add_argument("--pipeline-data-db", default="pipeline")
     p.add_argument("--catalog-name", default="")
     p.add_argument(
         "--warehouse",
@@ -44,7 +42,6 @@ def make_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--output-gcs-path", required=True)
     p.add_argument("--run-id", required=True)
-    p.add_argument("--sf-dir", default=None, help="parquet fixtures → temp views")
     p.add_argument(
         "--fixture-suite",
         choices=["tpcds", "tpch"],
@@ -56,8 +53,9 @@ def make_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--partitioned-warehouse",
         default=None,
-        help="materialize+use a time-partitioned fact layout at this path "
-        "(the reference's partitioned_runner.sh axis)",
+        help="materialize+use a time-partitioned layout of the "
+        "--fixture-suite facts under <path>/<suite> (the reference's "
+        "partitioned_runner.sh axis)",
     )
     p.add_argument("--schema-size", default="sf?")
     p.add_argument("--shuffle-partitions", type=int, default=None)
@@ -67,7 +65,10 @@ def make_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: list[str] | None = None) -> int:
-    args = make_parser().parse_args(argv)
+    parser = make_parser()
+    args = parser.parse_args(argv)
+    if args.partitioned_warehouse and not args.fixture_suite:
+        parser.error("--partitioned-warehouse applies to --fixture-suite facts")
     cfg = SparkConfig(
         app_name=f"ibx-{args.run_id}",
         shuffle_partitions=args.shuffle_partitions,
@@ -92,15 +93,11 @@ def main(argv: list[str] | None = None) -> int:
                 "the catalog conf in the launcher"
             )
             return 2
-    if args.sf_dir:
-        register_views(spark, args.sf_dir, partitioned_dir=args.partitioned_warehouse)
     if args.fixture_suite:
         # Bare-name views over fixtures/<suite>: catalog-less templating
         # strips ${database}.${schema}., leaving exactly these names, so the
         # byte-identical reference files execute through the harness path
-        # (discovery → templating → timed noop → results CSV). Registered
-        # after sf_dir views on purpose: the suite's schema wins a clash
-        # (e.g. `customer` exists in both worlds with different columns).
+        # (discovery → templating → timed noop → results CSV).
         # --partitioned-warehouse switches the facts to the date-partitioned
         # layout (partitioned_runner.sh axis over the verbatim corpus).
         import os as _os
@@ -144,10 +141,6 @@ def main(argv: list[str] | None = None) -> int:
     if args.tpch_dir:
         runner.run_suite(
             "TPC-H", args.tpch_dir, args.catalog_name, args.tpch_data_db, use_db
-        )
-    if args.pipeline_dir:
-        runner.run_suite(
-            "PIPELINE", args.pipeline_dir, args.catalog_name, args.pipeline_data_db, use_db
         )
     target = runner.flush_csv(args.output_gcs_path)
     failed = [r.query_name for r in runner.results if r.status == "FAILED"]

@@ -42,9 +42,7 @@ class SparkConfig:
     shuffle_partitions: int | None = None
     catalog_name: str = "local"
     warehouse: str | None = None  # enables Iceberg catalog when set
-    vectorization: bool = True  # spark.sql.iceberg.vectorization.enabled
     adaptive: bool = True
-    session_timezone: str = "UTC"
     extra_confs: dict[str, str] = field(default_factory=dict)
 
 
@@ -80,7 +78,7 @@ def build_session(cfg: SparkConfig | None = None) -> SparkSession:
         b.config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.debug.maxToStringFields", "1000")
         .config("spark.sql.adaptive.enabled", str(cfg.adaptive).lower())
-        .config("spark.sql.session.timeZone", cfg.session_timezone)
+        .config("spark.sql.session.timeZone", "UTC")
         # Arrow for the Pandas-UDF extension operators (operators/*).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Parquet TIMESTAMP(NANOS) columns (events.ts) surface as LONG
@@ -119,10 +117,8 @@ def build_session(cfg: SparkConfig | None = None) -> SparkSession:
             .config(f"spark.sql.catalog.{cfg.catalog_name}", ICEBERG_CATALOG_IMPL)
             .config(f"spark.sql.catalog.{cfg.catalog_name}.type", "hadoop")
             .config(f"spark.sql.catalog.{cfg.catalog_name}.warehouse", cfg.warehouse)
-            .config(
-                "spark.sql.iceberg.vectorization.enabled",
-                str(cfg.vectorization).lower(),
-            )
+            # spark_submit_with_analytics_core.sh:17
+            .config("spark.sql.iceberg.vectorization.enabled", "true")
         )
     for k, v in cfg.extra_confs.items():
         b = b.config(k, v)

@@ -1,20 +1,20 @@
 """Run-matrix orchestrator (harness operator A15).
 
 The reference drives its benchmark through shell launchers that cross
-scale factors with connector configurations (runner.sh:27-43,
+connector configurations over its corpus (runner.sh:27-43,
 partitioned_runner.sh:27-43). This is the rebuild's equivalent: a config
-matrix × the harness CLI, one fresh JVM per cell (as spark-submit gives the
-reference), results landing under <output>/<run-id> per cell plus a
-one-line JSON summary.
+matrix × the harness CLI over the verbatim corpus (corpus/<suite>_ref on
+the committed fixtures/<suite> warehouse), one fresh JVM per suite per cell
+(as spark-submit gives the reference; bare-name fixture views are
+per-suite), results landing under <output>/<run-id> plus a one-line JSON
+summary. Every run is labelled with the fixture scale.
 
 Usage:
-  python tools/run_matrix.py --output /tmp/ibx-matrix \
-      [--sf-dirs /root/testdata/sf0.001,/root/testdata/sf0.01] \
-      [--tpch-dir corpus/tpch] [--tpcds-dir corpus/tpcds]
+  python tools/run_matrix.py --output /tmp/ibx-matrix [--configs base,noaqe]
 
-Axes (edit MATRIX for more): shuffle partitions × AQE on/off — the local
-stand-ins for the reference's connector/layout axes, which are environment
-(GCS transport, Iceberg warehouse layout), not engine.
+Axes (edit MATRIX for more): shuffle partitions × AQE on/off × partitioned
+layout — the local stand-ins for the reference's connector/layout axes,
+which are environment (GCS transport, Iceberg warehouse layout), not engine.
 """
 
 from __future__ import annotations
@@ -27,6 +27,9 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+from iceberg_benchmark_java_spark.corpus_ref import CORPUS_FIXTURE_SCALE, SUITES  # noqa: E402
 
 MATRIX: list[dict] = [
     {"name": "base", "args": []},
@@ -39,18 +42,7 @@ MATRIX: list[dict] = [
 def main() -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--output", required=True)
-    p.add_argument("--sf-dirs", default="/root/testdata/sf0.001")
-    p.add_argument("--tpch-dir", default=str(REPO / "corpus" / "tpch"))
-    p.add_argument("--tpcds-dir", default=str(REPO / "corpus" / "tpcds"))
     p.add_argument("--configs", default=None, help="comma-separated subset of MATRIX names")
-    p.add_argument(
-        "--ref",
-        action="store_true",
-        help="run the VERBATIM reference corpora (corpus/*_ref over the "
-        "fixtures warehouse) instead of the fixture-adapted ones; one CLI "
-        "process per suite per cell, since bare-name fixture views are "
-        "per-suite",
-    )
     args = p.parse_args()
 
     cells = [
@@ -58,63 +50,39 @@ def main() -> int:
         for c in MATRIX
         if args.configs is None or c["name"] in args.configs.split(",")
     ]
+    sf = str(CORPUS_FIXTURE_SCALE)
     summary = []
-    for sf_dir in args.sf_dirs.split(","):
-        sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-        for cell in cells:
-            if args.ref:
-                variants = [
-                    (
-                        f"sf{sf}-{cell['name']}-ref{suite}",
-                        [
-                            f"--{suite}-dir",
-                            str(REPO / "corpus" / f"{suite}_ref"),
-                            "--fixture-suite",
-                            suite,
-                        ],
-                    )
-                    for suite in ("tpcds", "tpch")
-                ]
-            else:
-                variants = [
-                    (
-                        f"sf{sf}-{cell['name']}",
-                        [
-                            "--tpch-dir",
-                            args.tpch_dir,
-                            "--tpcds-dir",
-                            args.tpcds_dir,
-                        ],
-                    )
-                ]
-            for run_id, suite_args in variants:
-                cmd = [
-                    sys.executable,
-                    "-m",
-                    "iceberg_benchmark_java_spark.cli",
-                    *suite_args,
-                    "--run-id",
-                    run_id,
-                    "--output-gcs-path",
-                    args.output,
-                    "--sf-dir",
-                    sf_dir,
-                    "--schema-size",
-                    f"sf{sf}",
-                    *cell["args"],
-                ]
-                t0 = time.time()
-                proc = subprocess.run(
-                    cmd, cwd=REPO, capture_output=True, text=True, check=False
-                )
-                wall = round(time.time() - t0, 1)
-                ok = proc.returncode == 0
-                summary.append(
-                    {"run_id": run_id, "ok": ok, "wall_sec": wall, "cell": cell["name"], "sf": sf}
-                )
-                print(f"{'PASS' if ok else 'FAIL'}  {run_id}  {wall}s", flush=True)
-                if not ok:
-                    print(proc.stdout[-1500:], proc.stderr[-1500:], sep="\n", flush=True)
+    for cell in cells:
+        for suite in SUITES:
+            run_id = f"sf{sf}-{cell['name']}-ref{suite}"
+            cmd = [
+                sys.executable,
+                "-m",
+                "iceberg_benchmark_java_spark.cli",
+                f"--{suite}-dir",
+                SUITES[suite][0],
+                "--fixture-suite",
+                suite,
+                "--run-id",
+                run_id,
+                "--output-gcs-path",
+                args.output,
+                "--schema-size",
+                f"sf{sf}",
+                *cell["args"],
+            ]
+            t0 = time.time()
+            proc = subprocess.run(
+                cmd, cwd=REPO, capture_output=True, text=True, check=False
+            )
+            wall = round(time.time() - t0, 1)
+            ok = proc.returncode == 0
+            summary.append(
+                {"run_id": run_id, "ok": ok, "wall_sec": wall, "cell": cell["name"], "sf": sf}
+            )
+            print(f"{'PASS' if ok else 'FAIL'}  {run_id}  {wall}s", flush=True)
+            if not ok:
+                print(proc.stdout[-1500:], proc.stderr[-1500:], sep="\n", flush=True)
     print(json.dumps({"matrix": summary}))
     return 0 if all(s["ok"] for s in summary) else 1
 
