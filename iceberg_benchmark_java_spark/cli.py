@@ -22,7 +22,9 @@ Run:  python -m iceberg_benchmark_java_spark.cli --tpch-dir corpus/tpch_ref \
 from __future__ import annotations
 
 import argparse
+import os
 
+from .corpus_ref import register_bare_views
 from .harness.runner import BenchmarkRunner
 from .session import SparkConfig, build_session
 
@@ -100,12 +102,8 @@ def main(argv: list[str] | None = None) -> int:
         # (discovery → templating → timed noop → results CSV).
         # --partitioned-warehouse switches the facts to the date-partitioned
         # layout (partitioned_runner.sh axis over the verbatim corpus).
-        import os as _os
-
-        from .corpus_ref import register_bare_views
-
         part_dir = (
-            _os.path.join(args.partitioned_warehouse, args.fixture_suite)
+            os.path.join(args.partitioned_warehouse, args.fixture_suite)
             if args.partitioned_warehouse
             else None
         )

@@ -1,10 +1,8 @@
-"""Repository invariants that need no SparkSession: every shipped SQL file
-is oracle-checked, and every repo path a user-facing doc cites exists."""
+"""Repository invariants that need no SparkSession."""
 
 from __future__ import annotations
 
 import glob
-import os
 import re
 from pathlib import Path
 
@@ -14,21 +12,17 @@ from tests.conftest import REPO
 
 def test_every_corpus_sql_file_has_an_oracle():
     """The oracle gate covers every SQL file the repo ships: each ``*.sql``
-    under ``corpus/`` outside ``*_oracles/`` lives in a suite's query
+    under ``corpus/`` outside ``*_oracles/`` sits in a suite's query
     directory and has a committed DuckDB oracle."""
-    suite_of = {os.path.realpath(d): suite for suite, (d, _, _) in corpus_ref.SUITES.items()}
-    checked, unchecked = [], []
-    for path in sorted(Path(corpus_ref.CORPUS).rglob("*.sql")):
-        rel = path.relative_to(corpus_ref.CORPUS)
-        if rel.parts[0].endswith("_oracles"):
-            continue
-        suite = suite_of.get(os.path.realpath(path.parent))
-        if suite and os.path.exists(corpus_ref.oracle_path(suite, path.stem)):
-            checked.append(rel)
-        else:
-            unchecked.append(str(rel))
-    assert checked
-    assert not unchecked, unchecked
+    suite_of = {Path(d): suite for suite, (d, _, _) in corpus_ref.SUITES.items()}
+    files = [p for p in Path(corpus_ref.CORPUS).rglob("*.sql") if not p.parent.name.endswith("_oracles")]
+    unchecked = [
+        str(p.relative_to(corpus_ref.CORPUS))
+        for p in files
+        if p.parent not in suite_of
+        or not Path(corpus_ref.oracle_path(suite_of[p.parent], p.stem)).is_file()
+    ]
+    assert files and not unchecked, unchecked
 
 
 # ROADMAP, CHANGES and VERDICT name deleted and planned files on purpose.
@@ -37,15 +31,11 @@ _REPO_DIRS = (
     "corpus/", "tools/", "tests/", "artifacts/", "iceberg_benchmark_java_spark/",
     "perfbench/", "fixtures/", "plans/",
 )
-_FENCE = re.compile(r"^```.*?^```", re.M | re.S)
-_CODE_SPAN = re.compile(r"`([^`]+)`")
-_BRACES = re.compile(r"\{([^{}]*)\}")
 
 
 def _globs(path: str) -> list[str]:
-    """``{a,b}`` expands to each alternative; a placeholder such as ``{N}``
-    reads as ``*``."""
-    m = _BRACES.search(path)
+    """``{a,b}`` expands to each alternative; a placeholder such as ``{N}`` reads as ``*``."""
+    m = re.search(r"\{([^{}]*)\}", path)
     if not m:
         return [path]
     alts = m.group(1).split(",") if "," in m.group(1) else ["*"]
@@ -53,13 +43,12 @@ def _globs(path: str) -> list[str]:
 
 
 def test_doc_repo_paths_exist():
+    """Every repo path a user-facing doc cites in a code span exists."""
     missing = []
     for doc in _DOCS:
-        text = _FENCE.sub("", (REPO / doc).read_text())
-        for span in _CODE_SPAN.findall(text):
-            path = span.split()[0].split("::")[0] if span.strip() else ""
-            if path.startswith(_REPO_DIRS) and not any(
-                glob.glob(str(REPO / g)) for g in _globs(path)
-            ):
+        text = re.sub(r"^```.*?^```", "", (REPO / doc).read_text(), flags=re.M | re.S)
+        for span in re.findall(r"`([^`]+)`", text):
+            path = span.split()[0].split("::")[0]
+            if path.startswith(_REPO_DIRS) and not any(glob.glob(str(REPO / g)) for g in _globs(path)):
                 missing.append(f"{doc}: {path}")
     assert not missing, missing
