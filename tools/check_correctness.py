@@ -7,6 +7,14 @@ all columns, exact equality after canonicalization).
 
 Usage:  python tools/check_correctness.py [sf_dir] [query ...]
         python tools/check_correctness.py --sample N --seed S [sf_dir]
+        python tools/check_correctness.py --json artifacts/CORRECTNESS_LOCAL.json [sf_dir]
+
+``--json PATH`` writes ``{"commit": HEAD, "queries": {name: record}}``;
+each record carries ``spark_sha256``, the sha256 of the canonicalized
+Spark frame, so two sweeps of the same registry show which entries'
+rows changed even where their oracles changed with them. The committed
+full-registry sweep is the one file ``artifacts/CORRECTNESS_LOCAL.json``,
+overwritten by each sweep; git history keeps the older ones.
 
 ``--sample N --seed S`` checks a reproducible random N-query subset of the
 full registry (seeded shuffle of the sorted names) — the one-liner a judge
@@ -17,8 +25,10 @@ re-runs to spot-check beyond the driver gate's fixed first-50 sample, e.g.:
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
+import subprocess
 import sys
 
 # Repo root derived from this file's location, not a literal path — the
@@ -42,6 +52,11 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
             # on the Spark side vs NaT/None on the DuckDB side — one sentinel.
             df[c] = s.apply(lambda v: "NaT" if v is None or v != v else str(v))
     return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
+
+
+def frame_sha256(df: pd.DataFrame) -> str:
+    """sha256 of the canonicalized frame's CSV text (header included)."""
+    return hashlib.sha256(canon(df).to_csv(index=False).encode()).hexdigest()
 
 
 def values_equal(a, b) -> bool:
@@ -94,7 +109,7 @@ def main() -> int:
     from iceberg_benchmark_java_spark.queries import all_oracles, all_queries
     from iceberg_benchmark_java_spark.session import build_session, local_test_config
 
-    # Sweep-at-HEAD guard: a CORRECTNESS_LOCAL_*.json artifact claims
+    # Sweep-at-HEAD guard: a CORRECTNESS_LOCAL.json artifact claims
     # "every registered query, at the committed HEAD". Refuse to write
     # one from a dirty source tree or a partial run — the invariant that
     # slipped in rounds 6-7 (sweeps that predated the final commits),
@@ -106,8 +121,6 @@ def main() -> int:
                 "partial run: drop --sample/query filters or rename the "
                 "output (the artifact's contract is the FULL registry)"
             )
-        import subprocess
-
         dirty = [
             ln
             for ln in subprocess.run(
@@ -158,16 +171,18 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {e}")
             records[name] = {
                 "rows_match": False, "schema_match": False, "hash_match": False,
-                "spark_rows": None, "oracle_rows": None,
+                "spark_rows": None, "oracle_rows": None, "spark_sha256": None,
                 "err": f"spark error: {e}"[:500],
             }
             n_fail += 1
             continue
+        sha = frame_sha256(sdf)
         if name not in oracles:
             print(f"NOOR  {name}: rows={len(sdf)} (rows-only check)")
             records[name] = {
                 "rows_match": None, "schema_match": None, "hash_match": None,
-                "spark_rows": len(sdf), "oracle_rows": None, "err": "rows-only",
+                "spark_rows": len(sdf), "oracle_rows": None, "spark_sha256": sha,
+                "err": "rows-only",
             }
             n_noracle += 1
             continue
@@ -177,7 +192,7 @@ def main() -> int:
             print(f"FAIL  {name}: duckdb error: {e}")
             records[name] = {
                 "rows_match": False, "schema_match": False, "hash_match": False,
-                "spark_rows": len(sdf), "oracle_rows": None,
+                "spark_rows": len(sdf), "oracle_rows": None, "spark_sha256": sha,
                 "err": f"duckdb error: {e}"[:500],
             }
             n_fail += 1
@@ -189,6 +204,7 @@ def main() -> int:
             "hash_match": not errs,
             "spark_rows": len(sdf),
             "oracle_rows": len(ddf),
+            "spark_sha256": sha,
             "err": "; ".join(errs)[:500] or None,
         }
         if errs:
@@ -201,8 +217,13 @@ def main() -> int:
     if json_out:
         import json
 
+        head = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=_REPO_ROOT, capture_output=True, text=True,
+        ).stdout.strip()
         with open(json_out, "w") as f:
-            json.dump(records, f, indent=2)
+            json.dump({"commit": head, "queries": records}, f, indent=2)
+            f.write("\n")
     return 1 if n_fail else 0
 
 
