@@ -144,21 +144,40 @@ def _with_cosine_arrow(
 
 
 def _cosine_topk(
-    cand: DataFrame, k: int, cols: tuple[str, ...] = ("query_id", "vec_id")
+    cand: DataFrame,
+    k: int,
+    cols: tuple[str, ...] = ("query_id", "vec_id"),
+    by: tuple[str, ...] = ("query_id",),
+    settings: DataFrame | None = None,
 ) -> DataFrame:
     """The exact re-rank every top-k path ends with: over candidate rows
     carrying ``q_embedding`` and ``embedding``, sim = 6dp cosine, rnk =
-    row_number per query_id by (sim desc, vec_id asc), rows with
-    rnk <= k. Out: ``cols``, sim, rnk."""
+    row_number per ``by`` by (sim desc, vec_id asc), rows with
+    rnk <= k. Out: ``cols``, sim, rnk.
+
+    A recall sweep passes its ``settings`` table and ranks per (dials,
+    query): each candidate is scored once, then copied to every setting
+    that covers it (:func:`_covered_by`), so its ``cols`` must carry
+    probe_rank. The settings' columns then come out after sim."""
     scored = cand.select(
         *cols,
         F.round(cosine(F.col("q_embedding"), F.col("embedding")), SIM_SCALE).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(*cols, "sim", "rnk")
+    if settings is not None:
+        scored = _covered_by(scored, settings)
+    w = Window.partitionBy(*by).orderBy(F.desc("sim"), F.asc("vec_id"))
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= k
+    )
+
+
+def _covered_by(cand: DataFrame, settings: DataFrame) -> DataFrame:
+    """Each ``cand`` row once per row of the broadcast sweep ``settings``
+    table (an ``n_probe`` column plus any other dials) whose n_probe
+    reaches the row's probe_rank: the top-k over the first p probed
+    lists is the top-k over the candidates with probe_rank <= p."""
+    return cand.join(
+        F.broadcast(settings), F.col("probe_rank") <= F.col("n_probe")
     )
 
 
@@ -167,7 +186,8 @@ def _probe_lists(
 ) -> DataFrame:
     """IVF query routing: each query scored against the broadcast
     ``centroids`` (csim = 6dp cosine), keeping its ``n_probe`` best lists
-    by (csim desc, cent_id asc). Out: ``cols``."""
+    by (csim desc, cent_id asc); ``rn`` is a list's probe rank. Out:
+    ``cols``."""
     q_scored = queries.crossJoin(F.broadcast(centroids)).select(
         "query_id",
         "q_embedding",
@@ -706,13 +726,50 @@ def cosine_topk_ivf(
     ``refine_iters``: k-means refinement passes for the centroids.
     """
     centroids, assignments = ivf_assignments(embeddings, n_centroids, refine_iters)
-    probes = _probe_lists(
-        queries, centroids, n_probe, "query_id", "q_embedding", "cent_id"
+    return _cosine_topk(
+        _ivf_candidates(queries, centroids, assignments, n_probe), k
     )
-    cand = probes.join(assignments, "cent_id").filter(
+
+
+def _ivf_candidates(
+    queries: DataFrame,
+    centroids: DataFrame,
+    assignments: DataFrame,
+    n_probe: int,
+    *cols,
+) -> DataFrame:
+    """The members of each query's ``n_probe`` probed lists, self-matches
+    dropped: (cent_id, query_id, q_embedding, ``cols``..., vec_id,
+    embedding). ``cols`` are extra :func:`_probe_lists` columns."""
+    probes = _probe_lists(
+        queries, centroids, n_probe, "query_id", "q_embedding", "cent_id", *cols
+    )
+    return probes.join(assignments, "cent_id").filter(
         F.col("query_id") != F.col("vec_id")
     )
-    return _cosine_topk(cand, k)
+
+
+def _ivf_probe_sweep(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    settings: DataFrame,
+    n_probe: int,
+    k: int = 5,
+    n_centroids: int = 16,
+) -> DataFrame:
+    """:func:`cosine_topk_ivf` at every n_probe row of the ``settings``
+    table, from ONE index build and one scored candidate set: each query
+    is routed to ``n_probe`` lists (the sweep's largest), every candidate
+    is scored once and ranked per (n_probe, query). Out: query_id,
+    vec_id, probe_rank, sim, n_probe, rnk."""
+    centroids, assignments = ivf_assignments(embeddings, n_centroids)
+    cand = _ivf_candidates(
+        queries, centroids, assignments, n_probe, F.col("rn").alias("probe_rank")
+    )
+    return _cosine_topk(
+        cand, k, ("query_id", "vec_id", "probe_rank"), ("n_probe", "query_id"),
+        settings,
+    )
 
 
 # Adaptive sign-LSH sizing: keep expected bucket occupancy at the level
@@ -1296,6 +1353,13 @@ def _adc_score() -> Column:
     )
 
 
+def _adc_rank(by: tuple[str, ...] = ("query_id",)) -> Column:
+    """Row number of an ADC-scored row within ``by``, by (s_int desc,
+    vec_id asc): the ADC shortlist order both PQ paths cut on."""
+    w = Window.partitionBy(*by).orderBy(F.desc("s_int"), F.asc("vec_id"))
+    return F.row_number().over(w)
+
+
 def pq_adc_topk(
     embeddings: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
@@ -1321,9 +1385,8 @@ def pq_adc_topk(
         .filter(F.col("query_id") != F.col("vec_id"))
         .withColumn("s_int", _adc_score())
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("s_int"), F.asc("vec_id"))
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
+        scored.withColumn("rnk", _adc_rank())
         .filter(F.col("rnk") <= k)
         .select(
             "query_id",
@@ -1438,29 +1501,86 @@ def ivf_pq_topk_from_index(
     subspace width is each codebook row's ``size(c_emb)``, so the query
     path runs no probe job.
     """
-    probes = _probe_lists(queries, centroids, n_probe, "query_id", "cent_id")
+    short = (
+        _adc_candidates(centroids, index, codebooks, queries, n_probe)
+        .withColumn("rn", _adc_rank())
+        .filter(F.col("rn") <= refine_k)
+        .select("query_id", "vec_id")
+    )
+    return _exact_refine(short, queries, corpus, k)
+
+
+def _adc_candidates(
+    centroids: DataFrame,
+    index: DataFrame,
+    codebooks: DataFrame,
+    queries: DataFrame,
+    n_probe: int,
+    *cols,
+) -> DataFrame:
+    """The ``index`` rows of each query's ``n_probe`` probed lists,
+    self-matches dropped, each with its ADC score s_int against the
+    query's broadcast LUT. ``cols`` are extra :func:`_probe_lists`
+    columns carried along."""
+    probes = _probe_lists(queries, centroids, n_probe, "query_id", "cent_id", *cols)
     lut = _pq_lut(
         queries, codebooks.select("s", "code", "c_emb"), F.size(F.col("c_emb"))
     )
-    cand = (
+    return (
         index.join(F.broadcast(probes), "cent_id")
         .filter(F.col("query_id") != F.col("vec_id"))
         .join(F.broadcast(lut), "query_id")
         .withColumn("s_int", _adc_score())
     )
-    w_adc = Window.partitionBy("query_id").orderBy(F.desc("s_int"), F.asc("vec_id"))
-    short = (
-        cand.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= refine_k)
-        .select("query_id", "vec_id")
-    )
+
+
+def _exact_refine(
+    short: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    by: tuple[str, ...] = ("query_id",),
+) -> DataFrame:
+    """Exact cosine top-k per ``by`` over the ``short`` (``by``, vec_id)
+    shortlist: the tiny shortlist is broadcast into one scan of the raw
+    ``corpus`` vectors."""
     short_q = short.join(
         queries.select("query_id", "q_embedding"), "query_id"
     )
     refined = corpus.select("vec_id", "embedding").join(
         F.broadcast(short_q), "vec_id"
     )
-    return _cosine_topk(refined, k)
+    return _cosine_topk(refined, k, (*by, "vec_id"), by)
+
+
+def _ivf_pq_sweep_from_index(
+    centroids: DataFrame,
+    index: DataFrame,
+    codebooks: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    settings: DataFrame,
+    n_probe: int,
+    k: int = 5,
+) -> DataFrame:
+    """:func:`ivf_pq_topk_from_index` at every (n_probe, refine_k) row of
+    the ``settings`` table, from one scored candidate set: each query is
+    routed to ``n_probe`` lists (the sweep's largest) and its candidates
+    are ADC-scored once; each setting keeps the candidates its n_probe
+    covers, cuts them at its refine_k, and one exact refine ranks every
+    shortlist. Out: n_probe, refine_k, query_id, vec_id, sim, rnk."""
+    by = ("n_probe", "refine_k", "query_id")
+    cand = _adc_candidates(
+        centroids, index, codebooks, queries, n_probe,
+        F.col("rn").alias("probe_rank"),
+    )
+    short = (
+        _covered_by(cand, settings)
+        .withColumn("rn", _adc_rank(by))
+        .filter(F.col("rn") <= F.col("refine_k"))
+        .select(*by, "vec_id")
+    )
+    return _exact_refine(short, queries, corpus, k, by)
 
 
 # Bounded physical-partition count for the stored two-level index: the

@@ -14,7 +14,6 @@ rounding of every ratio.
 
 from __future__ import annotations
 
-import functools
 import os
 import re
 
@@ -540,8 +539,10 @@ def _exact_top5(e: DataFrame, q: DataFrame) -> DataFrame:
     )
 
 
-def _hits(approx: DataFrame, exact: DataFrame) -> DataFrame:
-    return approx.select("query_id", "vec_id").join(exact, ["query_id", "vec_id"])
+def _hits(approx: DataFrame, exact: DataFrame, *dials: str) -> DataFrame:
+    return approx.select(*dials, "query_id", "vec_id").join(
+        exact, ["query_id", "vec_id"]
+    )
 
 
 def _recall_at_5(
@@ -564,25 +565,35 @@ def _recall_at_5(
     )
 
 
+def _sweep_settings(spark: SparkSession, sweep: tuple, *dials: str) -> DataFrame:
+    """A recall sweep's settings table: one int column per dial, one row
+    per setting of ``sweep`` (ints for one dial, tuples for several)."""
+    rows = [s if isinstance(s, tuple) else (s,) for s in sweep]
+    return spark.createDataFrame(rows, ", ".join(f"{d} int" for d in dials))
+
+
 def _avg_recall_at_5(
-    q: DataFrame, exact: DataFrame, sweep: list[tuple[dict, DataFrame]]
+    q: DataFrame, exact: DataFrame, approx: DataFrame, settings: DataFrame
 ) -> DataFrame:
-    """One row per (dials, approx) of ``sweep``: the dials as int columns,
-    then recall@5 of ``approx`` averaged over the query set (6dp)."""
+    """One row per setting of ``settings``: its dials, then recall@5 of
+    the ``approx`` rows tagged with that setting averaged over the query
+    set (6dp); 0.0 for a setting with no hits."""
+    dials = settings.columns
     nq = q.agg(F.count("*").alias("n_q"))
-    parts = [
-        _hits(approx, exact)
-        .agg(F.count("*").alias("n_hits"))
+    hits = _hits(approx, exact, *dials).groupBy(*dials).agg(
+        F.count("*").alias("n_hits")
+    )
+    return (
+        settings.join(F.broadcast(hits), dials, "left")
         .crossJoin(F.broadcast(nq))
         .select(
-            *[F.lit(v).cast("int").alias(k) for k, v in dials.items()],
-            F.round(F.col("n_hits") / (F.col("n_q") * F.lit(5.0)), 6).alias(
-                "avg_recall"
-            ),
+            *dials,
+            F.round(
+                F.coalesce(F.col("n_hits"), F.lit(0)) / (F.col("n_q") * F.lit(5.0)),
+                6,
+            ).alias("avg_recall"),
         )
-        for dials, approx in sweep
-    ]
-    return functools.reduce(DataFrame.unionAll, parts)
+    )
 
 
 @query(
@@ -845,15 +856,17 @@ def ann_probe_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF recall as a function of probed lists (n_probe ∈ 1,2,4,8):
     average recall@5 vs brute force across the query set — the measured
     latency/recall dial an operator uses to size n_probe at corpus scale.
-    The index (centroids + assignments) is built once per probe setting by
-    the operator under test; candidates are bounded by the probed lists."""
+    The index (centroids + assignments) is built once, each query is
+    routed once to the sweep's largest n_probe, and one scored candidate
+    set serves every setting; candidates are bounded by the probed
+    lists."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = _ann_queries(e)
-    return _avg_recall_at_5(q, _exact_top5(e, q), [
-        ({"n_probe": p},
-         similarity.cosine_topk_ivf(e, q, k=5, n_centroids=16, n_probe=p))
-        for p in _PROBE_SWEEP
-    ])
+    settings = _sweep_settings(spark, _PROBE_SWEEP, "n_probe")
+    approx = similarity._ivf_probe_sweep(
+        e, q, settings, max(_PROBE_SWEEP), k=5, n_centroids=16
+    )
+    return _avg_recall_at_5(q, _exact_top5(e, q), approx, settings)
 
 
 # --- embedding-cosine near-duplicate pairs -----------------------------------
@@ -3272,15 +3285,14 @@ def ann_ivf_pq_probe_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = _ann_queries(e)
     exact = _exact_top5(e, q)
-    # the index is deterministic: build it once, sweep the query path
+    # one index, one ADC-scored candidate set: every setting filters it
     centroids, index, cb = similarity.build_ivf_pq_index(e, n_centroids=16)
-    return _avg_recall_at_5(q, exact, [
-        ({"n_probe": p, "refine_k": rk},
-         similarity.ivf_pq_topk_from_index(
-             centroids, index, cb, e, q, k=5, n_probe=p, refine_k=rk
-         ))
-        for p, rk in _IVF_PQ_SWEEP
-    ])
+    settings = _sweep_settings(spark, _IVF_PQ_SWEEP, "n_probe", "refine_k")
+    approx = similarity._ivf_pq_sweep_from_index(
+        centroids, index, cb, e, q, settings,
+        max(p for p, _ in _IVF_PQ_SWEEP), k=5,
+    )
+    return _avg_recall_at_5(q, exact, approx, settings)
 
 
 # --- build-once / query-many: the IVF-PQ index persisted to parquet ----------
@@ -5331,11 +5343,11 @@ def ann_two_level_probe_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = _ann_queries(e)
     k_cents = similarity.adaptive_centroids(e.count())
-    return _avg_recall_at_5(q, _exact_top5(e, q), [
-        ({"n_probe": p},
-         similarity.cosine_topk_ivf(e, q, k=5, n_centroids=k_cents, n_probe=p))
-        for p in _TWO_LEVEL_PROBE_SWEEP
-    ])
+    settings = _sweep_settings(spark, _TWO_LEVEL_PROBE_SWEEP, "n_probe")
+    approx = similarity._ivf_probe_sweep(
+        e, q, settings, max(_TWO_LEVEL_PROBE_SWEEP), k=5, n_centroids=k_cents
+    )
+    return _avg_recall_at_5(q, _exact_top5(e, q), approx, settings)
 
 
 # --- occupancy-split recall price (split vs exact SemDeDup, measured) --------

@@ -55,6 +55,8 @@ WHERE CASE t.nn
         ("pipe_ann_ivf_pq_topk", "embedding_dim"),
         ("pipe_ann_ivf_pq_probe_sweep", "embedding_dim"),
         ("pipe_incremental_semantic_dedup", "_centroid_rows"),
+        ("pipe_ann_probe_sweep", "_centroid_rows"),
+        ("pipe_ann_two_level_probe_sweep", "_centroid_rows"),
     ],
 )
 def test_build_runs_each_probe_once(spark, monkeypatch, entry, probe):

@@ -1354,6 +1354,7 @@ def test_package_derives_rp_weights_once():
                 "crossJoin(F.broadcast(centroids))": "_probe_lists",
                 "map_from_entries(": "_pq_lut",
                 'F.element_at(F.col("codes"), s + 1)': "_adc_score",
+                'orderBy(F.desc("s_int"), F.asc("vec_id"))': "_adc_rank",
                 'F.coalesce(F.col("n_better"), F.lit(0)) == 0': "_keep_decision",
                 "while (base_n << e) < n_vectors:": "_doubled_bits",
             },
@@ -1376,7 +1377,8 @@ def test_pipeline_writes_shared_fragments_once(module, owners):
     the ANN query set, the exact top-5 CTEs, the flat IVF seeding and the
     MinHash signature CTE; in operators/similarity.py the exact-cosine
     top-k ranker, the IVF probe router, the PQ lookup table, the ADC
-    fold, the SemDeDup keep decision and the doubling schedule; in
+    fold, the ADC shortlist order, the SemDeDup keep decision and the
+    doubling schedule; in
     operators/dedup.py the shingle dial, the max_df shingle self-join,
     the prefix ranking and the exact Jaccard verification. A pasted copy
     anywhere else fails."""
@@ -1399,6 +1401,32 @@ def test_pipeline_writes_shared_fragments_once(module, owners):
         ]
         lo, hi = spans[owner]
         assert len(lines) == 1 and lo <= lines[0] <= hi, (fragment, lines)
+
+
+def test_avg_recall_keeps_settings_without_hits(spark):
+    """A sweep row per setting, even when its approx rows hit nothing in
+    the exact top-5 or it has no approx rows at all: recall 0.0, not a
+    missing row."""
+    from iceberg_benchmark_java_spark.queries.pipeline import (
+        _avg_recall_at_5,
+        _sweep_settings,
+    )
+
+    q = spark.createDataFrame([(0,), (1,)], "query_id int")
+    exact = spark.createDataFrame(
+        [(0, v) for v in range(10, 15)] + [(1, v) for v in range(20, 25)],
+        "query_id int, vec_id int",
+    )
+    approx = spark.createDataFrame(
+        [(1, 0, 10), (1, 0, 11), (1, 1, 20), (2, 0, 99), (2, 1, 98)],
+        "n_probe int, query_id int, vec_id int",
+    )
+    settings = _sweep_settings(spark, (1, 2, 4), "n_probe")
+    got = {
+        r.n_probe: r.avg_recall
+        for r in _avg_recall_at_5(q, exact, approx, settings).collect()
+    }
+    assert got == {1: 0.3, 2: 0.0, 4: 0.0}
 
 
 def test_index_code_hash_ignores_docstrings_and_comments(tmp_path):

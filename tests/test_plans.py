@@ -454,6 +454,35 @@ def test_ivf_pq_serve_path_reads_stored_index(spark):
     assert "keys=[bucket" in build_plan
 
 
+@pytest.mark.parametrize(
+    "entry, sweep",
+    [
+        ("pipe_ann_probe_sweep", "_PROBE_SWEEP"),
+        ("pipe_ann_two_level_probe_sweep", "_TWO_LEVEL_PROBE_SWEEP"),
+        ("pipe_ann_ivf_pq_probe_sweep", "_IVF_PQ_SWEEP"),
+    ],
+)
+def test_recall_sweep_plan_size_ignores_sweep_length(spark, monkeypatch, entry, sweep):
+    """A recall sweep builds one index and scores one candidate set, so
+    its plan's Exchange, BroadcastExchange and MapInPandas counts are
+    the same with two settings as with the full sweep."""
+    import re
+
+    from iceberg_benchmark_java_spark.queries import pipeline
+
+    def counts():
+        plan = _plan(spark, entry)
+        return (
+            len(re.findall(r"\bExchange\b", plan)),
+            plan.count("BroadcastExchange"),
+            plan.count("MapInPandas"),
+        )
+
+    full = counts()
+    monkeypatch.setattr(pipeline, sweep, getattr(pipeline, sweep)[:2])
+    assert counts() == full
+
+
 def test_two_level_serve_path_reads_stored_index(spark):
     """Build-once/query-many contract for the TWO-LEVEL ANN route (the
     registered 0.80-recall production dial): the serve entry's plan must
