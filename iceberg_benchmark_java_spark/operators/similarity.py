@@ -767,8 +767,8 @@ def _ivf_probe_sweep(
         queries, centroids, assignments, n_probe, F.col("rn").alias("probe_rank")
     )
     return _cosine_topk(
-        cand, k, ("query_id", "vec_id", "probe_rank"), ("n_probe", "query_id"),
-        settings,
+        cand, k, ("query_id", "vec_id", "probe_rank"),
+        by=("n_probe", "query_id"), settings=settings,
     )
 
 
@@ -1550,7 +1550,7 @@ def _exact_refine(
     refined = corpus.select("vec_id", "embedding").join(
         F.broadcast(short_q), "vec_id"
     )
-    return _cosine_topk(refined, k, (*by, "vec_id"), by)
+    return _cosine_topk(refined, k, (*by, "vec_id"), by=by)
 
 
 def _ivf_pq_sweep_from_index(
