@@ -1,8 +1,8 @@
 """Dump .explain('formatted') for named registered queries to files.
 
 Usage: python tools/dump_plans.py <out_dir> <suffix> <query> [<query> ...]
-Writes <out_dir>/<query>_<suffix>.txt — the plan evidence
-(plans/rNN/<query>_{before,after}.txt). The ids that count up with the
+Writes <out_dir>/<query>_<suffix>.txt, for an ad hoc before/after diff of
+one plan (per-entry node counts are in artifacts/cost_shape.json). The ids that count up with the
 session's history are masked, so two dumps of the same plan are equal:
 expression ids (``#123`` → ``#N``), exchange plan ids (``plan_id=N``),
 lambda variables (``lambda x_848`` → ``lambda x_N``) and the RDD id and
