@@ -13,7 +13,7 @@ One build of each entry at sf0.001, inside its own job group, records:
 
 ``artifacts/cost_shape.json`` holds one line per entry, keys sorted, so a
 plan or job change shows as a one-line diff.
-tests/test_plans.py::test_cost_shape_golden runs the same sweep and fails
+tests/test_cost_shape.py::test_cost_shape_golden runs the same sweep and fails
 on any cell that differs; a change that moves a count regenerates the
 golden in the same commit.
 
@@ -119,36 +119,30 @@ def global_window_count(plan: str) -> int:
     return n
 
 
-def cost_shape(spark, build) -> dict[str, int]:
-    """The golden row of ``build(spark)``: its build-time jobs, node
-    counts and global windows."""
+def sweep(spark, queries) -> dict[str, dict[str, int]]:
+    """One golden row per entry of ``queries``, built at :data:`SF_DIR`
+    after the stored indexes are published. A build that raises names
+    its entry."""
     sc = spark.sparkContext
-    group = f"cost-shape-{uuid.uuid4()}"
-    sc.setJobGroup(group, "cost shape build", False)
-    try:
-        df = build(spark)
-    finally:
-        sc.setJobGroup("", "", False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return {
-        "build_jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
-        "global_windows": global_window_count(plan),
-        **node_counts(plan),
-    }
-
-
-def sweep(spark, queries, sf_dir: str = SF_DIR) -> dict[str, dict[str, int]]:
-    """One golden row per entry of ``queries``, after publishing the stored
-    indexes. A build that raises names its entry."""
     for name in STORED_INDEX_ENTRIES:
-        queries[name](spark, sf_dir)
+        queries[name](spark, SF_DIR)
     rows = {}
     for name in sorted(queries):
+        group = f"cost-shape-{uuid.uuid4()}"
+        sc.setJobGroup(group, f"cost shape of {name}", False)
         try:
-            rows[name] = cost_shape(spark, lambda s: queries[name](s, sf_dir))
+            df = queries[name](spark, SF_DIR)
         except Exception as exc:
             exc.add_note(f"while building registry entry {name}")
             raise
+        finally:
+            sc.setJobGroup("", "", False)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        rows[name] = {
+            "build_jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+            "global_windows": global_window_count(plan),
+            **node_counts(plan),
+        }
     return rows
 
 
