@@ -4,12 +4,16 @@ These tests pin the properties that matter at 100 TB: filters reach the
 parquet scan, projections prune columns, dimension joins broadcast, top-k
 avoids global sorts, and the hot path contains no Python row UDFs.
 tests/test_cost_shape.py pins every registered entry's node counts and
-build-time jobs to artifacts/cost_shape.json; the tests here check what
-a count cannot: partition keys, exchanged columns, pushed filters, and
-operators built outside the registry.
+build-time jobs to artifacts/cost_shape.json. The tests here check what
+a count cannot (partition keys, exchanged columns, pushed filters,
+operators built outside the registry) and, at the end, bound single
+entries' golden rows by what those entries are for.
 """
 
 from __future__ import annotations
+
+import functools
+import json
 
 import pytest
 
@@ -961,3 +965,267 @@ def test_dup_span_removal_no_extra_shuffle(spark):
     for m in re.finditer(r"Exchange hashpartitioning\((\w+)#", plan):
         keys.add(m.group(1))
     assert keys <= {"gram", "doc_id"}, keys
+
+
+# Per-entry scale properties, held on the entry's row of the committed
+# golden. tests/test_cost_shape.py holds every live plan to its row
+# exactly; these hold each row to what its entry is for, so regenerating
+# the golden cannot quietly accept a lost broadcast, a new shuffle or a
+# window. A node count of a line head, unlike a substring of the plan,
+# cannot miss a node by its printed name ("WindowExec" never appears).
+WINDOWS = ("Window", "WindowGroupLimit")
+PYTHON_EVAL = ("ArrowEvalPython", "BatchEvalPython")
+EXCHANGES = ("Exchange", "BroadcastExchange", "ReusedExchange")
+JOINS = (
+    "BroadcastHashJoin",
+    "BroadcastNestedLoopJoin",
+    "CartesianProduct",
+    "ShuffledHashJoin",
+    "SortMergeJoin",
+)
+BROADCAST_JOINS = ("BroadcastHashJoin", "BroadcastNestedLoopJoin")
+
+
+@functools.cache
+def _golden() -> dict[str, dict[str, int]]:
+    with open(cost_shape.GOLDEN) as fh:
+        return json.load(fh)
+
+
+def _count(name: str, *columns: str) -> int:
+    """The sum of ``columns`` in entry ``name``'s golden row."""
+    row = _golden()[name]
+    return sum(row[c] for c in columns)
+
+
+def test_q05_broadcasts_dimensions():
+    """nation/region/supplier joins broadcast: no fact shuffle for a dim join."""
+    assert _count("tpch_q05_local_supplier_volume", "BroadcastHashJoin") >= 2
+
+
+def test_q03_topk_avoids_global_sort():
+    """orderBy+limit plans TakeOrderedAndProject, not a global Sort."""
+    assert _count("tpch_q03_shipping_priority", "TakeOrderedAndProject")
+
+
+def test_quartiles_scale_has_no_window():
+    """The scale-safe NTILE twin has no window (a global NTILE
+    single-partitions the sort) and broadcasts the 1-row cutoffs."""
+    assert not _count("win_quartiles_scale", *WINDOWS)
+    assert _count("win_quartiles_scale", *BROADCAST_JOINS)
+
+
+@pytest.mark.parametrize(
+    "name,min_bhj",
+    [
+        ("tpch_q02_min_cost_supplier", 2),  # region⋈nation dim + eu_sup
+        ("tpch_q08_market_share", 3),  # part, supplier, both nations
+        ("tpch_q09_product_profit", 3),  # part, supplier, nation
+        ("tpch_q17_small_qty_revenue", 1),  # filtered part dim
+    ],
+)
+def test_tpch2_broadcasts_dimensions(name, min_bhj):
+    """The TPC-H completion queries broadcast their dimension sides."""
+    assert _count(name, "BroadcastHashJoin") >= min_bhj
+
+
+def test_q22_scalar_subquery_broadcast_no_cartesian():
+    """The scalar-avg threshold join broadcasts its 1-row side."""
+    assert not _count("tpch_q22_sales_opportunity", "CartesianProduct")
+
+
+def test_ivf_assignment_broadcasts_centroids():
+    """IVF corpus assignment is a map-side pass over broadcast centroids."""
+    assert _count("pipe_ann_ivf_topk", *BROADCAST_JOINS)
+
+
+def test_decontamination_broadcasts_eval_side():
+    """The tiny eval shingle set broadcasts against the train explode."""
+    assert _count("pipe_decontamination", "BroadcastHashJoin")
+    assert not _count("pipe_decontamination", "CartesianProduct")
+
+
+def test_mixture_apply_broadcasts_rates():
+    """The per-stratum rate table broadcasts against the corpus scan."""
+    assert _count("pipe_mixture_apply", "BroadcastHashJoin")
+
+
+def test_unigram_logprob_broadcasts_vocab():
+    """The vocabulary frequency table broadcasts: no term-keyed corpus shuffle."""
+    assert _count("pipe_unigram_logprob", "BroadcastHashJoin")
+
+
+def test_doc_chunks_no_shuffle():
+    """Chunking is narrow (sequence, slice, explode): scan-bound at 100 TB."""
+    assert not _count("pipe_doc_chunks", *EXCHANGES, *PYTHON_EVAL)
+
+
+def test_vocab_coverage_scale_no_window():
+    """Top-max(k) by TakeOrderedAndProject; rank and running sum from a
+    broadcast triangular self-join, never a whole-vocabulary window."""
+    assert not _count("pipe_vocab_coverage", *WINDOWS)
+    assert _count("pipe_vocab_coverage", "TakeOrderedAndProject")
+
+
+def test_quality_filter_zero_shuffle():
+    """The composite rule filter is one narrow projection of per-row
+    array expressions."""
+    assert not _count("pipe_quality_filter_decision", *EXCHANGES, *PYTHON_EVAL)
+
+
+def test_containment_pairs_equijoin_only():
+    """|A∩B| comes from the shingle equi-join, not pair enumeration."""
+    assert not _count(
+        "pipe_containment_pairs", "CartesianProduct", "BroadcastNestedLoopJoin"
+    )
+
+
+def test_pq_adc_partitioned_windows_and_no_cartesian():
+    """The ADC scan is a broadcast-LUT pass; every window is per query."""
+    assert not _count("pipe_ann_pq_recall", "CartesianProduct", "global_windows")
+
+
+def test_hard_negatives_partitioned_topk():
+    """Per-query window only: no global sort, no unpartitioned window."""
+    assert not _count("pipe_hard_negatives", "global_windows")
+
+
+def test_bigram_logprob_keyed_joins_only():
+    """The score join is keyed and no window is unpartitioned."""
+    assert not _count("pipe_bigram_logprob", "CartesianProduct", "global_windows")
+
+
+def test_normalized_dedup_keyed_aggs_only():
+    """Digest projection and source-keyed aggregation only."""
+    assert not _count(
+        "pipe_normalized_dedup", *WINDOWS, *PYTHON_EVAL, "CartesianProduct"
+    )
+
+
+def test_doc_entropy_keyed_aggs_only():
+    """Two natural-key aggregations: no window, no Python eval, no join."""
+    assert not _count("pipe_doc_entropy", *WINDOWS, *PYTHON_EVAL, *JOINS)
+
+
+def test_token_pmi_topk_no_global_sort():
+    """The global top-20 is TakeOrderedAndProject with no analytic window."""
+    assert _count("pipe_token_pmi", "TakeOrderedAndProject")
+    assert not _count("pipe_token_pmi", "Window", "CartesianProduct")
+
+
+def test_bloom_decontamination_broadcasts_bitmap_and_eval():
+    """Both bitmap probes and the exact eval semi-join broadcast, and the
+    bit probes are column filters, not a Python UDF."""
+    assert _count("pipe_bloom_decontamination", "BroadcastHashJoin") >= 3
+    assert not _count(
+        "pipe_bloom_decontamination", "CartesianProduct", *PYTHON_EVAL
+    )
+
+
+def test_boilerplate_removal_broadcasts_boiler_set():
+    """The heavy-hitter chunk set broadcasts back as a left-anti join."""
+    assert _count("pipe_boilerplate_removal", "BroadcastHashJoin")
+    assert not _count("pipe_boilerplate_removal", "CartesianProduct")
+
+
+def test_token_kl_drift_broadcasts_totals():
+    """Per-source totals and the 1-row corpus total broadcast."""
+    assert _count("pipe_token_kl_drift", "BroadcastHashJoin")
+    assert not _count("pipe_token_kl_drift", "CartesianProduct")
+
+
+def test_bm25_topk_plan():
+    """Per-partition heaps, broadcast idf and (N, avgdl), no global window."""
+    assert _count("pipe_bm25_topk", "TakeOrderedAndProject")
+    assert _count("pipe_bm25_topk", *BROADCAST_JOINS)
+    assert not _count("pipe_bm25_topk", "CartesianProduct", "global_windows")
+
+
+def test_hll_distinct_plan_no_window():
+    """HLL registers are a combinable max-per-register aggregation."""
+    assert not _count("pipe_hll_distinct", *WINDOWS, "CartesianProduct")
+
+
+def test_prefix_filter_pairs_plan():
+    """Candidates come from an equi-join; both windows are per doc."""
+    assert not _count(
+        "pipe_prefix_filter_pairs",
+        "CartesianProduct",
+        "BroadcastNestedLoopJoin",
+        "global_windows",
+    )
+
+
+def test_cms_sketch_plan():
+    """A combinable (r, col) count; the probe broadcasts the counters."""
+    assert not _count("pipe_cms_heavy_hitters", *WINDOWS, "CartesianProduct")
+    assert _count("pipe_cms_heavy_hitters", "BroadcastHashJoin")
+
+
+def test_typo_pairs_plan():
+    """FastSS candidates are a variant-keyed equi-join over the vocabulary."""
+    assert not _count("pipe_typo_pairs", "CartesianProduct", "BroadcastNestedLoopJoin")
+
+
+def test_source_overlap_broadcasts_sizes():
+    """Per-source set sizes broadcast onto the pair rows."""
+    assert _count("pipe_source_overlap", "BroadcastHashJoin")
+    assert not _count("pipe_source_overlap", "CartesianProduct")
+
+
+def test_dsir_broadcasts_bucket_tables():
+    """The 512-bucket log-ratio table broadcasts against the bigram explode."""
+    assert _count("pipe_dsir_importance", "BroadcastHashJoin")
+    assert not _count("pipe_dsir_importance", "CartesianProduct", *WINDOWS)
+
+
+def test_mad_outliers_broadcasts_stats():
+    """Per-type median/MAD stats broadcast back to the hourly table."""
+    assert _count("pipe_events_mad_outliers", "BroadcastHashJoin")
+    assert not _count("pipe_events_mad_outliers", "CartesianProduct", *WINDOWS)
+
+
+def test_quality_psi_bounded_aggregates():
+    """Both halves aggregate into <=16 bins; no window, no cartesian."""
+    assert not _count("pipe_quality_psi", *WINDOWS, "CartesianProduct")
+
+
+def test_user_erasure_broadcasts_request_list():
+    """The deletion-request list broadcasts against the events scan."""
+    assert _count("pipe_user_erasure_audit", "BroadcastHashJoin")
+    assert not _count("pipe_user_erasure_audit", "CartesianProduct")
+
+
+def test_dedup_method_agreement_no_cartesian():
+    """Flag sets join on doc_id; the method-pair inequality rides the join."""
+    assert not _count(
+        "pipe_dedup_method_agreement", "CartesianProduct", "BroadcastNestedLoopJoin"
+    )
+
+
+def test_negative_sampling_no_window():
+    """The ^0.75 table is a top-64 plus a broadcast triangular self-join,
+    never a global vocabulary window."""
+    assert not _count("pipe_negative_sampling_table", *WINDOWS, "CartesianProduct")
+    assert _count("pipe_negative_sampling_table", "TakeOrderedAndProject")
+
+
+def test_corpus_datacard_single_pass():
+    """The data card is one combinable global aggregate over the scan."""
+    assert not _count("pipe_corpus_datacard", *WINDOWS, *JOINS)
+
+
+def test_threshold_sweep_single_candidate_pass():
+    """One banded candidate join; the 4 thresholds ride a tiny broadcast."""
+    assert not _count("pipe_near_dup_threshold_sweep", "CartesianProduct")
+    assert _count("pipe_near_dup_threshold_sweep", "Generate") <= 2
+
+
+def test_join_size_estimate_topk_no_window():
+    """One key aggregate plus TakeOrderedAndProject; no window."""
+    assert _count("pipe_join_size_estimate", "TakeOrderedAndProject")
+    assert not _count("pipe_join_size_estimate", *WINDOWS)
+
+
+def test_mergeable_stats_no_window_no_cartesian():
+    assert not _count("pipe_mergeable_stats", *WINDOWS, "CartesianProduct")
